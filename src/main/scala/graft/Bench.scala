@@ -12,9 +12,11 @@ import org.apache.spark.sql.SparkSession
   *   regression in the headline number;
   * - "total" is the sum of medians;
   * - the JSON also carries a shared-query subtotal against the newest
-  *   BENCH_r*.json in the repo ("baseline" block), so round-over-round
-  *   comparison is computed at measurement time on exactly the shared
-  *   set rather than eyeballed across files.
+  *   BENCH_r*.json in the repo taken at the same `cpus` and `sf`
+  *   ("baseline" block, null with the reason on a detail line when no
+  *   artifact matches), so round-over-round comparison is computed at
+  *   measurement time on exactly the shared set rather than eyeballed
+  *   across files.
   *
   * One-time materializations (the user-partitioned collection, the
   * shared dedup label table) are built by whichever run first touches
@@ -162,43 +164,60 @@ object Bench {
       .map { case (k, (_, lo, hi)) => f""""$k":[$lo%.3f,$hi%.3f]""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2._1).sum
-    // shared-set subtotal vs the newest committed bench artifact;
-    // when that artifact's "parsed" is null (truncated tail, rounds
-    // 5-6), fall back to scraping "name":seconds pairs from its raw
-    // "tail" string so the regression detector still sees something
-    val baseline = try {
-      val repo = new java.io.File(".")
-      val benchFiles = repo.listFiles()
-        .filter(f => f.getName.matches("BENCH_r\\d+\\.json")).sortBy(_.getName)
-      if (benchFiles.isEmpty) "null"
-      else {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = mapper.readTree(benchFiles.last)
-        val prevNode = root.path("parsed").path("queries")
-        val prev: Map[String, Double] =
-          if (prevNode.isObject) {
+    // shared-set subtotal vs the newest committed bench artifact taken
+    // at this run's core count and scale factor
+    val (baseline, baselineReason) = try {
+      baselineArtifact(new java.io.File("."), cpus, sfDir) match {
+        case Left(why) => ("null", why)
+        case Right(f) =>
+          val prevNode = new com.fasterxml.jackson.databind.ObjectMapper()
+            .readTree(f).path("parsed").path("queries")
+          if (!prevNode.isObject) ("null", s"${f.getName} has no parsed queries")
+          else {
             import scala.jdk.CollectionConverters._
-            prevNode.fieldNames().asScala
+            val prev = prevNode.fieldNames().asScala
               .map(k => k -> prevNode.get(k).asDouble()).toMap
-          } else {
-            val tail = root.path("tail").asText("")
-            """"([A-Za-z0-9_]+)":([0-9]+\.[0-9]+)""".r
-              .findAllMatchIn(tail)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
+            val shared = results.filter { case (k, _) => prev.contains(k) }
+            val prevSub = shared.map { case (k, _) => prev(k) }.sum
+            val nowSub = shared.map(_._2._1).sum
+            (f"""{"file":"${f.getName}","shared_n":${shared.size},""" +
+              f""""prev_subtotal":$prevSub%.3f,"now_subtotal":$nowSub%.3f}""",
+              s"compared with ${f.getName}")
           }
-        val shared = results.filter { case (k, _) => prev.contains(k) }
-        val prevSub = shared.map { case (k, _) => prev(k) }.sum
-        val nowSub = shared.map(_._2._1).sum
-        f"""{"file":"${benchFiles.last.getName}","shared_n":${shared.size},""" +
-          f""""prev_subtotal":$prevSub%.3f,"now_subtotal":$nowSub%.3f}"""
       }
-    } catch { case _: Throwable => "null" }
+    } catch { case e: Exception => ("null", s"baseline artifacts unreadable: $e") }
     val stamps = startedAt
       .map { case (k, t) => s""""$k":$t""" }.mkString("{", ",", "}")
     println(s"""{"detail":"timestamps","unit":"epoch_sec","started":$stamps}""")
     println(s"""{"detail":"spread","runs":$runs,"spread":$spread}""")
+    val reason = baselineReason.replace('"', '\'').replace('\\', '/')
+    println(s"""{"detail":"baseline","reason":"$reason"}""")
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$runs,""" +
       s""""queries":$qs,"baseline":$baseline,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The newest `BENCH_r*.json` in `dir` taken at `cpus` cores and the
+    * scale factor of `sfDir`, or why there is none. Against another
+    * core count or scale factor a subtotal measures the host, not the
+    * code.
+    */
+  private[graft] def baselineArtifact(dir: java.io.File, cpus: String,
+      sfDir: String): Either[String, java.io.File] = {
+    val sf = """sf([0-9.]+)/?$""".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val artifact = """BENCH_r(\d+)(.*)\.json""".r
+    dir.listFiles().toSeq
+      .flatMap(f => f.getName match {
+        case artifact(n, rest) => Some(((n.toInt, rest), f))
+        case _                 => None
+      })
+      .sortBy(_._1).map(_._2)
+      .filter { f =>
+        val root = mapper.readTree(f)
+        root.path("cpus").asText() == cpus && sf.contains(root.path("sf").asDouble(-1))
+      }
+      .lastOption
+      .toRight(s"no BENCH_r*.json artifact has cpus=$cpus and sf=${sf.getOrElse(sfDir)}")
   }
 }

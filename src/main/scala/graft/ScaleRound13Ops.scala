@@ -50,7 +50,7 @@ object ScaleRound13Ops {
       val nTiles = (nq + tile - 1) / tile
       val t0 = System.nanoTime()
       val rows = graft.ann.Ann.denseKernelTopK(
-        corpus, q, 5, graft.ann.Ann.cosineRounded6Kernel, tile = tile).count()
+        corpus, q, 5, graft.ann.Ann.Cosine, tile = tile).count()
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[scale13] tiled-kernel nq=$nq tiles=$nTiles rows=$rows: " +
         f"$secs%.2f s, peak heap ${peakHeapMb()} MB")

@@ -57,7 +57,7 @@ object ScaleRound14Ops {
       scanCount.reset()
       val t0 = System.nanoTime()
       val rows = graft.ann.Ann.denseKernelTopK(
-        corpus, vecs(nq), 5, graft.ann.Ann.cosineRounded6Kernel, tile = tile).count()
+        corpus, vecs(nq), 5, graft.ann.Ann.Cosine, tile = tile).count()
       val secs = (System.nanoTime() - t0) / 1e9
       val scans = scanCount.value / nCorpusParts.toDouble
       println(f"[scale14] blocked-kernel nq=$nq tiles=$nTiles rows=$rows: " +

@@ -90,11 +90,11 @@ object ScaleRound15Ops {
       val nq = nqBase * m
       timed("fast-path(broadcast)", nq) {
         graft.ann.Ann.denseKernelTopK(corpus, vecs(nq), 5,
-          graft.ann.Ann.cosineRounded6Kernel).count()
+          graft.ann.Ann.Cosine).count()
       }
       timed("blocked(forced)", nq) {
         graft.ann.Ann.blockedTop(corpus, vecs(nq), 5,
-          graft.ann.Ann.cosineRounded6Kernel)
+          graft.ann.Ann.Cosine)
           .select(col("qid"), explode(col("top"))).count()
       }
     }
@@ -107,12 +107,12 @@ object ScaleRound15Ops {
     val cap = graft.ann.Ann.fastPathCap(dim, graft.ann.Ann.defaultKernelTile)
     timed(s"dispatched(${if (nqBig <= cap) "fast-path" else "blocked"})", nqBig) {
       graft.ann.Ann.denseKernelTopK(corpus, vecs(nqBig), 5,
-        graft.ann.Ann.cosineRounded6Kernel).count()
+        graft.ann.Ann.Cosine).count()
     }
     val nqOver = cap.toLong + nqBase
     timed(s"dispatched(${if (nqOver <= cap) "fast-path" else "blocked"})", nqOver) {
       graft.ann.Ann.denseKernelTopK(corpus, vecs(nqOver), 5,
-        graft.ann.Ann.cosineRounded6Kernel).count()
+        graft.ann.Ann.Cosine).count()
     }
 
     // 3: nSlots sensitivity at the multi-tile size — replication
@@ -121,7 +121,7 @@ object ScaleRound15Ops {
       val qBytes = nqBig * dim * 8 * slots / (1 << 20)
       val s2 = timed(f"blocked nSlots=$slots (query repl ~$qBytes MB)", nqBig) {
         graft.ann.Ann.blockedTop(corpus, vecs(nqBig), 5,
-          graft.ann.Ann.cosineRounded6Kernel, nSlotsOverride = Some(slots))
+          graft.ann.Ann.Cosine, nSlotsOverride = Some(slots))
           .select(col("qid"), explode(col("top"))).count()
       }
       val _ = s2

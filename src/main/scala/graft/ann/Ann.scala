@@ -1,8 +1,10 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import graft.functions.VectorFunctions.{md5Long, score}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -72,16 +74,16 @@ object Ann {
     * partition per query.
     */
   def bruteForceTopKDense(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    denseKernelTopK(emb, queries, k, Ann.cosineRounded6)
+    denseKernelTopK(emb, queries, k, Cosine)
 
-  /** [[bruteForceTopKDense]] without the final (qid, rnk) global sort
-    * — for callers that consume the edge LIST (joins/aggregates where
-    * row order is irrelevant): the orderBy cost a range exchange plus
-    * its sampling pass before ann_knn_graph's checkpoint (r17).
+  /** [[bruteForceTopKDense]] without the final (qid, rnk) order — for
+    * callers that consume the edge LIST (joins/aggregates where row
+    * order is irrelevant): the partials merge hash-partitioned on qid
+    * across all cores instead of on one partition.
     */
   def bruteForceTopKDenseUnordered(emb: DataFrame, queries: DataFrame,
       k: Int): DataFrame =
-    denseKernelTopK(emb, queries, k, Ann.cosineRounded6, ordered = false)
+    denseKernelTopK(emb, queries, k, Cosine, ordered = false)
 
   /** k smallest ROUNDED-6dp euclidean distances per vector against the
     * whole table (self excluded) — the two-NN intrinsic-dimension
@@ -92,23 +94,24 @@ object Ann {
   def nearestDistancesDense(emb: DataFrame, k: Int): DataFrame =
     denseKernelTopK(emb,
       emb.select(col("vec_id").as("qid"), col("embedding").as("qv")), k,
-      Ann.negEuclidRounded6)
+      NegEuclid)
       .select(col("qid").as("vec_id"), col("rnk"), (-col("score")).as("dist"))
 
   /** Spark `round(x, 6)` twin (BigDecimal.valueOf, HALF_UP); `+ 0.0`
-    * normalizes −0.0 the way the Column form does.
+    * normalizes −0.0 the way the Column form does. Monotone, and moves
+    * a value by at most 5e-7.
     */
   private def round6(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
 
-  /** Exact CosineSimilarity-expression arithmetic: left-assoc i=0..n−1
-    * over double-promoted elements, then Spark round to 6dp.
-    */
   /** Test access to the exact kernel score fn (tiled-equality spec). */
   private[graft] def cosineRounded6Kernel: (Array[Double], Array[Double]) => Double =
     cosineRounded6
 
+  /** Exact CosineSimilarity-expression arithmetic: left-assoc i=0..n−1
+    * over double-promoted elements, then Spark round to 6dp.
+    */
   private val cosineRounded6: (Array[Double], Array[Double]) => Double = (v, qv) => {
     val n = math.min(v.length, qv.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -116,17 +119,156 @@ object Ann {
       val x = v(i); val y = qv(i)
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
-    round6(if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb))
+    round6(cosOf(dot, na, nb))
+  }
+
+  private def cosOf(dot: Double, na: Double, nb: Double): Double =
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+
+  /** A query block as the kernels hold it: ids, vectors and each
+    * vector's squared norm, computed once per block instead of once
+    * per scored pair.
+    */
+  private[graft] final class QueryBlock(val ids: Array[Long], val vecs: Array[Array[Double]])
+      extends Serializable {
+    val norms: Array[Double] = vecs.map { q =>
+      var s = 0.0; var i = 0
+      while (i < q.length) { s += q(i) * q(i); i += 1 }
+      s
+    }
+  }
+
+  /** The score a dense kernel ranks by. `raw` scores one corpus row
+    * against a whole query block, four queries per pass over the row
+    * where their lengths match it; `round` turns a raw score into the
+    * exact rounded score. Every accumulator sums left to right over
+    * the same elements as the scalar form ([[cosineRounded6]]), so
+    * splitting the norms out and interleaving queries changes no bit.
+    * `round` is monotone and moves a value by at most 5e-7.
+    */
+  private[graft] sealed abstract class Metric extends Serializable {
+    def raw(v: Array[Double], off: Int, n: Int, qb: QueryBlock, out: Array[Double]): Unit
+    def round(raw: Double): Double
+  }
+
+  /** round6(cosine), the `score()` column. */
+  private[graft] case object Cosine extends Metric {
+    def raw(v: Array[Double], off: Int, n: Int, qb: QueryBlock, out: Array[Double]): Unit = {
+      var vn = 0.0; var i = 0
+      while (i < n) { val x = v(off + i); vn += x * x; i += 1 }
+      val qs = qb.vecs; val qn = qb.norms; val nq = qs.length
+      var qi = 0
+      while (qi < nq) {
+        if (qi + 3 < nq && qs(qi).length == n && qs(qi + 1).length == n &&
+            qs(qi + 2).length == n && qs(qi + 3).length == n) {
+          val (a, b, c, d) = (qs(qi), qs(qi + 1), qs(qi + 2), qs(qi + 3))
+          var d0 = 0.0; var d1 = 0.0; var d2 = 0.0; var d3 = 0.0; var j = 0
+          while (j < n) {
+            val x = v(off + j)
+            d0 += x * a(j); d1 += x * b(j); d2 += x * c(j); d3 += x * d(j); j += 1
+          }
+          out(qi) = cosOf(d0, vn, qn(qi)); out(qi + 1) = cosOf(d1, vn, qn(qi + 1))
+          out(qi + 2) = cosOf(d2, vn, qn(qi + 2)); out(qi + 3) = cosOf(d3, vn, qn(qi + 3))
+          qi += 4
+        } else {
+          // ragged pair: both norms run over the shorter length, as in
+          // the scalar form
+          val q = qs(qi); val m = math.min(n, q.length)
+          var dot = 0.0; var na = 0.0; var nb = 0.0; var j = 0
+          while (j < m) {
+            val x = v(off + j); val y = q(j)
+            dot += x * y; na += x * x; nb += y * y; j += 1
+          }
+          out(qi) = cosOf(dot, na, nb)
+          qi += 1
+        }
+      }
+    }
+    def round(raw: Double): Double = round6(raw)
   }
 
   /** −round(√Σ(xᵢ−yᵢ)², 6): higher = nearer, so the shared (score
-    * desc, id asc) top-k comparator ranks by ascending distance.
+    * desc, id asc) top-k comparator ranks by ascending distance. The
+    * raw score is −√Σ(xᵢ−yᵢ)².
     */
-  private val negEuclidRounded6: (Array[Double], Array[Double]) => Double = (v, qv) => {
-    val n = math.min(v.length, qv.length)
-    var s = 0.0; var i = 0
-    while (i < n) { val d = v(i) - qv(i); s += d * d; i += 1 }
-    -round6(math.sqrt(s))
+  private[graft] case object NegEuclid extends Metric {
+    def raw(v: Array[Double], off: Int, n: Int, qb: QueryBlock, out: Array[Double]): Unit = {
+      val qs = qb.vecs; val nq = qs.length
+      var qi = 0
+      while (qi < nq) {
+        if (qi + 3 < nq && qs(qi).length == n && qs(qi + 1).length == n &&
+            qs(qi + 2).length == n && qs(qi + 3).length == n) {
+          val (a, b, c, d) = (qs(qi), qs(qi + 1), qs(qi + 2), qs(qi + 3))
+          var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0; var j = 0
+          while (j < n) {
+            val x = v(off + j)
+            val e0 = x - a(j); val e1 = x - b(j); val e2 = x - c(j); val e3 = x - d(j)
+            s0 += e0 * e0; s1 += e1 * e1; s2 += e2 * e2; s3 += e3 * e3; j += 1
+          }
+          out(qi) = -math.sqrt(s0); out(qi + 1) = -math.sqrt(s1)
+          out(qi + 2) = -math.sqrt(s2); out(qi + 3) = -math.sqrt(s3)
+          qi += 4
+        } else {
+          val q = qs(qi); val m = math.min(n, q.length)
+          var s = 0.0; var j = 0
+          while (j < m) { val e = v(off + j) - q(j); s += e * e; j += 1 }
+          out(qi) = -math.sqrt(s)
+          qi += 1
+        }
+      }
+    }
+    def round(raw: Double): Double = -round6(-raw)
+  }
+
+  /** One kernel task's state for a query block: a bounded (score desc,
+    * id asc) top-k buffer per query. [[offer]] scores a corpus row
+    * against every query and rounds only the raw scores that can
+    * still reach a buffer: a raw score below the k-th rounded score
+    * − 1e-6 rounds to at most k-th − 5e-7, so it can neither beat nor
+    * tie the k-th entry and skipping it changes no row.
+    */
+  private final class KernelState(qb: QueryBlock, k: Int, metric: Metric,
+      excludeSelf: Boolean) {
+    private val nq = qb.ids.length
+    private val bufS = Array.fill(nq)(new Array[Double](k))
+    private val bufI = Array.fill(nq)(new Array[Long](k))
+    private val bufN = new Array[Int](nq)
+    private val raw = new Array[Double](nq)
+
+    private def floor(qi: Int): Double =
+      if (bufN(qi) < k) Double.NegativeInfinity
+      else if (k == 0) Double.PositiveInfinity
+      else bufS(qi)(k - 1) - 1e-6
+
+    private def insert(qi: Int, s: Double, id: Long): Unit = {
+      val n = bufN(qi); val ss = bufS(qi); val ii = bufI(qi)
+      var pos = 0
+      while (pos < n && (ss(pos) > s || (ss(pos) == s && ii(pos) < id))) pos += 1
+      if (pos >= k) return
+      val m = math.min(n + 1, k)
+      var j = m - 1
+      while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
+      ss(pos) = s; ii(pos) = id; bufN(qi) = m
+    }
+
+    /** Score corpus row `vid` = `v(off until off + n)`. */
+    def offer(vid: Long, v: Array[Double], off: Int, n: Int): Unit = {
+      metric.raw(v, off, n, qb, raw)
+      var qi = 0
+      while (qi < nq) {
+        val r = raw(qi)
+        // `!(r < floor)` keeps NaN on the rounding path, which rejects it
+        if (!(r < floor(qi)) && !(excludeSelf && qb.ids(qi) == vid))
+          insert(qi, metric.round(r), vid)
+        qi += 1
+      }
+    }
+
+    /** The partial candidates: (qid, score, vec_id). */
+    def rows: Iterator[(Long, Double, Long)] =
+      (0 until nq).iterator.flatMap { qi =>
+        (0 until bufN(qi)).iterator.map(j => (qb.ids(qi), bufS(qi)(j), bufI(qi)(j)))
+      }
   }
 
   /** Queries per kernel tile. The query side is collected and
@@ -142,7 +284,7 @@ object Ann {
       // lazy + explicit validation: a bad env value must surface as
       // this message, not as an opaque ExceptionInInitializerError
       // from the enclosing object's static init; tile <= 0 would
-      // corrupt the head(tile+1) probe and the per-tile hash math
+      // corrupt the fast-path bound and the per-tile hash math
       case Some(v) =>
         val t = try v.toInt catch {
           case _: NumberFormatException => throw new IllegalArgumentException(
@@ -187,123 +329,126 @@ object Ann {
     out
   }
 
-  /** Exact max vector length over a column — the ONE dim probe the
-    * kernels share. A distributed agg rather than head(1): the r15
-    * ADVICE case (a dim-0 first row on a batch whose later rows are
-    * wide) would make a head-row probe understate the dim and
-    * reinstate the unbounded driver collect the cap exists to stop.
-    */
-  private def maxDim(df: DataFrame, c: String): Int =
-    df.filter(col(c).isNotNull)
-      .agg(coalesce(max(size(col(c))), lit(0))).head.getInt(0)
+  /** Non-null (id, vector) rows of `df` as (_1 bigint, _2 the stored array). */
+  private def vectorRows(df: DataFrame, id: String, vec: String): DataFrame =
+    df.filter(col(vec).isNotNull).select(col(id).cast("long").as("_1"), col(vec).as("_2"))
 
+  /** [[vectorRows]] decoded to primitive doubles on the executors.
+    * Float vectors decode with one copy and widen in a loop — bit-equal
+    * to a Catalyst cast to array<double>, which would box every element.
+    */
+  private def asDoubles(rows: DataFrame): Dataset[(Long, Array[Double])] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    if (storesFloats(rows)) rows.as[(Long, Array[Float])].map { case (id, f) => (id, widen(f)) }
+    else rows.select(col("_1"), col("_2").cast("array<double>").as("_2"))
+      .as[(Long, Array[Double])]
+  }
+
+  /** [[vectorRows]] collected to the driver, moving the stored vectors
+    * and widening them there. No job when the frame is local.
+    */
+  private def collectDoubles(rows: DataFrame): Array[(Long, Array[Double])] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    if (storesFloats(rows)) rows.as[(Long, Array[Float])].collect().map { case (id, f) => (id, widen(f)) }
+    else rows.select(col("_1"), col("_2").cast("array<double>").as("_2"))
+      .as[(Long, Array[Double])].collect()
+  }
+
+  private def storesFloats(rows: DataFrame): Boolean = rows.schema("_2").dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
+
+  private def widen(f: Array[Float]): Array[Double] = {
+    val d = new Array[Double](f.length); var i = 0
+    while (i < f.length) { d(i) = f(i); i += 1 }
+    d
+  }
+
+  /** (non-null query count, exact max dim) of a query frame in ONE
+    * job — what both the fast-path bound and the blocked kernel's
+    * packing caps need. Per-partition folds collected to the driver
+    * (an agg would add a shuffle, and under AQE a second job); a full
+    * pass rather than a head-row probe: a dim-0 first row on a batch
+    * whose later rows are wide would make a head-row probe understate
+    * the dim and reinstate the unbounded driver collect the cap exists
+    * to stop.
+    */
+  private def probeQueries(queries: DataFrame): (Long, Int) = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val parts = queries.filter(col("qv").isNotNull).select(size(col("qv"))).as[Int]
+      .mapPartitions { it =>
+        var n = 0L; var d = 0
+        it.foreach { x => n += 1; d = math.max(d, x) }
+        Iterator.single((n, d))
+      }.collect()
+    (parts.map(_._1).sum, parts.map(_._2).maxOption.getOrElse(0))
+  }
+
+  /** Exact dense top-k of every query in `queries` (qid, qv) against
+    * `emb` (vec_id, embedding) under `metric`. Output: qid, vec_id,
+    * score, rnk — ordered by (qid, rnk) when `ordered`.
+    *
+    * A query frame whose optimized plan is a local relation is taken
+    * as it is (no job); any other frame is probed for (count, dim) in
+    * one job and, when it fits the fast path, collected in one more.
+    * Fast path: the batch broadcasts once and the corpus is scanned
+    * once; each partition keeps ≤k candidates per query, and an
+    * ordered result merges them on ONE partition, so the (qid, rnk)
+    * order is a local sort — no range-sampling job, no second
+    * shuffle. A batch over the dim-aware bound ([[fastPathCap]]) runs
+    * the 2D block-matrix kernel ([[blockedTop]]) instead.
+    *
+    * `excludeSelf` drops the pair qid == vec_id (the kNN-graph shape);
+    * store search_batch keeps it, so a query that is a stored vector
+    * finds itself. Null vectors (failed embed jobs leave them behind)
+    * cannot rank and are dropped on both sides.
+    */
   private[graft] def denseKernelTopK(emb: DataFrame, queries: DataFrame, k: Int,
-      scoreFn: (Array[Double], Array[Double]) => Double,
+      metric: Metric,
       tile: Int = defaultKernelTile,
-      dimHint: Option[Int] = None,
-      ordered: Boolean = true): DataFrame = {
+      ordered: Boolean = true,
+      excludeSelf: Boolean = true): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // null vectors (failed embed jobs leave them behind) can't rank —
-    // drop them on both sides, as the BNLJ's null-propagating cosine
-    // effectively does
-    val qDs = queries.filter(col("qv").isNotNull)
-      .select(col("qid").cast("long").as("_1"),
-              col("qv").cast("array<double>").as("_2"))
-      .as[(Long, Array[Double])]
-    val embP = emb.filter(col("embedding").isNotNull)
-      .select(col("vec_id").cast("long").as("_1"),
-              col("embedding").cast("array<double>").as("_2"))
-      // the oracle corpora arrive as a single parquet split — spread
-      // the kernel across cores (kernel output is partition-invariant)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Double])]
-    val agg = graft.ops.TopK.topk(k)
-    // one tile's kernel pass: broadcast its query block, emit ≤k
-    // partial candidates per (partition, query), merge with TopK
-    def tileTop(q: Array[(Long, Array[Double])])
-        : (DataFrame, org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Double])]]) = {
-      val bq = spark.sparkContext.broadcast(q)
-      val partials = embP.mapPartitions { rows =>
-        val qs = bq.value
-        val nq = qs.length
-        val bufS = Array.fill(nq)(new Array[Double](k))
-        val bufI = Array.fill(nq)(new Array[Long](k))
-        val bufN = new Array[Int](nq)
-        def insert(qi: Int, s: Double, id: Long): Unit = {
-          val n = bufN(qi); val ss = bufS(qi); val ii = bufI(qi)
-          var pos = 0
-          while (pos < n && (ss(pos) > s || (ss(pos) == s && ii(pos) < id))) pos += 1
-          if (pos >= k) return
-          val m = math.min(n + 1, k)
-          var j = m - 1
-          while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-          ss(pos) = s; ii(pos) = id; bufN(qi) = m
-        }
-        rows.foreach { case (vid, v) =>
-          var qi = 0
-          while (qi < nq) {
-            val (qid, qv) = qs(qi)
-            if (qid != vid) insert(qi, scoreFn(v, qv), vid)
-            qi += 1
-          }
-        }
-        (0 until nq).iterator.flatMap { qi =>
-          (0 until bufN(qi)).iterator.map(j => (qs(qi)._1, bufS(qi)(j), bufI(qi)(j)))
-        }
-      }.toDF("qid", "score", "vec_id")
-      (partials.groupBy("qid").agg(agg(col("score"), col("vec_id")).as("top")), bq)
+    val qRows = vectorRows(queries, "qid", "qv")
+    val local =
+      if (qRows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        Some(collectDoubles(qRows))
+      else None
+    val (nq, dim) = local match {
+      case Some(rows) => (rows.length.toLong, rows.iterator.map(_._2.length).maxOption.getOrElse(0))
+      case None => probeQueries(queries)
     }
-    // fast path: the whole batch fits one tile (every oracle corpus
-    // does) — head(cap+1) both fetches it and detects overflow. One
-    // broadcast, ONE corpus scan — optimal for bounded query batches.
-    // The bound is DIM-AWARE (fastPathCap): the raw tile default
-    // (2^16) sized the driver collect for ~64-d queries; at the
-    // reference's 1024-d it would materialize 512 MB on the driver
-    // and broadcast it. ScaleRound15Ops measured the capped
-    // dispatch: a 32 MB broadcast tile is the fastest path at
-    // 1024-d, so the 64 MB cap keeps the fast path wherever it wins
-    // while bounding driver memory. The dim comes from `dimHint`
-    // when the caller already knows it (streaming serve probes the
-    // collection ONCE at stream start instead of twice per
-    // micro-batch — r15 ADVICE) and from one exact [[maxDim]] job
-    // otherwise.
-    // a caller's dimHint is a claim, not a measurement (streaming
-    // serve probes the COLLECTION at stream start, not this batch) —
-    // validate it against a small pilot before sizing the fastCap
-    // collect by it, else an understated hint inflates the 64 MB
-    // driver cap by trueDim/hintDim during the head(cap+1) fetch
-    // itself (r16 ADVICE). The pilot is a bounded 64-row fetch; the
-    // post-collect obsDim re-check below stays as the final guard.
-    val qDim = dimHint match {
-      case Some(h) =>
-        val pilot = qDs.head(64)
-        val pd = if (pilot.isEmpty) 0 else pilot.iterator.map(_._2.length).max
-        math.max(h, pd)
-      case None => maxDim(queries, "qv")
-    }
-    val fastCap = fastPathCap(qDim, tile)
-    val first = qDs.head(fastCap + 1)
-    // belt-and-braces against an understated dimHint: if the fetched
-    // rows carry vectors wider than declared, re-derive the cap from
-    // what was actually seen so routing (and blockedTop's packing
-    // caps) reflect the real row size
-    val obsDim = if (first.isEmpty) 0 else first.iterator.map(_._2.length).max
-    val effCap = if (obsDim > qDim) fastPathCap(obsDim, tile) else fastCap
-    val topPerQid: DataFrame =
-      if (first.length <= effCap) tileTop(first.sortBy(_._1))._1
-      else
-        // many-query batch: the 2D block-matrix kernel — one corpus
-        // scan regardless of tile count (the r13 tiled loop re-scanned
-        // the corpus once per query tile). The head() probe above is
-        // the only extra query-side pass the overflow case pays.
-        blockedTop(emb, queries, k, scoreFn, tile,
-          dimHint = Some(math.max(qDim, obsDim)))
-    val out = topPerQid
+    val out =
+      if (nq <= fastPathCap(dim, tile)) {
+        val rows = local.getOrElse(collectDoubles(qRows)).sortBy(_._1)
+        val bq = spark.sparkContext.broadcast(
+          new QueryBlock(rows.map(_._1), rows.map(_._2)))
+        // the oracle corpora arrive as a single parquet split — spread
+        // the kernel across cores (kernel output is partition-invariant);
+        // the shuffle moves the stored vectors, widened after it
+        val partials = asDoubles(vectorRows(emb, "vec_id", "embedding")
+            .repartition(spark.sparkContext.defaultParallelism))
+          .mapPartitions { it =>
+            val st = new KernelState(bq.value, k, metric, excludeSelf)
+            it.foreach { case (vid, v) => st.offer(vid, v, 0, v.length) }
+            st.rows
+          }.toDF("qid", "score", "vec_id")
+        val merged = partials.groupBy("qid")
+          .agg(graft.ops.TopK.topk(k)(col("score"), col("vec_id")).as("top"))
+        if (ordered) merged.coalesce(1) else merged
+      } else
+        blockedTop(emb, queries, k, metric, tile, excludeSelf = excludeSelf,
+          probed = Some((nq, dim)))
+    val ranked = out
       .select(col("qid"), posexplode(col("top")))
       .select(col("qid"), col("col.id").as("vec_id"), col("col.score").as("score"),
               (col("pos") + 1).cast("long").as("rnk"))
-    if (ordered) out.orderBy("qid", "rnk") else out
+    if (ordered) ranked.orderBy("qid", "rnk") else ranked
   }
 
   /** Corpus rows per kernel block on the blocked path: one block is
@@ -312,24 +457,6 @@ object Ann {
     */
   private[graft] val defaultKernelBlockRows: Int = 1 << 13
 
-  /** Dim-aware packing bounds for the blocked kernel: one tile row
-    * materializes tile×dim doubles in a single shuffle row / task,
-    * one block row blockRows×dim. The defaults are sized for ~64-d
-    * embeddings; at 1024-d they would make half-GB rows, so cap a
-    * tile row at ~32 MB and a block row at ~16 MB regardless of what
-    * the caller (or the env default) asks for. At the reference's
-    * 1024-d this engages as (tileEff=4096, blockRowsEff=2048) —
-    * measured by ScaleRound15Ops (scan count stays ≡1, wall-clock
-    * linear in total scores; see SURVEY §6).
-    */
-  /** Dim-aware bound on the one-broadcast fast path: the whole query
-    * batch is collected to the driver and broadcast, so the bound
-    * caps DRIVER memory (and broadcast size) at ~64 MB of packed
-    * query doubles — 2× the 32 MB tile measured fastest at 1024-d
-    * (ScaleRound15Ops), 8192 queries at the reference dim. An
-    * explicitly smaller caller tile always wins (specs force
-    * multi-tile with tile=4).
-    */
   /** Fast-path driver-memory bound in MB (default 64). Deployment
     * knob for the dispatch-crossover tradeoff — MEASURED r18 (the §5
     * memory-vs-latency note): at 12k queries × 1024-d (96 MB packed,
@@ -359,11 +486,29 @@ object Ann {
       case None => 64L
     }
 
+  /** Dim-aware bound on the one-broadcast fast path: the whole query
+    * batch is collected to the driver and broadcast, so the bound
+    * caps DRIVER memory (and broadcast size) at [[fastPathMb]] of
+    * packed query doubles — 2× the 32 MB tile measured fastest at
+    * 1024-d (ScaleRound15Ops), 8192 queries at the reference dim. An
+    * explicitly smaller caller tile always wins (specs force
+    * multi-tile with tile=4).
+    */
   private[graft] def fastPathCap(dim: Int, tile: Int): Int =
     if (dim <= 0) tile
     else math.max(1,
       math.min(tile.toLong, (fastPathMb << 20) / (dim * 8)).toInt)
 
+  /** Dim-aware packing bounds for the blocked kernel: one tile row
+    * materializes tile×dim doubles in a single shuffle row / task,
+    * one block row blockRows×dim. The defaults are sized for ~64-d
+    * embeddings; at 1024-d they would make half-GB rows, so cap a
+    * tile row at ~32 MB and a block row at ~16 MB regardless of what
+    * the caller (or the env default) asks for. At the reference's
+    * 1024-d this engages as (tileEff=4096, blockRowsEff=2048) —
+    * measured by ScaleRound15Ops (scan count stays ≡1, wall-clock
+    * linear in total scores; see SURVEY §6).
+    */
   private[graft] def kernelPackingCaps(dim: Int, tile: Int,
       blockRows: Int): (Int, Int) = {
     val tileEff =
@@ -386,7 +531,7 @@ object Ann {
   def bruteForceTopKBlocked(emb: DataFrame, queries: DataFrame, k: Int,
       tile: Int = defaultKernelTile,
       blockRows: Int = defaultKernelBlockRows): DataFrame =
-    blockedTop(emb, queries, k, cosineRounded6, tile, blockRows)
+    blockedTop(emb, queries, k, Cosine, tile, blockRows)
       .select(col("qid"), posexplode(col("top")))
       .select(col("qid"), col("col.id").as("vec_id"), col("col.score").as("score"),
               (col("pos") + 1).cast("long").as("rnk"))
@@ -437,25 +582,18 @@ object Ann {
     * paths remain the first choice at corpus scale.
     */
   private[graft] def blockedTop(emb: DataFrame, queries: DataFrame, k: Int,
-      scoreFn: (Array[Double], Array[Double]) => Double,
+      metric: Metric,
       tile: Int = defaultKernelTile,
       blockRows: Int = defaultKernelBlockRows,
       nSlotsOverride: Option[Int] = None,
-      dimHint: Option[Int] = None): DataFrame = {
+      excludeSelf: Boolean = true,
+      probed: Option[(Long, Int)] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val qDs = queries.filter(col("qv").isNotNull)
-      .select(col("qid").cast("long").as("_1"),
-              col("qv").cast("array<double>").as("_2"))
-      .as[(Long, Array[Double])]
-    // ONE query-side probe job: count (for nTiles) and exact max dim
-    // (for the packing caps) from the same agg — a head-row dim probe
-    // would understate it on a batch whose first row is narrow (r15
-    // ADVICE). A caller's dimHint can only widen the bound.
-    val probe = queries.filter(col("qv").isNotNull)
-      .agg(count(lit(1)), coalesce(max(size(col("qv"))), lit(0))).head
-    val nq = probe.getLong(0)
-    val dim = math.max(dimHint.getOrElse(0), probe.getInt(1))
+    val qDs = asDoubles(vectorRows(queries, "qid", "qv"))
+    // count (for nTiles) and exact max dim (for the packing caps):
+    // one probe job, skipped when the dispatch already ran it
+    val (nq, dim) = probed.getOrElse(probeQueries(queries))
     val (tileEff, blockRowsEff) = kernelPackingCaps(dim, tile, blockRows)
     val nTiles = math.max(1L, (nq + tileEff - 1) / tileEff)
     // nSlots sets the grid's second axis — the SUMMA replication
@@ -540,10 +678,7 @@ object Ann {
     // (tile, slot) -> corpus block: ONE pass over the corpus; the
     // slot comes from the task partition id so a partition's blocks
     // spread deterministically without a second hash of the data
-    val blocks = emb.filter(col("embedding").isNotNull)
-      .select(col("vec_id").cast("long").as("_1"),
-              col("embedding").cast("array<double>").as("_2"))
-      .as[(Long, Array[Double])]
+    val blocks = asDoubles(vectorRows(emb, "vec_id", "embedding"))
       .mapPartitions { it =>
         val sl = org.apache.spark.TaskContext.getPartitionId().toLong % nSlots
         it.grouped(blockRowsEff).zipWithIndex.map { case (b, i) =>
@@ -575,53 +710,28 @@ object Ann {
           s"blocked kernel $side cell $cell landed in partition $pid, " +
             s"expected $expect of $nCells — co-partitioning broke")
       }
-      // one bounded top-k state per cell in this partition (≈1 by
+      // one kernel state per cell in this partition (≈1 by
       // construction: nCells ≥ nTiles×nSlots hash-spread)
-      val cells = new scala.collection.mutable.LongMap[
-        (Array[Long], Array[Array[Double]], Array[Array[Double]],
-         Array[Array[Long]], Array[Int])]()
+      val cells = new scala.collection.mutable.LongMap[KernelState]()
       tileIt.foreach { case (cell, qids, ends, flat) =>
         assertAligned(cell, "tile")
-        cells.update(cell, (qids, unpackVecs(ends, flat),
-          Array.fill(qids.length)(new Array[Double](k)),
-          Array.fill(qids.length)(new Array[Long](k)),
-          new Array[Int](qids.length)))
+        cells.update(cell, new KernelState(
+          new QueryBlock(qids, unpackVecs(ends, flat)), k, metric, excludeSelf))
       }
       blockIt.foreach { case (cell, vids, ends, flat) =>
         assertAligned(cell, "block")
         // a cell with no tile state is an EMPTY tile bucket (blocks
         // replicate to every tile index; a small batch can leave some
         // hash buckets without queries) — nothing to score
-        cells.get(cell).foreach { case (qids, qvs, bufS, bufI, bufN) =>
-          val nqT = qids.length
-          def insert(qi: Int, s: Double, id: Long): Unit = {
-            val n = bufN(qi); val ss = bufS(qi); val ii = bufI(qi)
-            var pos = 0
-            while (pos < n && (ss(pos) > s || (ss(pos) == s && ii(pos) < id))) pos += 1
-            if (pos >= k) return
-            val m = math.min(n + 1, k)
-            var j = m - 1
-            while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-            ss(pos) = s; ii(pos) = id; bufN(qi) = m
-          }
+        cells.get(cell).foreach { st =>
           var r = 0; var start = 0
           while (r < vids.length) {
-            val end = ends(r); val vid = vids(r)
-            val v = java.util.Arrays.copyOfRange(flat, start, end)
-            var qi = 0
-            while (qi < nqT) {
-              if (qids(qi) != vid) insert(qi, scoreFn(v, qvs(qi)), vid)
-              qi += 1
-            }
-            start = end; r += 1
+            st.offer(vids(r), flat, start, ends(r) - start)
+            start = ends(r); r += 1
           }
         }
       }
-      cells.iterator.flatMap { case (_, (qids, _, bufS, bufI, bufN)) =>
-        qids.indices.iterator.flatMap { qi =>
-          (0 until bufN(qi)).iterator.map(j => (qids(qi), bufS(qi)(j), bufI(qi)(j)))
-        }
-      }
+      cells.valuesIterator.flatMap(_.rows)
     }
     partials
       .toDF("qid", "score", "vec_id")

@@ -669,11 +669,12 @@ private[graft] object QExperiments {
               |ORDER BY vector_id""".stripMargin)),
 
     // batched search (the vector-DB `search_batch` API): 3 query
-    // vectors against one user's collection in ONE job — one
-    // partition-pruned scan, map-side scoring against the broadcast
-    // batch, per-query top-k from the bounded TopK aggregate (k
-    // rows/partition/query shuffled — never |queries| separate jobs
-    // and never a global sort).
+    // vectors against one user's collection through the dense cosine
+    // kernel — one partition-pruned scan, the batch broadcast once,
+    // ≤k candidates per partition per query merged by the bounded
+    // TopK aggregate on one partition (never |queries| separate jobs
+    // and never a global sort). Self-exclusion is off: query 42 is a
+    // point of user 2 and ranks itself first.
     "vs_search_batch" -> Q(
       (s, d) => VectorStore.searchBatch(
         VectorStore.pointsPartitioned(s, d), 2,

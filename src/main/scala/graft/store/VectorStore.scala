@@ -1,9 +1,15 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import graft.Tables
+import graft.ann.Ann
 import graft.functions.VectorFunctions._
 
 /** Spark-native re-expression of the reference's Qdrant collection
@@ -191,27 +197,24 @@ object VectorStore {
       .orderBy("vector_id")
 
   /** Batched search (the vector-DB `search_batch` API): MANY query
-    * vectors against ONE user's collection in a single job — the
-    * collection is scanned once, every query scores map-side against
-    * the broadcast batch, and the per-query top-k comes from the
-    * bounded TopK aggregate (k rows/partition/query shuffled, never a
-    * global sort). `queries` is (qid, q). Output: (qid, rnk,
-    * vector_id, score).
+    * vectors against ONE user's collection through the dense cosine
+    * kernel ([[graft.ann.Ann.denseKernelTopK]], self-exclusion off: a
+    * query that is a stored vector finds itself). The batch
+    * broadcasts once, the partition-pruned collection is scanned
+    * once, each partition keeps ≤k candidates per query, and the
+    * bounded TopK aggregate merges them on one partition — never a
+    * global sort. `queries` is (qid, q); null query vectors and null
+    * stored vectors are dropped. Output: (qid, rnk, vector_id,
+    * score), ordered by (qid, rnk).
     */
   def searchBatch(coll: DataFrame, userId: Any, queries: DataFrame,
-                  k: Int): DataFrame = {
-    val agg = graft.ops.TopK.topk(k)
-    coll.filter(col("user_id") === userId)
-      .crossJoin(broadcast(queries))
-      .select(col("qid"), score(col("embedding"), col("q")).as("score"),
-              col("vector_id"))
-      .groupBy("qid")
-      .agg(agg(col("score"), col("vector_id")).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), (col("pos") + 1).cast("long").as("rnk"),
-              col("col.id").as("vector_id"), col("col.score").as("score"))
-      .orderBy("qid", "rnk")
-  }
+                  k: Int): DataFrame =
+    Ann.denseKernelTopK(
+        coll.filter(col("user_id") === userId)
+          .select(col("vector_id").as("vec_id"), col("embedding")),
+        queries.select(col("qid"), col("q").as("qv")), k, Ann.Cosine,
+        excludeSelf = false)
+      .select(col("qid"), col("rnk"), col("vec_id").as("vector_id"), col("score"))
 
   /** Facet counts over a payload field (the vector-DB `facet` API):
     * distinct values of `field` in the user's collection with point
@@ -277,12 +280,45 @@ object VectorStore {
 
   // ---- search (reference :332/:366) -------------------------------
 
+  /** A query vector as a literal: the values are cast-free Catalyst
+    * array data (primitive-backed when no element is null), so
+    * generated code is the same for every query and only the
+    * referenced object changes.
+    */
+  private def vectorLit(v: Any, dt: DataType): Column = {
+    val data = CatalystTypeConverters.convertToCatalyst(v) match {
+      case a: ArrayData if !(0 until a.numElements()).exists(a.isNullAt) => dt match {
+        case ArrayType(FloatType, _)  => UnsafeArrayData.fromPrimitiveArray(a.toFloatArray())
+        case ArrayType(DoubleType, _) => UnsafeArrayData.fromPrimitiveArray(a.toDoubleArray())
+        case _                        => a
+      }
+      case other => other
+    }
+    ColumnBridge.column(Literal(data, dt))
+  }
+
+  /** `rows` projected to `cols` plus `score` against the query vector
+    * of the 1-row frame `qdf` (column `q`). The vector is fetched to
+    * the driver once — no job when the frame is local, one otherwise —
+    * and scored as a literal, so the plan is scan → score with no
+    * join and no broadcast stage. An empty frame gives an empty result
+    * with the same schema; a null vector scores every row null.
+    */
+  private def scoredBy(rows: DataFrame, qdf: DataFrame, cols: Seq[Column]): DataFrame = {
+    val q = qdf.select(col("q"))
+    val got = q.collect()
+    require(got.length <= 1, s"a search query frame holds one vector, got ${got.length}")
+    val out = rows.select(cols :+ score(col("embedding"),
+      vectorLit(got.headOption.map(_.get(0)).orNull, q.schema.head.dataType)).as("score"): _*)
+    if (got.isEmpty) out.filter(lit(false)) else out
+  }
+
   /** Cosine top-k within one user's collection with optional score
     * threshold and doc-id restriction. `qdf` is a 1-row frame with the
-    * query vector in column `q` (broadcast cross-joined, so the scan
-    * side never shuffles). The plan is filter(pruned) → score →
-    * TakeOrderedAndProject: a per-partition k-heap, shuffling only k
-    * rows per partition — no global sort at 100 TB.
+    * query vector in column `q`, scored as a literal ([[scoredBy]]).
+    * The plan is filter(pruned) → score → TakeOrderedAndProject: a
+    * per-partition k-heap in one job — no join, no exchange, no
+    * global sort at 100 TB.
     */
   def search(coll: DataFrame, userId: Any, qdf: DataFrame, limit: Int,
              scoreThreshold: Double = Double.NegativeInfinity,
@@ -290,8 +326,7 @@ object VectorStore {
     val base = coll.filter(col("user_id") === userId)
     val restricted =
       if (docIds.isEmpty) base else base.filter(col("doc_id").isin(docIds: _*))
-    val scored = restricted.crossJoin(broadcast(qdf))
-      .select(outCols(coll) :+ score(col("embedding"), col("q")).as("score"): _*)
+    val scored = scoredBy(restricted, qdf, outCols(coll))
     val thresholded =
       if (scoreThreshold.isNegInfinity) scored
       else scored.filter(col("score") >= scoreThreshold)
@@ -307,10 +342,8 @@ object VectorStore {
     */
   def searchWithVectors(coll: DataFrame, userId: Any, qdf: DataFrame,
                         limit: Int): DataFrame =
-    coll.filter(col("user_id") === userId)
-      .crossJoin(broadcast(qdf))
-      .select(outCols(coll) ++ Seq(col("embedding"),
-        score(col("embedding"), col("q")).as("score")): _*)
+    scoredBy(coll.filter(col("user_id") === userId), qdf,
+        outCols(coll) :+ col("embedding"))
       .orderBy(col("score").desc, col("vector_id")).limit(limit)
 
   /** Payload-filtered search (the reference's Qdrant `Filter` on
@@ -322,9 +355,8 @@ object VectorStore {
     */
   def searchWhere(coll: DataFrame, userId: Any, qdf: DataFrame, limit: Int,
                   predicate: Column): DataFrame =
-    coll.filter(col("user_id") === userId).filter(predicate)
-      .crossJoin(broadcast(qdf))
-      .select(outCols(coll) :+ score(col("embedding"), col("q")).as("score"): _*)
+    scoredBy(coll.filter(col("user_id") === userId).filter(predicate), qdf,
+        outCols(coll))
       .orderBy(col("score").desc, col("vector_id")).limit(limit)
 
   /** Multi-tenant batched search: EVERY user's query answered in one
@@ -354,18 +386,17 @@ object VectorStore {
 
   /** Grouped search (the vector-DB "search groups" API): the single
     * best-scoring chunk PER DOCUMENT, then the top `groups` documents.
-    * The per-doc window is bounded by chunks-per-doc (small by
-    * construction) and partitioned by doc_id — never global; the
-    * final ordering is a bounded TakeOrdered over one row per doc.
+    * The query vector is a literal ([[scoredBy]]). The per-doc window
+    * is bounded by chunks-per-doc (small by construction) and
+    * partitioned by doc_id — never global; the final ordering is a
+    * bounded TakeOrdered over one row per doc.
     */
   def searchGrouped(coll: DataFrame, userId: Any, qdf: DataFrame,
                     groups: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("score").desc, col("vector_id"))
-    coll.filter(col("user_id") === userId)
-      .crossJoin(broadcast(qdf))
-      .select(col("doc_id"), col("vector_id"), col("chunk_id"),
-              score(col("embedding"), col("q")).as("score"))
+    scoredBy(coll.filter(col("user_id") === userId), qdf,
+        Seq(col("doc_id"), col("vector_id"), col("chunk_id")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
       .orderBy(col("score").desc, col("doc_id"))
@@ -373,56 +404,75 @@ object VectorStore {
   }
 
   /** Recommend by example (the vector-DB recommend API): the query
-    * vector is mean(positive examples) − mean(negative examples),
-    * folded left-to-right over 1-row broadcast frames so the float
-    * association order is fixed (oracle-exact); example points are
-    * excluded from the results.
+    * vector is mean(positive examples) − mean(negative examples).
+    * The examples are fetched in one job and folded on the driver in
+    * the order the Column form (zip_with / transform) evaluates:
+    * element sums left to right in the stored element type, then ÷
+    * count in double, then pos − neg in double; a null vector or
+    * element stays null and ragged vectors pad with nulls. The result
+    * is scored as a literal in one more job; example points are
+    * excluded. A missing example id gives an empty result; an id
+    * matching more than one point is rejected.
     */
   def recommend(coll: DataFrame, userId: Any, posIds: Seq[Long],
                 negIds: Seq[Long], limit: Int): DataFrame = {
     require(posIds.nonEmpty)
     val base = coll.filter(col("user_id") === userId)
-    def vecOf(id: Long, as: String) =
-      base.filter(col("vector_id") === id).select(col("embedding").as(as))
-    def sumOf(ids: Seq[Long], tag: String): (DataFrame, Column) = {
-      val frames = ids.zipWithIndex.map { case (id, i) => vecOf(id, s"_${tag}$i") }
-      val joined = frames.reduceLeft((a, b) => a.crossJoin(broadcast(b)))
-      val summed = ids.indices.map(i => col(s"_${tag}$i"))
-        .reduceLeft((a, b) => zip_with(a, b, (x, y) => x + y))
-      (joined, summed)
-    }
-    val (posF, posSum) = sumOf(posIds, "p")
-    val posAvg = transform(posSum, x => x / posIds.size.toDouble)
-    val (qFrame, rec) =
-      if (negIds.isEmpty) (posF.select(posAvg.as("q")), col("q"))
+    val ids = posIds ++ negIds
+    val examples = base.filter(col("vector_id").isin(ids.distinct: _*))
+      .select(col("vector_id"), col("embedding")).collect()
+    val found = ids.map(id => examples.filter(_.get(0) == id))
+    found.zip(ids).foreach { case (m, id) =>
+      require(m.length <= 1, s"recommend example id $id matches ${m.length} points") }
+    val dt = coll.schema("embedding").dataType
+    val query: Option[Seq[Any]] =
+      if (found.exists(_.isEmpty)) None
       else {
-        val (negF, negSum) = sumOf(negIds, "n")
-        val negAvg = transform(negSum, x => x / negIds.size.toDouble)
-        (posF.crossJoin(broadcast(negF))
-          .select(zip_with(posAvg, negAvg, (p, n) => p - n).as("q")), col("q"))
+        val vecs = found.map(_.head.getSeq[Any](1))
+        val isFloat = dt match { case ArrayType(FloatType, _) => true; case _ => false }
+        def zipWith(a: Seq[Any], b: Seq[Any])(f: (Any, Any) => Any): Seq[Any] =
+          if (a == null || b == null) null
+          else Seq.tabulate(math.max(a.length, b.length)) { i =>
+            val (x, y) = (a.lift(i).orNull, b.lift(i).orNull)
+            if (x == null || y == null) null else f(x, y)
+          }
+        def mean(vs: Seq[Seq[Any]]): Seq[Any] = {
+          val sum = vs.reduceLeft(zipWith(_, _) { (x, y) =>
+            if (isFloat) x.asInstanceOf[Float] + y.asInstanceOf[Float]
+            else x.asInstanceOf[Double] + y.asInstanceOf[Double]
+          })
+          if (sum == null) null
+          else sum.map {
+            case null => null
+            case x => (if (isFloat) x.asInstanceOf[Float].toDouble
+                       else x.asInstanceOf[Double]) / vs.size.toDouble
+          }
+        }
+        val pos = mean(vecs.take(posIds.size))
+        Some(if (negIds.isEmpty) pos
+             else zipWith(pos, mean(vecs.drop(posIds.size)))(
+               (p, n) => p.asInstanceOf[Double] - n.asInstanceOf[Double]))
       }
-    base.filter(!col("vector_id").isin(posIds ++ negIds: _*))
-      .crossJoin(broadcast(qFrame))
-      .select(col("vector_id"), col("doc_id"),
-              score(col("embedding"), rec).as("score"))
+    val scored = base.filter(!col("vector_id").isin(ids: _*))
+      .select(col("vector_id"), col("doc_id"), score(col("embedding"),
+        vectorLit(query.orNull, ArrayType(DoubleType, containsNull = true))).as("score"))
+    (if (query.isEmpty) scored.filter(lit(false)) else scored)
       .orderBy(col("score").desc, col("vector_id"))
       .limit(limit)
   }
 
   /** Global (all-collections) threshold scan — returns every point
-    * scoring ≥ threshold, no limit. Embarrassingly parallel.
+    * scoring ≥ threshold, no limit. Embarrassingly parallel; the query
+    * vector is a literal ([[scoredBy]]).
     */
   def searchThreshold(coll: DataFrame, qdf: DataFrame,
                       scoreThreshold: Double): DataFrame =
-    coll.crossJoin(broadcast(qdf))
-      .select(col("user_id"), col("vector_id"),
-              score(col("embedding"), col("q")).as("score"))
+    scoredBy(coll, qdf, Seq(col("user_id"), col("vector_id")))
       .filter(col("score") >= scoreThreshold)
       .orderBy(col("score").desc, col("vector_id"))
 
-  /** The query vector for `vec_id = id` as a broadcastable 1-row frame
-    * (column `q`). Used with crossJoin(broadcast(...)) so the scan
-    * side never shuffles.
+  /** The query vector for `vec_id = id` as a 1-row frame (column `q`),
+    * the query argument of the single-vector searches.
     */
   def queryVecOf(s: SparkSession, dir: String, id: Long): DataFrame =
     Tables.embeddings(s, dir).filter(col("vec_id") === id)

@@ -750,21 +750,15 @@ object StreamOps {
                            tile: Int = graft.ann.Ann.defaultKernelTile)
                           (onBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // Probe the collection's dim ONCE at stream start and hand it to
-    // every micro-batch as the kernel's dimHint — the r15 ADVICE
-    // case: without it each batch paid two extra driver probes
-    // (recomputing the query side) before the real scan. Query
-    // batches are expected at the collection's dim; the kernel
-    // re-checks the fetched head rows and re-derives its cap if a
-    // batch arrives wider.
-    val collDim = collection.filter(col("embedding").isNotNull)
-      .agg(coalesce(max(size(col("embedding"))), lit(0))).head.getInt(0)
+    // each micro-batch pays the kernel's one (count, dim) probe job
+    // before its fetch; the probe sizes the driver collect from the
+    // batch itself, so a batch wider than the collection stays bounded
     queries.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
           onBatch(graft.ann.Ann.denseKernelTopK(collection, batch, k,
-            graft.ann.Ann.cosineRounded6Kernel, tile, dimHint = Some(collDim)))
+            graft.ann.Ann.Cosine, tile))
       }
       .start()
   }

@@ -33,14 +33,14 @@ class AnnSpec extends SparkSpec {
     // overflow path (tile far below the query count) now routes to the
     // 2D block-matrix kernel — must be row-identical too: blocking is
     // a memory/shuffle shape, not a result
-    val c = Ann.denseKernelTopK(emb, q, 5, Ann.cosineRounded6Kernel, tile = 37)
+    val c = Ann.denseKernelTopK(emb, q, 5, Ann.Cosine, tile = 37)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(a.length == c.length)
     a.zip(c).foreach { case (x, y) => assert(x == y, s"tiled: $x != $y") }
     // blocked kernel pinned directly at adversarially small tile AND
     // block sizes (many tiles × many blocks × salted slots): the
     // partial-TopK-on-both-axes merge must still be exact
-    val d = Ann.blockedTop(emb, q, 5, Ann.cosineRounded6Kernel,
+    val d = Ann.blockedTop(emb, q, 5, Ann.Cosine,
         tile = 19, blockRows = 23)
       .select(col("qid"), org.apache.spark.sql.functions.posexplode(col("top")))
       .select(col("qid"), col("col.id").as("vec_id"), col("col.score").as("score"),
@@ -49,6 +49,57 @@ class AnnSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(a.length == d.length)
     a.zip(d).foreach { case (x, y) => assert(x == y, s"blocked: $x != $y") }
+  }
+
+  test("dense kernels stay exact at 6-dp boundaries, k-th place ties and degenerate vectors") {
+    val s = spark
+    import s.implicits._
+    // 7-d (not a multiple of four). Around e1, raw cosines straddle the
+    // 0.9000005 rounding boundary: four candidates round to 0.900001
+    // (a tie at k = 3 that only the id decides), three to 0.900000
+    // (within 1e-6 of the k-th score, so never pruned) and one to
+    // 0.899999; plus a zero vector, two copies of a candidate (cosine
+    // 1, distance 0 ties), 19 seeded fillers and a null vector.
+    val dim = 7
+    def unit(i: Int) = Array.tabulate(dim)(d => if (d == i) 1.0 else 0.0)
+    def atCos(c: Double) = { val v = unit(0); v(1) = math.sqrt(1 / (c * c) - 1); v }
+    val targets = Seq(1 -> 0.9000012, 2 -> 0.8999996, 3 -> 0.9000006, 4 -> 0.9000004,
+      5 -> 0.90000049, 6 -> 0.90000051, 7 -> 0.8999990, 8 -> 0.9000013)
+    val rnd = new scala.util.Random(11)
+    val rows: Seq[(Long, Array[Double])] =
+      Seq(0L -> unit(0)) ++ targets.map { case (i, c) => i.toLong -> atCos(c) } ++
+      Seq(9L -> new Array[Double](dim)) ++
+      (10 until 29).map(i => i.toLong -> Array.fill(dim)(rnd.nextDouble() * 2 - 1)) ++
+      Seq(30L -> atCos(0.9000006), 31L -> atCos(0.9000006), 99L -> (null: Array[Double]))
+    val e = rows.toDF("vec_id", "embedding")
+    val nonNull = e.filter(col("embedding").isNotNull)
+    val q = nonNull.select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    def tuples(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+    for (k <- Seq(3, 5)) {
+      // the cross-join form reads a null score as 0.0 where the kernels
+      // drop null vectors, so it sees the corpus without them
+      val want = tuples(Ann.bruteForceTopK(nonNull, q, k))
+      assert(want.filter(_._1 == 0L).map(_._2).take(3) == Seq(1L, 3L, 6L), want)
+      assert(tuples(Ann.bruteForceTopKDense(e, q, k)) == want, s"dense k=$k")
+      assert(tuples(Ann.bruteForceTopKBlocked(e, q, k, tile = 3, blockRows = 4)) == want,
+        s"blocked k=$k")
+      val a = nonNull.select(col("vec_id").as("va"), col("embedding").as("ea"))
+      val b = nonNull.select(col("vec_id").as("vb"), col("embedding").as("eb"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("va").orderBy(col("dist"), col("vb"))
+      val wantDist = a.crossJoin(b).filter(col("va") =!= col("vb"))
+        .select(col("va"), col("vb"), round(sqrt(aggregate(
+          zip_with(col("ea"), col("eb"), (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, v) => acc + v)), 6).as("dist"))
+        .withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= k)
+        .orderBy("va", "rnk")
+        .collect().map(r => (r.getLong(0), r.getLong(3), r.getDouble(2))).toSeq
+      val gotDist = Ann.nearestDistancesDense(e, k).orderBy("vec_id", "rnk")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(gotDist == wantDist, s"distances k=$k")
+    }
   }
 
   test("unordered dense kernel: same row SET, no final range sort") {
@@ -100,7 +151,7 @@ class AnnSpec extends SparkSpec {
     val q = emb.select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val a = Ann.bruteForceTopK(emb, q, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    val b = Ann.denseKernelTopK(emb, q, 3, Ann.cosineRounded6Kernel, tile = 41)
+    val b = Ann.denseKernelTopK(emb, q, 3, Ann.Cosine, tile = 41)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(a.length == b.length && a.nonEmpty)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"capped: $x != $y") }

@@ -1,0 +1,26 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+class BenchSpec extends AnyFunSuite {
+
+  test("baseline block compares only with an artifact at the same cpus and sf") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bench").toFile
+    def artifact(name: String, cpus: Int, sf: Double): Unit =
+      java.nio.file.Files.writeString(new java.io.File(dir, name).toPath,
+        s"""{"n":1,"rc":0,"cpus":$cpus,"sf":$sf,"tail":"","parsed":null}""")
+    artifact("BENCH_r09.json", 4, 0.1)
+    artifact("BENCH_r10.json", 4, 0.01)
+    artifact("BENCH_r17.json", 32, 0.1)
+    artifact("BENCH_r17_c8.json", 8, 0.1)
+    artifact("NOT_BENCH_r18.json", 4, 0.1)
+    def pick(cpus: String, sfDir: String) =
+      Bench.baselineArtifact(dir, cpus, sfDir).map(_.getName)
+    assert(pick("4", "/data/sf0.1") == Right("BENCH_r09.json"))
+    assert(pick("4", "/data/sf0.01") == Right("BENCH_r10.json"))
+    assert(pick("32", "/data/sf0.1") == Right("BENCH_r17.json"))
+    assert(pick("8", "/data/sf0.1") == Right("BENCH_r17_c8.json"))
+    assert(pick("16", "/data/sf0.1").isLeft)
+    assert(pick("4", "/data/sf1").isLeft)
+  }
+}

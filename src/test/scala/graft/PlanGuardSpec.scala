@@ -21,11 +21,15 @@ class PlanGuardSpec extends SparkSpec {
       "l_discount:double,l_shipdate:timestamp"), p)
   }
 
-  test("vector search is broadcast + TakeOrderedAndProject (no global sort)") {
+  test("vector search is one scan + TakeOrderedAndProject (no exchange, no join, no global sort)") {
+    // the query vector is scored as a literal: scan → score → per-
+    // partition k-heap, with no Exchange of any kind and no join
     val p = plan("vs_search_topk")
     assert(p.contains("TakeOrderedAndProject"), p)
-    assert(p.contains("BroadcastExchange"), p)
+    assert(!p.contains("Exchange"), p)
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
     assert(!p.contains("SortExec"), p)
+    assert(p.contains("PartitionFilters") && p.contains("user_id"), p)
   }
 
   test("per-user vector ops scan a partitioned collection with PartitionFilters") {

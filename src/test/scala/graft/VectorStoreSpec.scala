@@ -214,4 +214,122 @@ class VectorStoreSpec extends SparkSpec {
       .select(element_at(col("embedding"), 1)).head().getFloat(0)
     assert(changed == -orig7)
   }
+
+  // ---- literal-query searches vs the broadcast cross-join form --------
+
+  /** The cross-join formulation the literal-query searches replaced:
+    * the 1-row query frame broadcast and scored per row. */
+  private def crossScored(rows: org.apache.spark.sql.DataFrame,
+      qdf: org.apache.spark.sql.DataFrame,
+      cols: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
+    import graft.functions.VectorFunctions.score
+    rows.crossJoin(broadcast(qdf))
+      .select(cols :+ score(col("embedding"), col("q")).as("score"): _*)
+  }
+  private val meta = Seq("vector_id", "doc_id", "chunk_id", "title").map(col)
+  private def byScore(df: org.apache.spark.sql.DataFrame, n: Int) =
+    df.orderBy(col("score").desc, col("vector_id")).limit(n)
+  private def same(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema == want.schema, s"${got.schema} != ${want.schema}")
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    assert(g == w, s"\n got $g\nwant $w")
+  }
+
+  test("literal-query searches are row-equal to the broadcast cross-join form") {
+    val u2 = pts.filter(col("user_id") === 2)
+    Seq(42L, 7L, 300L).foreach { id =>
+      val q = VectorStore.queryVecOf(spark, sfDir, id)
+      same(VectorStore.search(pts, 2, q, 10), byScore(crossScored(u2, q, meta), 10))
+      same(VectorStore.search(pts, 2, q, 50, scoreThreshold = 0.1, docIds = Seq(2L, 10L, 42L)),
+        byScore(crossScored(u2.filter(col("doc_id").isin(2L, 10L, 42L)), q, meta)
+          .filter(col("score") >= 0.1), 50))
+      same(VectorStore.searchWithVectors(pts, 2, q, 5),
+        byScore(crossScored(u2, q, meta :+ col("embedding")), 5))
+      same(VectorStore.searchWhere(pts, 2, q, 5, col("doc_id") < 50),
+        byScore(crossScored(u2.filter(col("doc_id") < 50), q, meta), 5))
+      same(VectorStore.searchThreshold(pts, q, 0.15),
+        crossScored(pts, q, Seq(col("user_id"), col("vector_id")))
+          .filter(col("score") >= 0.15).orderBy(col("score").desc, col("vector_id")))
+    }
+  }
+
+  test("recommend folds its examples on the driver exactly as the column fold") {
+    // the Column form recommend used before: zip_with float sums left
+    // to right, transform ÷ count in double, zip_with pos − neg
+    def columnFold(pos: Seq[Long], neg: Seq[Long], limit: Int) = {
+      val base = pts.filter(col("user_id") === 2)
+      def mean(ids: Seq[Long], tag: String) = {
+        val frames = ids.zipWithIndex.map { case (id, i) =>
+          base.filter(col("vector_id") === id).select(col("embedding").as(s"_$tag$i")) }
+        val sum = ids.indices.map(i => col(s"_$tag$i"))
+          .reduceLeft((a, b) => zip_with(a, b, (x, y) => x + y))
+        (frames.reduceLeft((a, b) => a.crossJoin(broadcast(b))),
+         transform(sum, x => x / ids.size.toDouble))
+      }
+      val (pf, pm) = mean(pos, "p")
+      val qf = if (neg.isEmpty) pf.select(pm.as("q")) else {
+        val (nf, nm) = mean(neg, "n")
+        pf.crossJoin(broadcast(nf)).select(zip_with(pm, nm, (a, b) => a - b).as("q"))
+      }
+      byScore(crossScored(base.filter(!col("vector_id").isin(pos ++ neg: _*)), qf,
+        Seq(col("vector_id"), col("doc_id"))), limit)
+    }
+    Seq((Seq(10L, 18L), Seq(34L)), (Seq(10L, 18L, 42L), Nil),
+        (Seq(50L), Seq(34L, 2L, 58L)), (Seq(18L, 10L, 18L), Seq(26L))).foreach {
+      case (pos, neg) =>
+        same(VectorStore.recommend(pts, 2, pos, neg, 20), columnFold(pos, neg, 20))
+    }
+  }
+
+  test("degenerate query frames: empty frames, null vectors, missing examples") {
+    val s = spark
+    import s.implicits._
+    val q = VectorStore.queryVecOf(spark, sfDir, 42)
+    val u2 = pts.filter(col("user_id") === 2)
+    // a 0-row query frame (scanned or local) gives an empty result with
+    // the schema of the cross-join form
+    val emptyScan = VectorStore.queryVecOf(spark, sfDir, -1L)
+    val emptyLocal = Seq.empty[Tuple1[Array[Float]]].toDF("q")
+    Seq(emptyScan, emptyLocal).foreach { e =>
+      same(VectorStore.search(pts, 2, e, 10), byScore(crossScored(u2, q, meta), 10).limit(0))
+      same(VectorStore.searchWithVectors(pts, 2, e, 5),
+        byScore(crossScored(u2, q, meta :+ col("embedding")), 5).limit(0))
+      val grouped = VectorStore.searchGrouped(pts, 2, e, 5)
+      assert(grouped.collect().isEmpty)
+      assert(grouped.schema == VectorStore.searchGrouped(pts, 2, q, 5).schema)
+    }
+    // a null query vector scores every row null: rows ordered by id
+    val nullQ = Seq(Tuple1(null: Array[Float])).toDF("q")
+    same(VectorStore.search(pts, 2, nullQ, 7), byScore(crossScored(u2, nullQ, meta), 7))
+    assert(VectorStore.search(pts, 2, nullQ, 7).collect().forall(_.isNullAt(4)))
+    // a missing example id: empty result, same schema as a hit
+    val miss = VectorStore.recommend(pts, 2, Seq(10L, 999999L), Nil, 5)
+    assert(miss.collect().isEmpty)
+    assert(miss.schema == VectorStore.recommend(pts, 2, Seq(10L), Nil, 5).schema)
+    assert(VectorStore.recommend(pts, 2, Seq(10L), Seq(999999L), 5).collect().isEmpty)
+  }
+
+  test("searchBatch: a stored vector finds itself; null vectors never rank") {
+    val qs = pts.filter(col("user_id") === 2 && col("vector_id").isin(2L, 10L, 42L))
+      .select(col("vector_id").as("qid"), col("embedding").as("q"))
+    val top = VectorStore.searchBatch(pts, 2, qs, 3).filter(col("rnk") === 1).collect()
+    assert(top.map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vector_id"),
+      r.getAs[Double]("score"))).toSeq == Seq((2L, 2L, 1.0), (10L, 10L, 1.0), (42L, 42L, 1.0)))
+    // a tenant holding a null embedding, and a null query vector: the
+    // dense kernel drops both (the cross-join + TopK-udaf plan read a
+    // null score as 0.0, ranking the null point among real ones and
+    // answering a null query with k zero-score rows)
+    val withNull = pts.withColumn("embedding",
+      when(col("vector_id") === 10L, lit(null)).otherwise(col("embedding")))
+    val tenantSize = pts.filter(col("user_id") === 2).count().toInt
+    val nullQ = pts.filter(col("vector_id") === 2L)
+      .select(lit(7L).as("qid"), lit(null).cast("array<float>").as("q"))
+    val all = VectorStore.searchBatch(withNull, 2, qs.unionByName(nullQ), tenantSize).collect()
+    assert(!all.exists(_.getAs[Long]("vector_id") == 10L))
+    assert(!all.exists(_.getAs[Long]("qid") == 7L))
+    all.groupBy(_.getAs[Long]("qid")).foreach { case (qid, rows) =>
+      assert(rows.length == tenantSize - 1, s"qid $qid: ${rows.length} rows") }
+    assert(all.map(_.getAs[Long]("qid")).distinct.sorted.toSeq == Seq(2L, 10L, 42L))
+  }
 }
