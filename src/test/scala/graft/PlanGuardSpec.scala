@@ -21,9 +21,10 @@ class PlanGuardSpec extends SparkSpec {
       "l_discount:double,l_shipdate:timestamp"), p)
   }
 
-  test("vector search is one scan + TakeOrderedAndProject (no exchange, no join, no global sort)") {
-    // the query vector is scored as a literal: scan → score → per-
-    // partition k-heap, with no Exchange of any kind and no join
+  test("vector search is broadcast + TakeOrderedAndProject (no global sort)") {
+    // the query vector is broadcast inside the plan as a literal, so
+    // every scan task carries it: scan → score → per-partition k-heap,
+    // with no BroadcastExchange stage, no Exchange of any kind, no join
     val p = plan("vs_search_topk")
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(!p.contains("Exchange"), p)
