@@ -1,10 +1,12 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructField, StructType}
 import graft.functions.VectorFunctions.{md5Long, score}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -30,11 +32,13 @@ object Ann {
     * Uses the TopK partial aggregate: each map task keeps only k
     * candidates per query, so the shuffle is k rows per partition per
     * query — no global sort, no full candidate shuffle (see
-    * graft.ops.TopK).
+    * graft.ops.TopK). Null vectors are dropped on both sides, as in
+    * the dense kernel: the aggregate would rank a null score as 0.0.
     */
   def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val agg = graft.ops.TopK.topk(k)
-    emb.crossJoin(broadcast(queries))
+    emb.filter(col("embedding").isNotNull)
+      .crossJoin(broadcast(queries.filter(col("qv").isNotNull)))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), score(col("embedding"), col("qv")).as("score"), col("vec_id"))
       .groupBy("qid")
@@ -46,11 +50,13 @@ object Ann {
   }
 
   /** Window-function formulation of [[bruteForceTopK]] — shuffles all
-    * candidates; kept as the semantic reference (spec cross-checked).
+    * candidates; kept as the semantic reference (spec cross-checked),
+    * null vectors dropped alike.
     */
   def bruteForceTopKWindow(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-    emb.crossJoin(broadcast(queries))
+    emb.filter(col("embedding").isNotNull)
+      .crossJoin(broadcast(queries.filter(col("qv").isNotNull)))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"), score(col("embedding"), col("qv")).as("score"))
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -70,16 +76,18 @@ object Ann {
     * tie-break — spec-asserted row-equal. The win is constant-factor:
     * the BroadcastNestedLoopJoin materializes a row per PAIR, this
     * kernel touches primitive arrays only (measured ~10× on the
-    * 2000-query oracle corpus). Same shuffle shape: k rows per
-    * partition per query.
+    * 2000-query oracle corpus). A batch and its candidates that fit
+    * [[fastPathMb]] run in one scan job with no shuffle, merged on the
+    * driver ([[denseKernelTopK]]).
     */
   def bruteForceTopKDense(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
     denseKernelTopK(emb, queries, k, Cosine)
 
   /** [[bruteForceTopKDense]] without the final (qid, rnk) order — for
     * callers that consume the edge LIST (joins/aggregates where row
-    * order is irrelevant): the partials merge hash-partitioned on qid
-    * across all cores instead of on one partition.
+    * order is irrelevant): when the partials are too many to merge on
+    * the driver, they merge hash-partitioned on qid across all cores
+    * instead of on one partition.
     */
   def bruteForceTopKDenseUnordered(emb: DataFrame, queries: DataFrame,
       k: Int): DataFrame =
@@ -129,13 +137,18 @@ object Ann {
     * vector's squared norm, computed once per block instead of once
     * per scored pair.
     */
-  private[graft] final class QueryBlock(val ids: Array[Long], val vecs: Array[Array[Double]])
-      extends Serializable {
-    val norms: Array[Double] = vecs.map { q =>
-      var s = 0.0; var i = 0
-      while (i < q.length) { s += q(i) * q(i); i += 1 }
-      s
-    }
+  private[graft] final class QueryBlock(val ids: Array[Long], val vecs: Array[Array[Double]],
+      val norms: Array[Double]) extends Serializable {
+    def this(ids: Array[Long], vecs: Array[Array[Double]]) =
+      this(ids, vecs, vecs.map { q =>
+        var s = 0.0; var i = 0
+        while (i < q.length) { s += q(i) * q(i); i += 1 }
+        s
+      })
+
+    /** Queries `lo until hi`, sharing the vectors and norms. */
+    def slice(lo: Int, hi: Int): QueryBlock =
+      new QueryBlock(ids.slice(lo, hi), vecs.slice(lo, hi), norms.slice(lo, hi))
   }
 
   /** The score a dense kernel ranks by. `raw` scores one corpus row
@@ -269,6 +282,34 @@ object Ann {
       (0 until nq).iterator.flatMap { qi =>
         (0 until bufN(qi)).iterator.map(j => (qb.ids(qi), bufS(qi)(j), bufI(qi)(j)))
       }
+
+    /** The partial candidates packed as one [[Partial]]. */
+    def partial(split: Int, lo: Int): Partial = {
+      val total = bufN.sum
+      val scores = new Array[Double](total); val vids = new Array[Long](total)
+      var off = 0; var qi = 0
+      while (qi < nq) {
+        System.arraycopy(bufS(qi), 0, scores, off, bufN(qi))
+        System.arraycopy(bufI(qi), 0, vids, off, bufN(qi))
+        off += bufN(qi); qi += 1
+      }
+      Partial(split, lo, bufN.clone(), scores, vids)
+    }
+  }
+
+  /** One fast-path task's candidates: corpus split `split` scored
+    * against queries `lo until lo + counts.length` of the sorted
+    * batch. Query `lo + j` has `counts(j)` candidates, stored in
+    * (score desc, id asc) order after those of the queries before it.
+    */
+  private final case class Partial(split: Int, lo: Int, counts: Array[Int],
+      scores: Array[Double], vids: Array[Long]) {
+    def rows(ids: Array[Long]): Iterator[(Long, Double, Long)] = {
+      val starts = counts.scanLeft(0)(_ + _)
+      counts.indices.iterator.flatMap { j =>
+        (starts(j) until starts(j + 1)).iterator.map(i => (ids(lo + j), scores(i), vids(i)))
+      }
+    }
   }
 
   /** Queries per kernel tile. The query side is collected and
@@ -329,9 +370,16 @@ object Ann {
     out
   }
 
-  /** Non-null (id, vector) rows of `df` as (_1 bigint, _2 the stored array). */
-  private def vectorRows(df: DataFrame, id: String, vec: String): DataFrame =
-    df.filter(col(vec).isNotNull).select(col(id).cast("long").as("_1"), col(vec).as("_2"))
+  /** Non-null (id, vector) rows of `df` as (_1 bigint, _2 array<float>
+    * when the vectors are stored as floats, else array<double>).
+    */
+  private def vectorRows(df: DataFrame, id: String, vec: String): DataFrame = {
+    val v = df.schema(vec).dataType match {
+      case ArrayType(FloatType, _) => col(vec)
+      case _                       => col(vec).cast("array<double>")
+    }
+    df.filter(col(vec).isNotNull).select(col(id).cast("long").as("_1"), v.as("_2"))
+  }
 
   /** [[vectorRows]] decoded to primitive doubles on the executors.
     * Float vectors decode with one copy and widen in a loop — bit-equal
@@ -341,19 +389,17 @@ object Ann {
     val spark = rows.sparkSession
     import spark.implicits._
     if (storesFloats(rows)) rows.as[(Long, Array[Float])].map { case (id, f) => (id, widen(f)) }
-    else rows.select(col("_1"), col("_2").cast("array<double>").as("_2"))
-      .as[(Long, Array[Double])]
+    else rows.as[(Long, Array[Double])]
   }
 
   /** [[vectorRows]] collected to the driver, moving the stored vectors
-    * and widening them there. No job when the frame is local.
+    * and widening them there.
     */
   private def collectDoubles(rows: DataFrame): Array[(Long, Array[Double])] = {
     val spark = rows.sparkSession
     import spark.implicits._
     if (storesFloats(rows)) rows.as[(Long, Array[Float])].collect().map { case (id, f) => (id, widen(f)) }
-    else rows.select(col("_1"), col("_2").cast("array<double>").as("_2"))
-      .as[(Long, Array[Double])].collect()
+    else rows.as[(Long, Array[Double])].collect()
   }
 
   private def storesFloats(rows: DataFrame): Boolean = rows.schema("_2").dataType match {
@@ -367,14 +413,29 @@ object Ann {
     d
   }
 
+  /** A [[vectorRows]] vector as doubles, written into `buf` (grown when
+    * too short); returns the buffer, whose first `a.numElements` values
+    * are the vector.
+    */
+  private def decodeInto(a: ArrayData, floats: Boolean, buf: Array[Double]): Array[Double] = {
+    val n = a.numElements()
+    val out = if (buf.length < n) new Array[Double](n) else buf
+    var i = 0
+    if (floats) while (i < n) { out(i) = a.getFloat(i); i += 1 }
+    else while (i < n) { out(i) = a.getDouble(i); i += 1 }
+    out
+  }
+
+  private def decode(a: ArrayData, floats: Boolean): Array[Double] =
+    if (floats) widen(a.toFloatArray()) else a.toDoubleArray()
+
   /** (non-null query count, exact max dim) of a query frame in ONE
-    * job — what both the fast-path bound and the blocked kernel's
-    * packing caps need. Per-partition folds collected to the driver
+    * job — what the blocked kernel's packing caps need when it is
+    * called on its own. Per-partition folds collected to the driver
     * (an agg would add a shuffle, and under AQE a second job); a full
     * pass rather than a head-row probe: a dim-0 first row on a batch
     * whose later rows are wide would make a head-row probe understate
-    * the dim and reinstate the unbounded driver collect the cap exists
-    * to stop.
+    * the dim.
     */
   private def probeQueries(queries: DataFrame): (Long, Int) = {
     val spark = queries.sparkSession
@@ -388,19 +449,96 @@ object Ann {
     (parts.map(_._1).sum, parts.map(_._2).maxOption.getOrElse(0))
   }
 
+  /** One partition of the query fetch: its row count and max dim, and
+    * its rows when they fit the partition's share of the budget.
+    */
+  private final case class FetchPart(n: Long, dim: Int,
+      rows: Option[Array[(Long, Array[Double])]])
+
+  /** The query batch of [[denseKernelTopK]] as (count, max dim, rows).
+    * A frame whose optimized plan is a local relation is decoded from
+    * that relation's rows: no job. Any other frame is read in ONE job
+    * that returns each partition's count, max dim and rows, the rows
+    * only while they fit `budget / partitions` bytes of doubles and
+    * `tile` rows — so the driver never holds more than `budget` of
+    * query doubles. `rows` is None when some partition did not fit.
+    */
+  private def fetchQueries(qRows: DataFrame, tile: Int, budget: Long)
+      : (Long, Int, Option[Array[(Long, Array[Double])]]) = {
+    val floats = storesFloats(qRows)
+    qRows.queryExecution.optimizedPlan match {
+      case lr: LocalRelation =>
+        val rows = lr.data.iterator.map(r => (r.getLong(0), decode(r.getArray(1), floats))).toArray
+        (rows.length.toLong, rows.iterator.map(_._2.length).maxOption.getOrElse(0), Some(rows))
+      case _ =>
+        val scan = qRows.queryExecution.toRdd
+        val share = budget / math.max(1, scan.getNumPartitions)
+        val parts = scan.mapPartitions { it =>
+          var n = 0L; var d = 0; var bytes = 0L
+          var kept = Option(Array.newBuilder[(Long, Array[Double])])
+          it.foreach { r =>
+            val a = r.getArray(1)
+            n += 1; d = math.max(d, a.numElements())
+            bytes += a.numElements() * 8L
+            if (bytes > share || n > tile) kept = None
+            kept.foreach(_ += ((r.getLong(0), decode(a, floats))))
+          }
+          Iterator.single(FetchPart(n, d, kept.map(_.result())))
+        }.collect()
+        val rows =
+          if (parts.forall(_.rows.isDefined)) Some(parts.flatMap(_.rows.get)) else None
+        (parts.map(_.n).sum, parts.map(_.dim).maxOption.getOrElse(0), rows)
+    }
+  }
+
+  /** What one fast-path kernel call that merged on the driver ran: the
+    * physical plan of its corpus scan, its task count and the most
+    * candidates any task sent the merge for one query.
+    */
+  private[graft] final case class KernelRun(corpusPlan: SparkPlan, tasks: Int,
+      maxPerQuery: Int)
+
+  private val kernelRuns =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[KernelRun]]
+
+  /** `body`'s result and the [[KernelRun]]s it made on this thread —
+    * how the plan guards see the plan the kernel executes, which the
+    * returned frame no longer carries.
+    */
+  private[graft] def recordingKernelRuns[T](body: => T): (T, Seq[KernelRun]) = {
+    val outer = kernelRuns.get
+    val runs = scala.collection.mutable.ArrayBuffer.empty[KernelRun]
+    kernelRuns.set(runs)
+    try (body, runs.toSeq) finally kernelRuns.set(outer)
+  }
+
   /** Exact dense top-k of every query in `queries` (qid, qv) against
     * `emb` (vec_id, embedding) under `metric`. Output: qid, vec_id,
     * score, rnk — ordered by (qid, rnk) when `ordered`.
     *
-    * A query frame whose optimized plan is a local relation is taken
-    * as it is (no job); any other frame is probed for (count, dim) in
-    * one job and, when it fits the fast path, collected in one more.
-    * Fast path: the batch broadcasts once and the corpus is scanned
-    * once; each partition keeps ≤k candidates per query, and an
-    * ordered result merges them on ONE partition, so the (qid, rnk)
-    * order is a local sort — no range-sampling job, no second
-    * shuffle. A batch over the dim-aware bound ([[fastPathCap]]) runs
-    * the 2D block-matrix kernel ([[blockedTop]]) instead.
+    * Query fetch, at most one job ([[fetchQueries]]): a local frame is
+    * decoded from its rows; any other is read in one job that returns
+    * per partition the count, the max dim and the rows while they fit
+    * the partition's share of `budget`. A batch over the dim-aware
+    * bound ([[fastPathCap]]) runs the 2D block-matrix kernel
+    * ([[blockedTop]]) with that (count, dim), so no probe runs; a batch
+    * that fits the bound but not one partition's share is collected
+    * again in a second job.
+    *
+    * Fast path, one scan job with no shuffle: the sorted batch
+    * broadcasts once and the corpus is read through its physical plan.
+    * A corpus with fewer splits than cores is read by `cores` tasks
+    * per split, each scoring a contiguous qid shard (the batch's own
+    * size caps the shard count); otherwise each split is one task
+    * scoring every query. Each task keeps ≤k candidates per query
+    * (REPOSE's per-partition local top-k). When the splits × queries
+    * × k candidate slots (16 bytes each, plus a slot of bookkeeping
+    * per split and query) fit `mergeBudget`, they are collected and
+    * merged on the driver in (score desc, id asc) order, and the
+    * result is a local frame in (qid, rnk) order: the kernel has run
+    * when this returns. Otherwise the result is a lazy frame whose
+    * TopK aggregate merges the candidates by qid (on one partition
+    * when `ordered`).
     *
     * `excludeSelf` drops the pair qid == vec_id (the kNN-graph shape);
     * store search_batch keeps it, so a query that is a stored vector
@@ -411,44 +549,119 @@ object Ann {
       metric: Metric,
       tile: Int = defaultKernelTile,
       ordered: Boolean = true,
-      excludeSelf: Boolean = true): DataFrame = {
+      excludeSelf: Boolean = true,
+      budget: Long = fastPathMb << 20,
+      mergeBudget: Long = fastPathMb << 20): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val qRows = vectorRows(queries, "qid", "qv")
-    val local =
-      if (qRows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-        Some(collectDoubles(qRows))
-      else None
-    val (nq, dim) = local match {
-      case Some(rows) => (rows.length.toLong, rows.iterator.map(_._2.length).maxOption.getOrElse(0))
-      case None => probeQueries(queries)
+    val (nq, dim, fetched) = fetchQueries(qRows, tile, budget)
+    if (nq > fastPathCap(dim, tile, budget))
+      return ranked(blockedTop(emb, queries, k, metric, tile, excludeSelf = excludeSelf,
+        probed = Some((nq, dim))), ordered)
+    val rows = fetched.getOrElse(collectDoubles(qRows)).sortBy(_._1)
+    val ids = rows.map(_._1)
+    val corpus = vectorRows(emb, "vec_id", "embedding")
+    val scan = corpus.queryExecution.toRdd
+    val splits = scan.getNumPartitions
+    if (rows.isEmpty || splits == 0) return mergedFrame(spark, ids, Array.empty, splits, k)
+    val sc = spark.sparkContext
+    val bq = sc.broadcast(new QueryBlock(ids, rows.map(_._2)))
+    val floats = storesFloats(corpus)
+    val nShards = if (splits < sc.defaultParallelism) math.min(sc.defaultParallelism, rows.length) else 1
+    val tasks = sc.union((0 until nShards).map { sh =>
+      val (lo, hi) = (sh * rows.length / nShards, (sh + 1) * rows.length / nShards)
+      scan.mapPartitionsWithIndex { (split, it) =>
+        val st = new KernelState(bq.value.slice(lo, hi), k, metric, excludeSelf)
+        var buf = new Array[Double](0)
+        it.foreach { r =>
+          val a = r.getArray(1)
+          buf = decodeInto(a, floats, buf)
+          st.offer(r.getLong(0), buf, 0, a.numElements())
+        }
+        Iterator.single(st.partial(split, lo))
+      }
+    })
+    // 16 bytes per candidate slot (score, id) plus one slot of counts
+    // and merge indices, per (split, query)
+    if (splits.toLong * rows.length * 16L * (k + 1) <= mergeBudget) {
+      val parts = tasks.collect()
+      bq.destroy()
+      Option(kernelRuns.get).foreach(_ += KernelRun(corpus.queryExecution.executedPlan,
+        parts.length, parts.iterator.flatMap(_.counts).maxOption.getOrElse(0)))
+      mergedFrame(spark, ids, parts, splits, k)
+    } else {
+      import spark.implicits._
+      val merged = tasks.flatMap(_.rows(bq.value.ids)).toDF("qid", "score", "vec_id")
+        .groupBy("qid").agg(graft.ops.TopK.topk(k)(col("score"), col("vec_id")).as("top"))
+      // an ordered result merges on ONE partition, so the (qid, rnk)
+      // order is a local sort — no range-sampling job, no second shuffle
+      ranked(if (ordered) merged.coalesce(1) else merged, ordered)
     }
-    val out =
-      if (nq <= fastPathCap(dim, tile)) {
-        val rows = local.getOrElse(collectDoubles(qRows)).sortBy(_._1)
-        val bq = spark.sparkContext.broadcast(
-          new QueryBlock(rows.map(_._1), rows.map(_._2)))
-        // the oracle corpora arrive as a single parquet split — spread
-        // the kernel across cores (kernel output is partition-invariant);
-        // the shuffle moves the stored vectors, widened after it
-        val partials = asDoubles(vectorRows(emb, "vec_id", "embedding")
-            .repartition(spark.sparkContext.defaultParallelism))
-          .mapPartitions { it =>
-            val st = new KernelState(bq.value, k, metric, excludeSelf)
-            it.foreach { case (vid, v) => st.offer(vid, v, 0, v.length) }
-            st.rows
-          }.toDF("qid", "score", "vec_id")
-        val merged = partials.groupBy("qid")
-          .agg(graft.ops.TopK.topk(k)(col("score"), col("vec_id")).as("top"))
-        if (ordered) merged.coalesce(1) else merged
-      } else
-        blockedTop(emb, queries, k, metric, tile, excludeSelf = excludeSelf,
-          probed = Some((nq, dim)))
-    val ranked = out
+  }
+
+  /** A per-qid TopK frame (qid, top) as kernel output rows. */
+  private def ranked(top: DataFrame, ordered: Boolean): DataFrame = {
+    val out = top
       .select(col("qid"), posexplode(col("top")))
       .select(col("qid"), col("col.id").as("vec_id"), col("col.score").as("score"),
               (col("pos") + 1).cast("long").as("rnk"))
-    if (ordered) ranked.orderBy("qid", "rnk") else ranked
+    if (ordered) out.orderBy("qid", "rnk") else out
+  }
+
+  /** The schema of kernel output, as the TopK-aggregate form has it. */
+  private val kernelSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false),
+    StructField("vec_id", LongType, nullable = true),
+    StructField("score", DoubleType, nullable = true),
+    StructField("rnk", LongType, nullable = false)))
+
+  /** The fast-path candidates merged on the driver: per qid, the k
+    * best (score desc, id asc) across the runs of every task that
+    * scored it, as a local frame in (qid, rnk) order. `ids` is the
+    * sorted batch; equal qids merge into one list, as the TopK
+    * aggregate groups them.
+    */
+  private def mergedFrame(spark: SparkSession, ids: Array[Long], parts: Array[Partial],
+      splits: Int, k: Int): DataFrame = {
+    val nq = ids.length
+    // run r = qi * splits + split: where query qi's candidates from
+    // that split start, in which partial, and how many there are
+    val runPart = Array.fill(nq * splits)(-1)
+    val runStart = new Array[Int](nq * splits)
+    val runLen = new Array[Int](nq * splits)
+    parts.iterator.zipWithIndex.foreach { case (p, pi) =>
+      var off = 0; var j = 0
+      while (j < p.counts.length) {
+        val r = (p.lo + j) * splits + p.split
+        runPart(r) = pi; runStart(r) = off; runLen(r) = p.counts(j)
+        off += p.counts(j); j += 1
+      }
+    }
+    val out = new java.util.ArrayList[Row]()
+    var a = 0
+    while (a < nq) {
+      var b = a + 1
+      while (b < nq && ids(b) == ids(a)) b += 1
+      val pos = new Array[Int]((b - a) * splits)
+      var rnk = 1L; var more = true
+      while (rnk <= k && more) {
+        // the best head among the group's runs
+        var best = -1; var bs = 0.0; var bi = 0L; var ri = 0
+        while (ri < pos.length) {
+          val r = a * splits + ri
+          if (runPart(r) >= 0 && pos(ri) < runLen(r)) {
+            val p = parts(runPart(r)); val at = runStart(r) + pos(ri)
+            val (s, i) = (p.scores(at), p.vids(at))
+            if (best < 0 || s > bs || (s == bs && i < bi)) { best = ri; bs = s; bi = i }
+          }
+          ri += 1
+        }
+        if (best < 0) more = false
+        else { out.add(Row(ids(a), bi, bs, rnk)); pos(best) += 1; rnk += 1 }
+      }
+      a = b
+    }
+    spark.createDataFrame(out, kernelSchema)
   }
 
   /** Corpus rows per kernel block on the blocked path: one block is
@@ -457,7 +670,12 @@ object Ann {
     */
   private[graft] val defaultKernelBlockRows: Int = 1 << 13
 
-  /** Fast-path driver-memory bound in MB (default 64). Deployment
+  /** Fast-path driver-memory bound in MB (default 64): the most the
+    * dense kernel's driver holds of query doubles (the batch fetch and
+    * its broadcast) and, separately, of partial candidates being
+    * merged. A batch fetch gives each query partition an equal share
+    * of it; a merge whose candidates exceed it runs as a TopK
+    * aggregate on the executors instead. Deployment
     * knob for the dispatch-crossover tradeoff — MEASURED r18 (the §5
     * memory-vs-latency note): at 12k queries × 1024-d (96 MB packed,
     * 1.5× over the default cap) against a 12k × 1024-d corpus on
@@ -488,16 +706,16 @@ object Ann {
 
   /** Dim-aware bound on the one-broadcast fast path: the whole query
     * batch is collected to the driver and broadcast, so the bound
-    * caps DRIVER memory (and broadcast size) at [[fastPathMb]] of
-    * packed query doubles — 2× the 32 MB tile measured fastest at
-    * 1024-d (ScaleRound15Ops), 8192 queries at the reference dim. An
+    * caps DRIVER memory (and broadcast size) at `budget` (default
+    * [[fastPathMb]]) of packed query doubles — 2× the 32 MB tile
+    * measured fastest at 1024-d (ScaleRound15Ops), 8192 queries at
+    * the reference dim. An
     * explicitly smaller caller tile always wins (specs force
     * multi-tile with tile=4).
     */
-  private[graft] def fastPathCap(dim: Int, tile: Int): Int =
+  private[graft] def fastPathCap(dim: Int, tile: Int, budget: Long = fastPathMb << 20): Int =
     if (dim <= 0) tile
-    else math.max(1,
-      math.min(tile.toLong, (fastPathMb << 20) / (dim * 8)).toInt)
+    else math.max(1, math.min(tile.toLong, budget / (dim * 8L)).toInt)
 
   /** Dim-aware packing bounds for the blocked kernel: one tile row
     * materializes tile×dim doubles in a single shuffle row / task,
@@ -531,11 +749,7 @@ object Ann {
   def bruteForceTopKBlocked(emb: DataFrame, queries: DataFrame, k: Int,
       tile: Int = defaultKernelTile,
       blockRows: Int = defaultKernelBlockRows): DataFrame =
-    blockedTop(emb, queries, k, Cosine, tile, blockRows)
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("vec_id"), col("col.score").as("score"),
-              (col("pos") + 1).cast("long").as("rnk"))
-      .orderBy("qid", "rnk")
+    ranked(blockedTop(emb, queries, k, Cosine, tile, blockRows), ordered = true)
 
   /** 2D block-matrix dense kernel (SUMMA-style): the huge-query-batch
     * × huge-corpus case where neither side fits one broadcast.
@@ -865,14 +1079,15 @@ object Ann {
 
   /** Multiprobe LSH top-k: candidates share a signature bucket with
     * the query up to hamming distance `probeDist`; exact cosine
-    * rescoring of candidates only.
+    * rescoring of candidates only. Null vectors are neither queries
+    * nor candidates.
     */
   def lshTopK(emb: DataFrame, queryIds: Seq[Long], nPlanes: Int, dim: Int,
               probeDist: Int, k: Int): DataFrame = {
     // buckets are a map-side projection (bucketCol) and ranking is the
     // map-side partial TopK aggregate, so the only shuffles are the
     // tiny query broadcast and k rows per partition per query.
-    val withSig = withBucket(emb, nPlanes, dim)
+    val withSig = withBucket(emb.filter(col("embedding").isNotNull), nPlanes, dim)
     val q = withSig.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
               col("bucket").as("qb"))

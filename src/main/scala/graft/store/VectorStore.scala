@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -188,24 +189,44 @@ object VectorStore {
   /** Point retrieve by id list (the vector-DB `retrieve` API — the
     * get-by-primary-key read beside scroll/search): partition-pruned
     * scan + id IN-filter, stored vector included (retrieve implies
-    * with_vectors in the reference's client usage). Ordering by
-    * vector_id keeps pages deterministic.
+    * with_vectors in the reference's client usage). Rows come in
+    * vector_id order, duplicates kept. When the pruned scan has fewer
+    * splits than cores, the hits gather into one partition and sort
+    * there: one job, no range-sampling job, no shuffle. A tenant with
+    * more splits keeps its parallel scan and the global sort.
     */
-  def retrieve(coll: DataFrame, userId: Any, ids: Seq[Long]): DataFrame =
-    coll.filter(col("user_id") === userId && col("vector_id").isin(ids: _*))
+  def retrieve(coll: DataFrame, userId: Any, ids: Seq[Long]): DataFrame = {
+    val hits = coll.filter(col("user_id") === userId && col("vector_id").isin(ids: _*))
       .select(outCols(coll) :+ col("embedding"): _*)
-      .orderBy("vector_id")
+    if (scanSplits(hits) < hits.sparkSession.sparkContext.defaultParallelism)
+      hits.coalesce(1).sortWithinPartitions("vector_id")
+    else hits.orderBy("vector_id")
+  }
+
+  /** Splits the file scans of `df` read; Int.MaxValue when its plan has
+    * a leaf that is not a file scan.
+    */
+  private def scanSplits(df: DataFrame): Int = {
+    val leaves = df.queryExecution.executedPlan.collectLeaves()
+    if (leaves.forall(_.isInstanceOf[FileSourceScanExec]))
+      leaves.map(_.asInstanceOf[FileSourceScanExec].inputRDD.getNumPartitions).sum
+    else Int.MaxValue
+  }
 
   /** Batched search (the vector-DB `search_batch` API): MANY query
     * vectors against ONE user's collection through the dense cosine
     * kernel ([[graft.ann.Ann.denseKernelTopK]], self-exclusion off: a
     * query that is a stored vector finds itself). The batch
-    * broadcasts once, the partition-pruned collection is scanned
-    * once, each partition keeps ≤k candidates per query, and the
-    * bounded TopK aggregate merges them on one partition — never a
-    * global sort. `queries` is (qid, q); null query vectors and null
-    * stored vectors are dropped. Output: (qid, rnk, vector_id,
-    * score), ordered by (qid, rnk).
+    * broadcasts once and the partition-pruned collection is scanned
+    * once with no shuffle (a tenant with fewer splits than cores is
+    * read by one task per core, each scoring a qid shard); each task
+    * keeps ≤k candidates per query, merged on the driver — never a
+    * global sort. A local query frame needs no job of its own, so a
+    * batch fitting [[graft.ann.Ann.fastPathMb]] is one scan job, run
+    * inside this call; the returned frame is local. `queries` is
+    * (qid, q); null query vectors and null stored vectors are
+    * dropped. Output: (qid, rnk, vector_id, score), ordered by
+    * (qid, rnk).
     */
   def searchBatch(coll: DataFrame, userId: Any, queries: DataFrame,
                   k: Int): DataFrame =
@@ -367,13 +388,16 @@ object VectorStore {
     * when the query batch is itself large (one query per user at
     * millions of users won't fit a driver broadcast): the join then
     * shuffles on user_id, co-partitioned with the collection layout.
+    * Null stored and query vectors are dropped (the TopK aggregate
+    * would rank a null score as 0.0).
     * Output: (user_id, rnk, vector_id, score), rnk 1..k per user.
     */
   def searchAll(coll: DataFrame, queries: DataFrame, k: Int,
                 broadcastQueries: Boolean = true): DataFrame = {
     val agg = graft.ops.TopK.topk(k)
-    val qs = if (broadcastQueries) broadcast(queries) else queries
-    coll.join(qs, "user_id")
+    val nonNull = queries.filter(col("q").isNotNull)
+    val qs = if (broadcastQueries) broadcast(nonNull) else nonNull
+    coll.filter(col("embedding").isNotNull).join(qs, "user_id")
       .select(col("user_id"), score(col("embedding"), col("q")).as("score"),
               col("vector_id"))
       .groupBy("user_id")

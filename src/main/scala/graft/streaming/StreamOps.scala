@@ -750,9 +750,10 @@ object StreamOps {
                            tile: Int = graft.ann.Ann.defaultKernelTile)
                           (onBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // each micro-batch pays the kernel's one (count, dim) probe job
-    // before its fetch; the probe sizes the driver collect from the
-    // batch itself, so a batch wider than the collection stays bounded
+    // each micro-batch pays the kernel's one fetch job, which returns
+    // the batch's (count, dim) with its rows; the driver keeps the rows
+    // only within the fast-path budget, so a batch wider than the
+    // collection stays bounded
     queries.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>

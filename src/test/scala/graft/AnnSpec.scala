@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ann.Ann
 
-class AnnSpec extends SparkSpec {
+class AnnSpec extends SparkSpec with JobStats {
 
   private def emb = Tables.embeddings(spark, sfDir)
 
@@ -51,15 +52,16 @@ class AnnSpec extends SparkSpec {
     a.zip(d).foreach { case (x, y) => assert(x == y, s"blocked: $x != $y") }
   }
 
-  test("dense kernels stay exact at 6-dp boundaries, k-th place ties and degenerate vectors") {
+  /** 7-d (not a multiple of four). Around e1, raw cosines straddle the
+    * 0.9000005 rounding boundary: four candidates round to 0.900001
+    * (a tie at k = 3 that only the id decides), three to 0.900000
+    * (within 1e-6 of the k-th score, so never pruned) and one to
+    * 0.899999; plus a zero vector, two copies of a candidate (cosine
+    * 1, distance 0 ties), 19 seeded fillers and a null vector.
+    */
+  private def boundaryCorpus: DataFrame = {
     val s = spark
     import s.implicits._
-    // 7-d (not a multiple of four). Around e1, raw cosines straddle the
-    // 0.9000005 rounding boundary: four candidates round to 0.900001
-    // (a tie at k = 3 that only the id decides), three to 0.900000
-    // (within 1e-6 of the k-th score, so never pruned) and one to
-    // 0.899999; plus a zero vector, two copies of a candidate (cosine
-    // 1, distance 0 ties), 19 seeded fillers and a null vector.
     val dim = 7
     def unit(i: Int) = Array.tabulate(dim)(d => if (d == i) 1.0 else 0.0)
     def atCos(c: Double) = { val v = unit(0); v(1) = math.sqrt(1 / (c * c) - 1); v }
@@ -71,15 +73,21 @@ class AnnSpec extends SparkSpec {
       Seq(9L -> new Array[Double](dim)) ++
       (10 until 29).map(i => i.toLong -> Array.fill(dim)(rnd.nextDouble() * 2 - 1)) ++
       Seq(30L -> atCos(0.9000006), 31L -> atCos(0.9000006), 99L -> (null: Array[Double]))
-    val e = rows.toDF("vec_id", "embedding")
+    rows.toDF("vec_id", "embedding")
+  }
+
+  private def tuples(df: DataFrame): Seq[(Long, Long, Double, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+
+  private def asQueries(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  test("dense kernels stay exact at 6-dp boundaries, k-th place ties and degenerate vectors") {
+    val e = boundaryCorpus
     val nonNull = e.filter(col("embedding").isNotNull)
-    val q = nonNull.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+    val q = asQueries(nonNull)
     for (k <- Seq(3, 5)) {
-      // the cross-join form reads a null score as 0.0 where the kernels
-      // drop null vectors, so it sees the corpus without them
-      val want = tuples(Ann.bruteForceTopK(nonNull, q, k))
+      val want = tuples(Ann.bruteForceTopK(e, q, k))
       assert(want.filter(_._1 == 0L).map(_._2).take(3) == Seq(1L, 3L, 6L), want)
       assert(tuples(Ann.bruteForceTopKDense(e, q, k)) == want, s"dense k=$k")
       assert(tuples(Ann.bruteForceTopKBlocked(e, q, k, tile = 3, blockRows = 4)) == want,
@@ -100,6 +108,114 @@ class AnnSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(gotDist == wantDist, s"distances k=$k")
     }
+  }
+
+  /** `df` written as ONE parquet file (one row group) and read back. */
+  private def parquetCopy(df: DataFrame, files: Int = 1): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ann").toString + "/t"
+    df.repartition(files).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** `body` with the session's SQL conf `kvs` set, restored after. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val old = kvs.map { case (key, _) => key -> conf.getOption(key) }
+    kvs.foreach { case (key, v) => conf.set(key, v) }
+    try body
+    finally old.foreach {
+      case (key, Some(v)) => conf.set(key, v)
+      case (key, None)    => conf.unset(key)
+    }
+  }
+
+  test("dense kernel fast path is exact for every shard and split shape") {
+    val cores = spark.sparkContext.defaultParallelism
+    val e = boundaryCorpus
+    val q = asQueries(e)
+    val one = parquetCopy(e)
+    val wide = parquetCopy(e, files = 2 * cores)
+    def splits(df: DataFrame) = df.queryExecution.toRdd.getNumPartitions
+    assert(splits(one) == 1 && splits(wide) >= cores)
+    for (k <- Seq(3, 5)) {
+      // nq = 7 over `cores` shards (does not divide), nq = 2 < cores,
+      // and the whole batch; against a one-split corpus (sharded), a
+      // corpus with ≥ cores splits (one task per split) and a local one
+      for (nq <- Seq(7, 2, 31); corpus <- Seq(one, wide, e)) {
+        val qs = q.filter(col("qid") < nq)
+        val want = tuples(Ann.bruteForceTopK(e, qs, k))
+        val (got, runs) = Ann.recordingKernelRuns(Ann.bruteForceTopKDense(corpus, qs, k))
+        assert(tuples(got) == want, s"k=$k nq=$nq splits=${splits(corpus)}")
+        val tasks = if (splits(corpus) < cores) splits(corpus) * math.min(cores, nq)
+                    else splits(corpus)
+        assert(runs.map(_.tasks) == Seq(tasks), runs)
+        assert(runs.forall(_.maxPerQuery <= k), runs)
+      }
+      // a one-row-group file planned as two splits, one of them empty:
+      // the open cost sets the split size to 60% of the file
+      val file = new java.io.File(one.inputFiles.head.stripPrefix("file:"))
+      withConf("spark.sql.files.openCostInBytes" -> (file.length * 6 / 10).toString) {
+        val split = spark.read.parquet(file.getParent)
+        assert(splits(split) == 2)
+        assert(tuples(Ann.bruteForceTopKDense(split, q, k)) == tuples(Ann.bruteForceTopK(e, q, k)),
+          s"empty split k=$k")
+      }
+    }
+  }
+
+  test("dense kernel fallbacks stay exact: shuffle merge, skewed fetch, over-cap batch") {
+    val e = boundaryCorpus
+    val c = parquetCopy(e)
+    val q = asQueries(e)
+    for (k <- Seq(3, 5)) {
+      val want = tuples(Ann.bruteForceTopK(e, q, k))
+      // candidates over the merge bound: a lazy TopK-aggregate frame
+      // with the driver-merged frame's rows and schema
+      val (lazyMerge, runs) = Ann.recordingKernelRuns(
+        Ann.denseKernelTopK(c, q, k, Ann.Cosine, mergeBudget = 1))
+      assert(runs.isEmpty)
+      assert(lazyMerge.queryExecution.executedPlan.toString.contains("partial_topkaggregator"))
+      assert(tuples(lazyMerge) == want, s"shuffle merge k=$k")
+      assert(lazyMerge.schema == Ann.bruteForceTopKDense(c, q, k).schema)
+      assert(lazyMerge.schema == Ann.bruteForceTopK(e, q, k).schema)
+      // a scanned batch in two partitions of 20 and 11 rows: the budget
+      // fits the batch (7-d, 56 bytes a query) but not the big
+      // partition's half share, so the rows are fetched a second time
+      val scanned = asQueries(c.filter(col("vec_id") < 20))
+        .unionByName(asQueries(c.filter(col("vec_id") >= 20)))
+      val nq = e.filter(col("embedding").isNotNull).count()
+      val fit = jobsOf(assert(tuples(Ann.bruteForceTopKDense(c, scanned, k)) == want))
+      val skew = jobsOf(assert(tuples(
+        Ann.denseKernelTopK(c, scanned, k, Ann.Cosine, budget = nq * 56)) == want))
+      assert(fit == 2 && skew == 3, s"fit $fit, skewed $skew jobs")
+      // over the cap (tile 4): the blocked kernel takes the fetch job's
+      // (count, dim), so the dispatch runs no more jobs than the
+      // blocked kernel with its own probe
+      val over = jobsOf(assert(tuples(
+        Ann.denseKernelTopK(c, scanned, k, Ann.Cosine, tile = 4)) == want))
+      val blocked = jobsOf(Ann.bruteForceTopKBlocked(c, scanned, k, tile = 4).collect())
+      assert(over == blocked, s"dispatched $over vs blocked $blocked jobs")
+    }
+  }
+
+  test("cross-join and LSH top-k drop null vectors on both sides") {
+    // vector 10 nulled, and a null query: the TopK aggregate would
+    // rank a null score as 0.0 among real ones and answer the null
+    // query with k rows of 0.0
+    val nulled = emb.withColumn("embedding",
+      when(col("vec_id") === 10L, lit(null)).otherwise(col("embedding")))
+    val q = asQueries(nulled.filter(col("vec_id").isin(2L, 10L, 42L)))
+    val all = Ann.bruteForceTopK(nulled, q, 600).collect()
+    assert(!all.exists(_.getAs[Long]("vec_id") == 10L))
+    assert(all.map(_.getAs[Long]("qid")).distinct.sorted.toSeq == Seq(2L, 42L))
+    assert(all.length == 2 * 498)
+    assert(tuples(Ann.bruteForceTopKWindow(nulled, q, 5)) == tuples(Ann.bruteForceTopK(nulled, q, 5)))
+    assert(tuples(Ann.bruteForceTopKDense(nulled, q, 5)) == tuples(Ann.bruteForceTopK(nulled, q, 5)))
+    val lsh = Ann.lshTopK(nulled, Seq(2L, 10L, 42L), nPlanes = 2, dim = 64, probeDist = 2,
+      k = 600).collect()
+    assert(!lsh.exists(_.getAs[Long]("vec_id") == 10L))
+    assert(!lsh.exists(_.getAs[Long]("qid") == 10L))
+    assert(lsh.forall(r => !r.isNullAt(2)))
   }
 
   test("unordered dense kernel: same row SET, no final range sort") {

@@ -1,29 +1,33 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.ann.Ann
 import graft.store.VectorStore
 
-/** Spark jobs per store read. Each job costs scheduling time that a
-  * point read cannot hide, so the job counts of the read paths are
-  * pinned: a literal-scored search is one job, recommend one fetch
-  * plus one search, and the dense kernel needs no dim probe for a
-  * local query batch and one for any other.
+/** Spark jobs and shuffle bytes of the work `body` starts on the
+  * shared session (map-stage jobs of adaptive plans included).
   */
-class JobCountSpec extends SparkSpec {
+trait JobStats { self: SparkSpec =>
 
-  /** Jobs started by `body` (map-stage jobs of adaptive plans included). */
-  private def jobsOf(body: => Any): Int = {
+  final case class Stats(jobs: Int, shuffleWriteBytes: Long)
+
+  def statsOf(body: => Any): Stats = {
     val sc = spark.sparkContext
     val group = s"job-count-${System.nanoTime()}"
-    val n = new AtomicInteger
+    val jobs = new AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new AtomicLong
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+        if (ours(e.properties)) { jobs.incrementAndGet(); e.stageIds.foreach(stages.add(_)) }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "job count")
@@ -33,8 +37,19 @@ class JobCountSpec extends SparkSpec {
       ListenerBridge.drain(sc)
       sc.removeSparkListener(listener)
     }
-    n.get
+    Stats(jobs.get, written.get)
   }
+
+  def jobsOf(body: => Any): Int = statsOf(body).jobs
+}
+
+/** Spark jobs per store read. Each job costs scheduling time that a
+  * point read cannot hide, so the job counts of the read paths are
+  * pinned: a literal-scored search is one job, recommend one fetch
+  * plus one search, retrieve one job, and the dense kernel one scan
+  * job plus one fetch job for a query frame that is not local.
+  */
+class JobCountSpec extends SparkSpec with JobStats {
 
   private def pts = VectorStore.points(spark, sfDir)
   private def emb = Tables.embeddings(spark, sfDir)
@@ -52,11 +67,28 @@ class JobCountSpec extends SparkSpec {
     assert(rec <= 2, s"recommend: $rec jobs")
     val qs = Seq((1L, q42), (2L, q7)).toDF("qid", "q")
     val batch = jobsOf(VectorStore.searchBatch(coll, 2, qs, 5).collect())
-    assert(batch <= 3, s"searchBatch: $batch jobs")
+    assert(batch == 1, s"searchBatch: $batch jobs")
+    val got = jobsOf(VectorStore.retrieve(coll, 2, Seq(42L, 10L, 999999L)).collect())
+    assert(got == 1, s"retrieve: $got jobs")
     val e = emb
     val knn = jobsOf(Ann.bruteForceTopKDense(e,
       e.filter(col("vec_id") < 40).select(col("vec_id").as("qid"), col("embedding").as("qv")),
       5).collect())
-    assert(knn <= 5, s"bruteForceTopKDense: $knn jobs")
+    assert(knn <= 2, s"bruteForceTopKDense: $knn jobs")
+  }
+
+  test("the dense kernel shuffles nothing on a corpus with at least as many splits as cores") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wide").toString + "/emb"
+    val cores = spark.sparkContext.defaultParallelism
+    emb.repartition(2 * cores).write.parquet(dir)
+    val wide = spark.read.parquet(dir)
+    assert(wide.queryExecution.toRdd.getNumPartitions >= cores)
+    val q = emb.filter(col("vec_id") < 40).select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val st = statsOf(Ann.bruteForceTopKDense(wide, q, 5).collect())
+    assert(st.jobs <= 2, s"${st.jobs} jobs")
+    assert(st.shuffleWriteBytes == 0L, s"${st.shuffleWriteBytes} shuffle bytes written")
+    val (got, runs) = Ann.recordingKernelRuns(Ann.bruteForceTopKDense(wide, q, 5))
+    assert(runs.map(_.tasks) == Seq(wide.queryExecution.toRdd.getNumPartitions), runs)
+    assert(got.collect().toSeq == Ann.bruteForceTopK(emb, q, 5).collect().toSeq)
   }
 }

@@ -49,11 +49,30 @@ class PlanGuardSpec extends SparkSpec {
         assert(pq.contains("PartitionFilters") && pq.contains("user_id"),
           s"$q: $pq")
       }
-    // batched search additionally merges per-query via the bounded
-    // TopK partial aggregate — one pruned scan, never |queries| jobs
-    val pb = plan("vs_search_batch")
-    assert(pb.contains("PartitionFilters") && pb.contains("user_id"), pb)
-    assert(pb.contains("partial_topkaggregator"), pb)
+    // batched search runs the dense kernel inside the call: its one
+    // corpus scan is pruned and shuffles nothing, and each task sends
+    // the driver merge ≤k candidates per query — one pruned scan,
+    // never |queries| jobs, never an unbounded candidate merge
+    val (pb, runs) = kernelPlans("vs_search_batch")
+    assert(runs.size == 1, runs)
+    val scan = runs.head.corpusPlan.toString
+    // a pruning predicate on user_id, not just the inferred isnotnull
+    val pruned = runs.head.corpusPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.partitionFilters
+    }.flatten.filterNot(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull])
+    assert(pruned.exists(_.references.exists(_.name == "user_id")), scan)
+    assert(!scan.contains("Exchange"), scan)
+    assert(runs.head.maxPerQuery <= 5, runs)
+    assert(!pb.contains("Exchange"), pb)
+  }
+
+  /** The plan of query `name` and the dense-kernel runs building it
+    * made: the kernel executes inside the call, so the plan it ran is
+    * in the run record, not in the returned frame.
+    */
+  private def kernelPlans(name: String): (String, Seq[graft.ann.Ann.KernelRun]) = {
+    val (df, runs) = graft.ann.Ann.recordingKernelRuns(SparkEntry.queries(name)(spark, sfDir))
+    (df.queryExecution.explainString(FormattedMode), runs)
   }
 
   test("batched ANN uses the map-side partial TopK aggregate") {
@@ -877,11 +896,16 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("two-NN ranks via the dense kernel + TopK merge — no pair-frame window") {
-    val p = plan("emb_twonn_id")
+    val (p, runs) = kernelPlans("emb_twonn_id")
     // the 4M-pair row_number formulation this replaced carried a
-    // Window over every pair; the kernel path must carry none
+    // Window over every pair; neither the query nor the kernel's scan
+    // may carry one, and the ranking must come from one dense-kernel
+    // run whose tasks send ≤k candidates per query to the merge
     assert(!p.contains("Window"), p)
-    assert(p.contains("MapPartitions"), p)
+    assert(runs.size == 1, runs)
+    val scan = runs.head.corpusPlan.toString
+    assert(!scan.contains("Window") && !scan.contains("Exchange"), scan)
+    assert(runs.head.maxPerQuery <= 2, runs)
   }
 
   test("bloom screen probes via a BROADCAST semi-join, never a shuffled one") {

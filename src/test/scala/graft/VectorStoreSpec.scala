@@ -332,4 +332,41 @@ class VectorStoreSpec extends SparkSpec {
       assert(rows.length == tenantSize - 1, s"qid $qid: ${rows.length} rows") }
     assert(all.map(_.getAs[Long]("qid")).distinct.sorted.toSeq == Seq(2L, 10L, 42L))
   }
+
+  test("searchAll drops null stored and query vectors") {
+    // tenant 2 with vector 10's embedding nulled, and a null query for
+    // tenant 3: the TopK aggregate would rank the null point at 0.0
+    // among real ones and answer the null query with k rows of 0.0
+    val withNull = pts.withColumn("embedding",
+      when(col("vector_id") === 10L, lit(null)).otherwise(col("embedding")))
+    val qs = pts.filter(col("vector_id") === 42L).select(col("user_id"), col("embedding").as("q"))
+      .unionByName(pts.filter(col("vector_id") === 3L)
+        .select(col("user_id"), lit(null).cast("array<float>").as("q")))
+    val tenantSize = pts.filter(col("user_id") === 2).count().toInt
+    val all = VectorStore.searchAll(withNull, qs, tenantSize).collect()
+    assert(!all.exists(_.getAs[Long]("vector_id") == 10L))
+    assert(all.map(_.getAs[Long]("user_id")).distinct.toSeq == Seq(2L))
+    assert(all.length == tenantSize - 1)
+    assert(all.forall(r => !r.isNullAt(3)))
+  }
+
+  test("retrieve keeps vector_id order and duplicates on thin and wide tenants") {
+    // vector 12 stored twice; 999999 is not stored
+    val twice = pts.unionByName(pts.filter(col("vector_id") === 12L))
+    val ids = Seq(20L, 4L, 12L, 999999L)
+    def got(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getAs[Long]("vector_id")).toSeq
+    val thin = VectorStore.retrieve(twice, 4, ids)
+    assert(got(thin) == Seq(4L, 12L, 12L, 20L))
+    assert(!thin.queryExecution.executedPlan.toString.contains("Exchange"))
+    // a tenant in at least as many splits as cores keeps one scan task
+    // per split and sorts through the range exchange
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-retrieve").toString + "/c"
+    twice.repartition(2 * cores).write.parquet(dir)
+    val wideColl = spark.read.parquet(dir)
+    assert(wideColl.queryExecution.toRdd.getNumPartitions >= cores)
+    val wide = VectorStore.retrieve(wideColl, 4, ids)
+    assert(got(wide) == Seq(4L, 12L, 12L, 20L))
+    assert(!wide.queryExecution.executedPlan.toString.contains("Coalesce"))
+  }
 }
