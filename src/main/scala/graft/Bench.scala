@@ -104,29 +104,7 @@ object Bench {
     // label table) — built once per (JVM, dir), used by many queries
     try SparkEntry.prewarmShared(spark, sfDir)
     catch { case _: Throwable => }
-    // Per-query checkpoint eviction (§7-4): every query's lazy
-    // localCheckpoint blocks stay in the block manager after its
-    // timing, so inventory GROWTH inflated later queries' times
-    // within a bench session (cross-round drift tracked inventory
-    // size). After each query's runs, unpersist everything persisted
-    // since the fixtures — EXCEPT the shared frames above, whose
-    // truncated lineage cannot recompute (unpersisting them would
-    // turn later queries' reads into errors, not slowdowns).
-    def protectedIds: Set[Int] = {
-      def ids(dfs: Iterable[org.apache.spark.sql.DataFrame]): Set[Int] =
-        dfs.flatMap(_.queryExecution.analyzed.collect {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-        }).toSet
-      ids(SparkEntry.sharedCellFrames) ++
-        ids(graft.dedup.Dedup.sharedLabelFrames)
-    }
-    def evict(keep: Set[Int]): Unit = {
-      val prot = protectedIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep.contains(id) && !prot.contains(id))
-          rdd.unpersist(blocking = false)
-      }
-    }
+    def evict(keep: Set[Int]): Unit = Bench.evict(spark, keep)
     evict(Set.empty) // clear the warmup pass's per-query blocks
     val fixtureIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     def time(name: String): Double = {
@@ -195,6 +173,30 @@ object Bench {
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$runs,""" +
       s""""queries":$qs,"baseline":$baseline,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Per-query eviction (§7-4), run after each timed run: every
+    * query's lazy localCheckpoint blocks stay in the block manager
+    * after its timing, so inventory GROWTH inflated later queries'
+    * times within a bench session (cross-round drift tracked inventory
+    * size). Unpersists everything persisted except `keep` (the
+    * fixtures) and the shared frames, whose truncated lineage cannot
+    * recompute (unpersisting them would turn later queries' reads into
+    * errors, not slowdowns). The store's prepared tenant scans are
+    * dropped too, so no timed run reads a scan planned by an earlier
+    * one.
+    */
+  private[graft] def evict(spark: SparkSession, keep: Set[Int]): Unit = {
+    def ids(dfs: Iterable[org.apache.spark.sql.DataFrame]): Set[Int] =
+      dfs.flatMap(_.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }).toSet
+    val prot = ids(SparkEntry.sharedCellFrames) ++ ids(graft.dedup.Dedup.sharedLabelFrames)
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!keep.contains(id) && !prot.contains(id))
+        rdd.unpersist(blocking = false)
+    }
+    graft.store.TenantScans.clear()
   }
 
   /** The newest `BENCH_r*.json` in `dir` taken at `cpus` cores and the

@@ -1,6 +1,8 @@
 package graft.ann
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SparkPlan
@@ -417,7 +419,7 @@ object Ann {
     * too short); returns the buffer, whose first `a.numElements` values
     * are the vector.
     */
-  private def decodeInto(a: ArrayData, floats: Boolean, buf: Array[Double]): Array[Double] = {
+  private[graft] def decodeInto(a: ArrayData, floats: Boolean, buf: Array[Double]): Array[Double] = {
     val n = a.numElements()
     val out = if (buf.length < n) new Array[Double](n) else buf
     var i = 0
@@ -512,6 +514,22 @@ object Ann {
     try (body, runs.toSeq) finally kernelRuns.set(outer)
   }
 
+  /** A dense-kernel corpus: the rows of a planned scan, with the
+    * bigint id at ordinal `id` and the vector at `vec` (stored as
+    * floats when `floats`, else doubles); `plan` is the scan's
+    * executed plan. Rows with a null vector are skipped.
+    */
+  private[graft] final case class Corpus(rows: RDD[InternalRow], id: Int, vec: Int,
+      floats: Boolean, plan: SparkPlan)
+
+  private[graft] object Corpus {
+    /** The non-null (vec_id, embedding) rows of `emb`, planned now. */
+    def of(emb: DataFrame): Corpus = {
+      val c = vectorRows(emb, "vec_id", "embedding")
+      Corpus(c.queryExecution.toRdd, 0, 1, storesFloats(c), c.queryExecution.executedPlan)
+    }
+  }
+
   /** Exact dense top-k of every query in `queries` (qid, qv) against
     * `emb` (vec_id, embedding) under `metric`. Output: qid, vec_id,
     * score, rnk — ordered by (qid, rnk) when `ordered`.
@@ -544,15 +562,20 @@ object Ann {
     * store search_batch keeps it, so a query that is a stored vector
     * finds itself. Null vectors (failed embed jobs leave them behind)
     * cannot rank and are dropped on both sides.
+    *
+    * `held` is a corpus scan the caller has already planned (the store's
+    * prepared tenant scan); the fast path then reads it instead of
+    * planning `emb`, which only the blocked path evaluates.
     */
-  private[graft] def denseKernelTopK(emb: DataFrame, queries: DataFrame, k: Int,
+  private[graft] def denseKernelTopK(emb: => DataFrame, queries: DataFrame, k: Int,
       metric: Metric,
       tile: Int = defaultKernelTile,
       ordered: Boolean = true,
       excludeSelf: Boolean = true,
       budget: Long = fastPathMb << 20,
-      mergeBudget: Long = fastPathMb << 20): DataFrame = {
-    val spark = emb.sparkSession
+      mergeBudget: Long = fastPathMb << 20,
+      held: Option[Corpus] = None): DataFrame = {
+    val spark = queries.sparkSession
     val qRows = vectorRows(queries, "qid", "qv")
     val (nq, dim, fetched) = fetchQueries(qRows, tile, budget)
     if (nq > fastPathCap(dim, tile, budget))
@@ -560,13 +583,13 @@ object Ann {
         probed = Some((nq, dim))), ordered)
     val rows = fetched.getOrElse(collectDoubles(qRows)).sortBy(_._1)
     val ids = rows.map(_._1)
-    val corpus = vectorRows(emb, "vec_id", "embedding")
-    val scan = corpus.queryExecution.toRdd
+    val corpus = held.getOrElse(Corpus.of(emb))
+    val scan = corpus.rows
     val splits = scan.getNumPartitions
     if (rows.isEmpty || splits == 0) return mergedFrame(spark, ids, Array.empty, splits, k)
     val sc = spark.sparkContext
     val bq = sc.broadcast(new QueryBlock(ids, rows.map(_._2)))
-    val floats = storesFloats(corpus)
+    val (idAt, vecAt, floats) = (corpus.id, corpus.vec, corpus.floats)
     val nShards = if (splits < sc.defaultParallelism) math.min(sc.defaultParallelism, rows.length) else 1
     val tasks = sc.union((0 until nShards).map { sh =>
       val (lo, hi) = (sh * rows.length / nShards, (sh + 1) * rows.length / nShards)
@@ -574,9 +597,11 @@ object Ann {
         val st = new KernelState(bq.value.slice(lo, hi), k, metric, excludeSelf)
         var buf = new Array[Double](0)
         it.foreach { r =>
-          val a = r.getArray(1)
-          buf = decodeInto(a, floats, buf)
-          st.offer(r.getLong(0), buf, 0, a.numElements())
+          if (!r.isNullAt(vecAt)) {
+            val a = r.getArray(vecAt)
+            buf = decodeInto(a, floats, buf)
+            st.offer(r.getLong(idAt), buf, 0, a.numElements())
+          }
         }
         Iterator.single(st.partial(split, lo))
       }
@@ -586,7 +611,7 @@ object Ann {
     if (splits.toLong * rows.length * 16L * (k + 1) <= mergeBudget) {
       val parts = tasks.collect()
       bq.destroy()
-      Option(kernelRuns.get).foreach(_ += KernelRun(corpus.queryExecution.executedPlan,
+      Option(kernelRuns.get).foreach(_ += KernelRun(corpus.plan,
         parts.length, parts.iterator.flatMap(_.counts).maxOption.getOrElse(0)))
       mergedFrame(spark, ids, parts, splits, k)
     } else {

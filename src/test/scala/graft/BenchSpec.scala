@@ -1,8 +1,9 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
+import graft.store.{TenantScans, VectorStore}
 
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSpec {
 
   test("baseline block compares only with an artifact at the same cpus and sf") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bench").toFile
@@ -22,5 +23,19 @@ class BenchSpec extends AnyFunSuite {
     assert(pick("8", "/data/sf0.1") == Right("BENCH_r17_c8.json"))
     assert(pick("16", "/data/sf0.1").isLeft)
     assert(pick("4", "/data/sf1").isLeft)
+  }
+
+  test("the per-run evictor drops prepared tenant scans with the checkpoint blocks") {
+    val pts = VectorStore.points(spark, sfDir)
+    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val blocks = pts.filter(col("user_id") === 2).localCheckpoint()
+      .queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.get
+    VectorStore.scroll(pts, 3, 5)
+    assert(TenantScans.size > 0 && spark.sparkContext.getPersistentRDDs.contains(blocks))
+    Bench.evict(spark, keep)
+    assert(TenantScans.size == 0)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(blocks))
   }
 }

@@ -45,9 +45,12 @@ trait JobStats { self: SparkSpec =>
 
 /** Spark jobs per store read. Each job costs scheduling time that a
   * point read cannot hide, so the job counts of the read paths are
-  * pinned: a literal-scored search is one job, recommend one fetch
-  * plus one search, retrieve one job, and the dense kernel one scan
-  * job plus one fetch job for a query frame that is not local.
+  * pinned: search, scrollAfter and retrieve are one job over the
+  * tenant's prepared scan, recommend one fetch plus one search,
+  * searchBatch one kernel scan job, and the dense kernel one scan job
+  * plus one fetch job for a query frame that is not local. A repeat
+  * read on the same collection frame and tenant plans nothing: it
+  * starts no SQL execution and generates no code.
   */
 class JobCountSpec extends SparkSpec with JobStats {
 
@@ -70,11 +73,75 @@ class JobCountSpec extends SparkSpec with JobStats {
     assert(batch == 1, s"searchBatch: $batch jobs")
     val got = jobsOf(VectorStore.retrieve(coll, 2, Seq(42L, 10L, 999999L)).collect())
     assert(got == 1, s"retrieve: $got jobs")
+    val page = jobsOf(VectorStore.scrollAfter(coll, 2, 10L, 5).collect())
+    assert(page == 1, s"scrollAfter: $page jobs")
     val e = emb
     val knn = jobsOf(Ann.bruteForceTopKDense(e,
       e.filter(col("vec_id") < 40).select(col("vec_id").as("qid"), col("embedding").as("qv")),
       5).collect())
     assert(knn <= 2, s"bruteForceTopKDense: $knn jobs")
+  }
+
+  /** SQL executions started and generated-code compiles while `body` runs. */
+  private def planningOf(body: => Any): (Int, Long) = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          started.incrementAndGet()
+        case _ =>
+      }
+    }
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    val before = compiled.getCount
+    try body
+    finally {
+      ListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (started.get, compiled.getCount - before)
+  }
+
+  test("a repeat read on the same collection and tenant plans nothing") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-prepared").toString + "/coll"
+    graft.store.CollectionStorage.write(pts, dir)
+    val coll = graft.store.CollectionStorage.load(spark, dir)
+    val q = Seq(Tuple1(localVec(42))).toDF("q")
+    val qs = Seq((1L, localVec(42)), (2L, localVec(7))).toDF("qid", "q")
+    // (name, read, the jobs it runs inside the call)
+    val reads: Seq[(String, () => Any, Int)] = Seq(
+      ("search", () => VectorStore.search(coll, 2, q, 10), 1),
+      ("search docIds", () => VectorStore.search(coll, 2, q, 10, docIds = Seq(2L, 10L)), 1),
+      ("scrollAfter", () => VectorStore.scrollAfter(coll, 2, 10L, 5), 1),
+      ("retrieve", () => VectorStore.retrieve(coll, 2, Seq(42L, 10L)), 1),
+      ("recommend", () => VectorStore.recommend(coll, 2, Seq(10L, 18L), Seq(34L), 10), 2),
+      ("searchBatch", () => VectorStore.searchBatch(coll, 2, qs, 5), 1))
+    /** The scan plans a read ran over. */
+    def scansOf(read: () => Any) = {
+      val ((_, kernel), point) =
+        graft.store.TenantScans.recording(Ann.recordingKernelRuns(read()))
+      point.map(_.plan) ++ kernel.map(_.corpusPlan)
+    }
+    // the counters see what they count: collecting a frame starts an
+    // execution, and a plan with a literal never inlined before compiles
+    assert(planningOf(VectorStore.search(coll, 2, q, 10).collect())._1 >= 1)
+    assert(planningOf(spark.range(1).selectExpr(s"id + ${System.nanoTime()}L").collect())._2 >= 1)
+    reads.foreach { case (name, read, jobs) =>
+      val first = scansOf(read)
+      var planning = (0, 0L)
+      var again = Seq.empty[org.apache.spark.sql.execution.SparkPlan]
+      val ran = jobsOf { planning = planningOf { again = scansOf(read) } }
+      assert(ran == jobs, s"$name: $ran jobs in the call")
+      assert(planning._1 == 0, s"$name: ${planning._1} SQL executions on a repeat read")
+      assert(planning._2 == 0L, s"$name: ${planning._2} code compiles on a repeat read")
+      assert(first.nonEmpty && again.size == first.size &&
+        again.zip(first).forall { case (a, b) => a eq b }, s"$name read a scan planned again")
+    }
   }
 
   test("the dense kernel shuffles nothing on a corpus with at least as many splits as cores") {

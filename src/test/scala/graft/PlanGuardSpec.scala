@@ -22,33 +22,27 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("vector search is broadcast + TakeOrderedAndProject (no global sort)") {
-    // the query vector is broadcast inside the plan as a literal, so
-    // every scan task carries it: scan → score → per-partition k-heap,
-    // with no BroadcastExchange stage, no Exchange of any kind, no join
-    val p = plan("vs_search_topk")
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(!p.contains("Exchange"), p)
-    assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
-    assert(!p.contains("SortExec"), p)
-    assert(p.contains("PartitionFilters") && p.contains("user_id"), p)
+    // the query vector reaches every task in the closure of ONE job
+    // over the tenant's prepared scan: scan → score → per-task k-heap
+    // (TakeOrderedAndProject's bound, ≤limit rows per task) → driver
+    // merge, with no Exchange of any kind and no join
+    prunedBoundedScan("vs_search_topk", limit = 10)
   }
 
   test("per-user vector ops scan a partitioned collection with PartitionFilters") {
     // the measured path reads the materialized user-partitioned table:
-    // the user_id predicate must prune partitions, not filter rows
-    val p = plan("vs_search_topk")
-    assert(p.contains("PartitionFilters") && p.contains("user_id"), p)
-    val ps = plan("vs_scroll_doc")
-    assert(ps.contains("PartitionFilters") && ps.contains("user_id"), ps)
+    // the user_id predicate must prune partitions, not filter rows.
+    // The point reads run over the tenant's prepared scan, so the scan
+    // they ran is the recorded one, not the returned local frame's
+    prunedBoundedScan("vs_search_topk", limit = 10)
+    prunedBoundedScan("vs_scroll_doc", limit = 20)
     // round-13 surfaces: retrieve / scroll-with-vectors / facet all
     // prune on user_id too (the get/export/facet paths must never
-    // scan other tenants' partitions)
-    Seq("vs_retrieve_ids", "vs_scroll_vectors", "vs_facet_counts")
-      .foreach { q =>
-        val pq = plan(q)
-        assert(pq.contains("PartitionFilters") && pq.contains("user_id"),
-          s"$q: $pq")
-      }
+    // scan other tenants' partitions); retrieve sends at most its 4 ids
+    prunedBoundedScan("vs_retrieve_ids", limit = 4)
+    prunedBoundedScan("vs_scroll_vectors", limit = 12)
+    val pf = plan("vs_facet_counts")
+    assert(pf.contains("PartitionFilters") && pf.contains("user_id"), pf)
     // batched search runs the dense kernel inside the call: its one
     // corpus scan is pruned and shuffles nothing, and each task sends
     // the driver merge ≤k candidates per query — one pruned scan,
@@ -56,12 +50,8 @@ class PlanGuardSpec extends SparkSpec {
     val (pb, runs) = kernelPlans("vs_search_batch")
     assert(runs.size == 1, runs)
     val scan = runs.head.corpusPlan.toString
-    // a pruning predicate on user_id, not just the inferred isnotnull
-    val pruned = runs.head.corpusPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.partitionFilters
-    }.flatten.filterNot(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull])
-    assert(pruned.exists(_.references.exists(_.name == "user_id")), scan)
-    assert(!scan.contains("Exchange"), scan)
+    assert(userPruned(runs.head.corpusPlan), scan)
+    assert(!scan.contains("Exchange") && !scan.contains("Join"), scan)
     assert(runs.head.maxPerQuery <= 5, runs)
     assert(!pb.contains("Exchange"), pb)
   }
@@ -73,6 +63,32 @@ class PlanGuardSpec extends SparkSpec {
   private def kernelPlans(name: String): (String, Seq[graft.ann.Ann.KernelRun]) = {
     val (df, runs) = graft.ann.Ann.recordingKernelRuns(SparkEntry.queries(name)(spark, sfDir))
     (df.queryExecution.explainString(FormattedMode), runs)
+  }
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Whether a file scan of `plan` (adaptive stages included) carries a
+    * pruning predicate on user_id, not just the inferred isnotnull.
+    */
+  private def userPruned(plan: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    Aqe.collect(plan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.partitionFilters
+    }.flatten.filterNot(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull])
+      .exists(_.references.exists(_.name == "user_id"))
+
+  /** Query `name` runs ONE job over a prepared tenant scan that prunes
+    * user partitions, exchanges and joins nothing, and whose tasks each
+    * send the driver at most `limit` rows; returns the scan's plan.
+    */
+  private def prunedBoundedScan(name: String, limit: Int): String = {
+    val (_, runs) = graft.store.TenantScans.recording(SparkEntry.queries(name)(spark, sfDir))
+    assert(runs.size == 1, s"$name: $runs")
+    val scan = runs.head.plan.toString
+    assert(userPruned(runs.head.plan), s"$name: $scan")
+    assert(!scan.contains("Exchange"), s"$name: $scan")
+    assert(!scan.contains("Join") && !scan.contains("CartesianProduct"), s"$name: $scan")
+    assert(runs.head.maxRows <= limit, s"$name: ${runs.head.maxRows} rows from one task")
+    scan
   }
 
   test("batched ANN uses the map-side partial TopK aggregate") {
@@ -958,14 +974,11 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("payload-filtered search prunes partitions AND pushes the payload predicate") {
-    val p = plan("vs_search_payload")
     // pre-filter semantics: the title predicate reaches the scan, the
-    // user predicate prunes partitions, and the top-k is a
-    // TakeOrdered — never a global sort over scored points
-    assert(p.contains("PartitionFilters") && p.contains("user_id"), p)
-    assert(p.contains("StringStartsWith(title,t1)"), p)
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(!p.contains("SortExec"), p)
+    // user predicate prunes partitions, and each task keeps its own
+    // top-5 — never a global sort over scored points
+    val scan = prunedBoundedScan("vs_search_payload", limit = 5)
+    assert(scan.contains("StringStartsWith(title,t1)"), scan)
   }
 
   // NOTE text_ngram_novelty's shuffle-elimination (row-local

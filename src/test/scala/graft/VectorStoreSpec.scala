@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.store.VectorStore
+import graft.store.{CollectionStorage, TenantScans, VectorStore}
 
 class VectorStoreSpec extends SparkSpec {
 
@@ -254,31 +254,34 @@ class VectorStoreSpec extends SparkSpec {
     }
   }
 
-  test("recommend folds its examples on the driver exactly as the column fold") {
-    // the Column form recommend used before: zip_with float sums left
-    // to right, transform ÷ count in double, zip_with pos − neg
-    def columnFold(pos: Seq[Long], neg: Seq[Long], limit: Int) = {
-      val base = pts.filter(col("user_id") === 2)
-      def mean(ids: Seq[Long], tag: String) = {
-        val frames = ids.zipWithIndex.map { case (id, i) =>
-          base.filter(col("vector_id") === id).select(col("embedding").as(s"_$tag$i")) }
-        val sum = ids.indices.map(i => col(s"_$tag$i"))
-          .reduceLeft((a, b) => zip_with(a, b, (x, y) => x + y))
-        (frames.reduceLeft((a, b) => a.crossJoin(broadcast(b))),
-         transform(sum, x => x / ids.size.toDouble))
-      }
-      val (pf, pm) = mean(pos, "p")
-      val qf = if (neg.isEmpty) pf.select(pm.as("q")) else {
-        val (nf, nm) = mean(neg, "n")
-        pf.crossJoin(broadcast(nf)).select(zip_with(pm, nm, (a, b) => a - b).as("q"))
-      }
-      byScore(crossScored(base.filter(!col("vector_id").isin(pos ++ neg: _*)), qf,
-        Seq(col("vector_id"), col("doc_id"))), limit)
+  /** The Column form recommend used before: zip_with float sums left
+    * to right, transform ÷ count in double, zip_with pos − neg, scored
+    * by the cross-join form. */
+  private def columnFold(coll: org.apache.spark.sql.DataFrame, pos: Seq[Long], neg: Seq[Long],
+      limit: Int) = {
+    val base = coll.filter(col("user_id") === 2)
+    def mean(ids: Seq[Long], tag: String) = {
+      val frames = ids.zipWithIndex.map { case (id, i) =>
+        base.filter(col("vector_id") === id).select(col("embedding").as(s"_$tag$i")) }
+      val sum = ids.indices.map(i => col(s"_$tag$i"))
+        .reduceLeft((a, b) => zip_with(a, b, (x, y) => x + y))
+      (frames.reduceLeft((a, b) => a.crossJoin(broadcast(b))),
+       transform(sum, x => x / ids.size.toDouble))
     }
+    val (pf, pm) = mean(pos, "p")
+    val qf = if (neg.isEmpty) pf.select(pm.as("q")) else {
+      val (nf, nm) = mean(neg, "n")
+      pf.crossJoin(broadcast(nf)).select(zip_with(pm, nm, (a, b) => a - b).as("q"))
+    }
+    byScore(crossScored(base.filter(!col("vector_id").isin(pos ++ neg: _*)), qf,
+      Seq(col("vector_id"), col("doc_id"))), limit)
+  }
+
+  test("recommend folds its examples on the driver exactly as the column fold") {
     Seq((Seq(10L, 18L), Seq(34L)), (Seq(10L, 18L, 42L), Nil),
         (Seq(50L), Seq(34L, 2L, 58L)), (Seq(18L, 10L, 18L), Seq(26L))).foreach {
       case (pos, neg) =>
-        same(VectorStore.recommend(pts, 2, pos, neg, 20), columnFold(pos, neg, 20))
+        same(VectorStore.recommend(pts, 2, pos, neg, 20), columnFold(pts, pos, neg, 20))
     }
   }
 
@@ -355,18 +358,112 @@ class VectorStoreSpec extends SparkSpec {
     val twice = pts.unionByName(pts.filter(col("vector_id") === 12L))
     val ids = Seq(20L, 4L, 12L, 999999L)
     def got(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getAs[Long]("vector_id")).toSeq
-    val thin = VectorStore.retrieve(twice, 4, ids)
+    val (thin, thinRuns) = TenantScans.recording(VectorStore.retrieve(twice, 4, ids))
     assert(got(thin) == Seq(4L, 12L, 12L, 20L))
-    assert(!thin.queryExecution.executedPlan.toString.contains("Exchange"))
+    assert(thinRuns.size == 1 && !thinRuns.head.plan.toString.contains("Exchange"), thinRuns)
     // a tenant in at least as many splits as cores keeps one scan task
-    // per split and sorts through the range exchange
+    // per split, each sending only its hits
     val cores = spark.sparkContext.defaultParallelism
     val dir = java.nio.file.Files.createTempDirectory("graft-retrieve").toString + "/c"
     twice.repartition(2 * cores).write.parquet(dir)
     val wideColl = spark.read.parquet(dir)
-    assert(wideColl.queryExecution.toRdd.getNumPartitions >= cores)
-    val wide = VectorStore.retrieve(wideColl, 4, ids)
+    val splits = wideColl.queryExecution.toRdd.getNumPartitions
+    assert(splits >= cores)
+    val (wide, wideRuns) = TenantScans.recording(VectorStore.retrieve(wideColl, 4, ids))
     assert(got(wide) == Seq(4L, 12L, 12L, 20L))
-    assert(!wide.queryExecution.executedPlan.toString.contains("Coalesce"))
+    assert(wideRuns.map(_.tasks) == Seq(splits), wideRuns)
+    assert(!wideRuns.head.plan.toString.contains("Exchange"), wideRuns)
+  }
+
+  // ---- prepared tenant scans -----------------------------------------
+
+  /** The Catalyst forms of the prepared reads, as equality oracles. */
+  private def searchOracle(coll: org.apache.spark.sql.DataFrame,
+      q: org.apache.spark.sql.DataFrame, limit: Int) =
+    byScore(crossScored(coll.filter(col("user_id") === 2), q, meta), limit)
+  private def scrollAfterOracle(coll: org.apache.spark.sql.DataFrame, cursor: Long, limit: Int) =
+    coll.filter(col("user_id") === 2 && col("vector_id") > cursor)
+      .select(meta: _*).orderBy("vector_id").limit(limit)
+  private def retrieveOracle(coll: org.apache.spark.sql.DataFrame, ids: Seq[Long]) =
+    coll.filter(col("user_id") === 2 && col("vector_id").isin(ids: _*))
+      .select(meta :+ col("embedding"): _*).orderBy("vector_id")
+
+  test("prepared reads see an upsert, a delete and a compaction of their files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fresh").toString + "/coll"
+    CollectionStorage.write(pts, dir)
+    val q = VectorStore.queryVecOf(spark, sfDir, 42)
+    val ids = Seq(2L, 10L, 26L, 42L, 202L)
+    def reads(c: org.apache.spark.sql.DataFrame) = Seq(
+      VectorStore.search(c, 2, q, 10), VectorStore.scrollAfter(c, 2, 10L, 5),
+      VectorStore.retrieve(c, 2, ids), VectorStore.recommend(c, 2, Seq(10L, 18L), Seq(34L), 10))
+    def oracles(c: org.apache.spark.sql.DataFrame) = Seq(
+      searchOracle(c, q, 10), scrollAfterOracle(c, 10L, 5), retrieveOracle(c, ids),
+      columnFold(c, Seq(10L, 18L), Seq(34L), 10))
+    def rowsOf(c: org.apache.spark.sql.DataFrame) = reads(c).map(_.collect().toSeq)
+    def check(c: org.apache.spark.sql.DataFrame): Unit =
+      reads(c).zip(oracles(c)).foreach { case (got, want) => same(got, want) }
+    def reloaded = CollectionStorage.load(spark, dir)
+    /** Persist tenant 2 of `next` with a dynamic partition overwrite. */
+    def persist(next: org.apache.spark.sql.DataFrame): Unit =
+      CollectionStorage.overwriteUserPartitions(
+        next.filter(col("user_id") === 2).localCheckpoint(), dir)
+    val c0 = reloaded
+    check(c0)
+    val before = rowsOf(c0)
+    // an upsert of doc 2 with negated vectors: search, retrieve and
+    // recommend rows change
+    val batch = c0.filter(col("user_id") === 2 && col("doc_id") === 2)
+      .withColumn("embedding", transform(col("embedding"), x => -x))
+    persist(VectorStore.upsert(c0, batch))
+    val c1 = reloaded
+    check(c1)
+    val upserted = rowsOf(c1)
+    assert(upserted(2) != before(2))
+    // a doc delete: vector 26 leaves retrieve
+    persist(VectorStore.deleteDoc(c1, 2, 26L))
+    val c2 = reloaded
+    check(c2)
+    val deleted = rowsOf(c2)
+    assert(!deleted(2).exists(_.getAs[Long]("vector_id") == 26L))
+    // a compaction rewrites every file under new names: the held scans'
+    // files are gone, so a read over them would fail
+    CollectionStorage.compact(spark, dir)
+    val c3 = reloaded
+    check(c3)
+    assert(rowsOf(c3) == deleted)
+  }
+
+  test("a SQL conf switch plans the scan again; the LRU holds at most its capacity") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-conf").toString + "/coll"
+    CollectionStorage.write(pts, dir)
+    val c = CollectionStorage.load(spark, dir)
+    val q = VectorStore.queryVecOf(spark, sfDir, 42)
+    def scanOf(read: => org.apache.spark.sql.DataFrame) = {
+      val (df, runs) = TenantScans.recording(read)
+      same(df, searchOracle(c, q, 10))
+      runs.last.plan
+    }
+    val held = scanOf(VectorStore.search(c, 2, q, 10))
+    assert(scanOf(VectorStore.search(c, 2, q, 10)) eq held)
+    val conf = spark.conf
+    Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.parquet.enableVectorizedReader" -> "false").foreach { case (k, v) =>
+      val prev = conf.getOption(k)
+      conf.set(k, v)
+      try {
+        val switched = scanOf(VectorStore.search(c, 2, q, 10))
+        assert(!(switched eq held), s"$k=$v read the scan planned before the switch")
+        assert(scanOf(VectorStore.search(c, 2, q, 10)) eq switched)
+      } finally prev match {
+        case Some(p) => conf.set(k, p)
+        case None    => conf.unset(k)
+      }
+    }
+    TenantScans.clear()
+    (0 until TenantScans.Capacity + 8).foreach { u =>
+      VectorStore.scroll(c, u.toLong, 1)
+      assert(TenantScans.size <= TenantScans.Capacity, s"${TenantScans.size} scans held")
+    }
+    assert(TenantScans.size == TenantScans.Capacity)
   }
 }
