@@ -11,16 +11,18 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{FileScanRDD, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Prepared tenant scans: the pruned, projected scan of one tenant of a
   * collection frame, planned, code-generated and set up once, then read
-  * by one job per point read ([[VectorStore]]). A call's values (query
+  * by one job per point read ([[VectorStore]]). A read that returns no
+  * vectors reads a scan without them, so it never decodes one. A call's values (query
   * vector, ids, cursor, limit) travel in that job's task closure, so a
   * repeat read analyzes, plans and generates nothing.
   *
   * Scans are held per (session, canonicalized analyzed plan of the
-  * collection frame, tenant, SQL conf). A scan planned under one conf
+  * collection frame, tenant, projected columns, SQL conf). A scan planned under one conf
   * (say codegen factory mode or the vectorized reader switched) is
   * never read under another. Only deterministic plans whose leaves are
   * file relations or local rows are held; any other frame is planned
@@ -87,21 +89,22 @@ private[graft] object TenantScans extends AdaptiveSparkPlanHelper {
   }
 
   private final case class Key(session: SparkSession, plan: LogicalPlan, tenant: Any,
-      conf: Map[String, String])
+      cols: Seq[String], conf: Map[String, String])
 
   private val held = new java.util.LinkedHashMap[Key, Handle](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[Key, Handle]): Boolean =
       this.size() > Capacity
   }
 
-  /** The scan of tenant `userId` of `coll`; `tenant` is that tenant's
-    * frame, planned when no fresh scan is held.
+  /** The scan of tenant `userId` of `coll` (its `user_id` rows)
+    * projected to `cols`, planned when no fresh scan is held.
     */
-  def of(coll: DataFrame, userId: Any)(tenant: => DataFrame): Handle = {
+  def of(coll: DataFrame, userId: Any, cols: Seq[String]): Handle = {
+    def tenant = coll.filter(col("user_id") === userId).select(cols.map(col): _*)
     val analyzed = coll.queryExecution.analyzed
     if (!holdable(analyzed)) return build(tenant, analyzed)._1
     val spark = coll.sparkSession
-    val key = Key(spark, analyzed.canonicalized, userId, spark.sessionState.conf.getAllConfs)
+    val key = Key(spark, analyzed.canonicalized, userId, cols, spark.sessionState.conf.getAllConfs)
     Option(held.synchronized(held.get(key))).filter(_.readsFilesOf(analyzed)).getOrElse {
       val (h, keep) = build(tenant, analyzed)
       held.synchronized(if (keep) held.put(key, h) else held.remove(key))

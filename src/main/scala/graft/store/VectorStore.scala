@@ -135,13 +135,12 @@ object VectorStore {
   // ---- point reads over prepared tenant scans ---------------------
 
   /** The scan the point reads run over: `userId`'s rows of `coll`
-    * projected to the output columns plus `embedding`, held by
-    * [[TenantScans]] so a repeat read on the same collection and
-    * tenant plans nothing.
+    * projected to the output columns, plus `embedding` when `vectors`,
+    * held by [[TenantScans]] so a repeat read on the same collection
+    * and tenant plans nothing.
     */
-  private def tenantScan(coll: DataFrame, userId: Any): TenantScans.Handle =
-    TenantScans.of(coll, userId)(
-      coll.filter(col("user_id") === userId).select((outCols(coll) :+ "embedding").map(col): _*))
+  private def tenantScan(coll: DataFrame, userId: Any, vectors: Boolean = true): TenantScans.Handle =
+    TenantScans.of(coll, userId, if (vectors) outCols(coll) :+ "embedding" else outCols(coll))
 
   /** An integral key column of a scan's rows, compared with the bigint
     * values a read takes (ids, doc ids, a cursor); a null never matches.
@@ -290,7 +289,7 @@ object VectorStore {
     */
   private def paged(coll: DataFrame, userId: Any, limit: Int, cols: Seq[String],
       keep: TenantScans.Handle => InternalRow => Boolean): DataFrame = {
-    val h = tenantScan(coll, userId)
+    val h = tenantScan(coll, userId, vectors = cols.contains("embedding"))
     val accept = keep(h)
     frame(coll, h, cols, None,
       best(h, limit, ById(vidOrder(h)), () => r => if (accept(r)) new Hit(r, null) else null))

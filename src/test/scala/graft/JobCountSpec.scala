@@ -118,6 +118,7 @@ class JobCountSpec extends SparkSpec with JobStats {
       ("search", () => VectorStore.search(coll, 2, q, 10), 1),
       ("search docIds", () => VectorStore.search(coll, 2, q, 10, docIds = Seq(2L, 10L)), 1),
       ("scrollAfter", () => VectorStore.scrollAfter(coll, 2, 10L, 5), 1),
+      ("scrollDoc", () => VectorStore.scrollDoc(coll, 2, 2L, 5), 1),
       ("retrieve", () => VectorStore.retrieve(coll, 2, Seq(42L, 10L)), 1),
       ("recommend", () => VectorStore.recommend(coll, 2, Seq(10L, 18L), Seq(34L), 10), 2),
       ("searchBatch", () => VectorStore.searchBatch(coll, 2, qs, 5), 1))
@@ -142,6 +143,14 @@ class JobCountSpec extends SparkSpec with JobStats {
       assert(first.nonEmpty && again.size == first.size &&
         again.zip(first).forall { case (a, b) => a eq b }, s"$name read a scan planned again")
     }
+    // the scrolls return no vectors, so they hold a scan of their own
+    // that reads none; retrieve's scan reads them
+    def scanOf(name: String) = scansOf(reads.find(_._1 == name).get._2).head
+    def readsVectors(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.output.exists(_.name == "embedding")
+    assert(!(scanOf("scrollAfter") eq scanOf("retrieve")))
+    assert(scanOf("scrollAfter") eq scanOf("scrollDoc"))
+    assert(!readsVectors(scanOf("scrollAfter")) && readsVectors(scanOf("retrieve")))
   }
 
   test("the dense kernel shuffles nothing on a corpus with at least as many splits as cores") {

@@ -35,12 +35,15 @@ class PlanGuardSpec extends SparkSpec {
     // The point reads run over the tenant's prepared scan, so the scan
     // they ran is the recorded one, not the returned local frame's
     prunedBoundedScan("vs_search_topk", limit = 10)
-    prunedBoundedScan("vs_scroll_doc", limit = 20)
+    // a scroll returns no vectors, so its scan reads none
+    val scroll = prunedBoundedScan("vs_scroll_doc", limit = 20)
+    assert(!readsVectors(scroll), scroll)
     // round-13 surfaces: retrieve / scroll-with-vectors / facet all
     // prune on user_id too (the get/export/facet paths must never
     // scan other tenants' partitions); retrieve sends at most its 4 ids
     prunedBoundedScan("vs_retrieve_ids", limit = 4)
-    prunedBoundedScan("vs_scroll_vectors", limit = 12)
+    val withVectors = prunedBoundedScan("vs_scroll_vectors", limit = 12)
+    assert(readsVectors(withVectors), withVectors)
     val pf = plan("vs_facet_counts")
     assert(pf.contains("PartitionFilters") && pf.contains("user_id"), pf)
     // batched search runs the dense kernel inside the call: its one
@@ -76,11 +79,17 @@ class PlanGuardSpec extends SparkSpec {
     }.flatten.filterNot(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull])
       .exists(_.references.exists(_.name == "user_id"))
 
+  /** Whether a file scan of `plan` reads `embedding` (its ReadSchema). */
+  private def readsVectors(plan: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    Aqe.collect(plan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.requiredSchema.fieldNames.toSeq
+    }.flatten.contains("embedding")
+
   /** Query `name` runs ONE job over a prepared tenant scan that prunes
     * user partitions, exchanges and joins nothing, and whose tasks each
     * send the driver at most `limit` rows; returns the scan's plan.
     */
-  private def prunedBoundedScan(name: String, limit: Int): String = {
+  private def prunedBoundedScan(name: String, limit: Int): org.apache.spark.sql.execution.SparkPlan = {
     val (_, runs) = graft.store.TenantScans.recording(SparkEntry.queries(name)(spark, sfDir))
     assert(runs.size == 1, s"$name: $runs")
     val scan = runs.head.plan.toString
@@ -88,7 +97,7 @@ class PlanGuardSpec extends SparkSpec {
     assert(!scan.contains("Exchange"), s"$name: $scan")
     assert(!scan.contains("Join") && !scan.contains("CartesianProduct"), s"$name: $scan")
     assert(runs.head.maxRows <= limit, s"$name: ${runs.head.maxRows} rows from one task")
-    scan
+    runs.head.plan
   }
 
   test("batched ANN uses the map-side partial TopK aggregate") {
@@ -977,7 +986,7 @@ class PlanGuardSpec extends SparkSpec {
     // pre-filter semantics: the title predicate reaches the scan, the
     // user predicate prunes partitions, and each task keeps its own
     // top-5 — never a global sort over scored points
-    val scan = prunedBoundedScan("vs_search_payload", limit = 5)
+    val scan = prunedBoundedScan("vs_search_payload", limit = 5).toString
     assert(scan.contains("StringStartsWith(title,t1)"), scan)
   }
 
