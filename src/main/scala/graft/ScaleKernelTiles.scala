@@ -4,15 +4,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 
 /** Over-cap probe for the exact dense kernel (SURVEY §5, §6): a query
-  * batch above `fastPathCap(dim, tile)` runs as ⌈nq / cap⌉ one-scan
-  * passes, one query tile broadcast at a time. Runs the batch and its
-  * double through the `Ann.denseKernelTopK` dispatch and prints wall
-  * time and live heap after each, which must stay ~flat in the query
-  * doubles while the batch doubles (the retained nq×k result rows are
-  * what grows). `tile` forces the tile count: at 1024-d the default
-  * cap is 8192 queries, so 4096 queries at tile 1024 run 4 tiles.
+  * batch within `fastPathCap(dim, tile)` runs the one-scan fast path,
+  * a batch above it the 2D block-matrix grid (`Ann.blockedTop`), whose
+  * query tiles hold at most `kernelPackingCaps(dim, tile, …)` queries.
+  * Runs the batch and its double through the `Ann.denseKernelTopK`
+  * dispatch and prints the path it took, wall time and live heap
+  * after each, which must stay ~flat in the query doubles while the
+  * batch doubles (the retained nq×k result rows are what grows).
+  * `tile` forces the grid's tile count: at 1024-d the default cap is
+  * 8192 queries, so 4096 queries at tile 1024 run a grid of 4 tiles.
   *
-  * Row-equality of the passes is pinned in AnnSpec; this probe is the
+  * Row-equality of both paths is pinned in AnnSpec; this probe is the
   * time and memory half of that argument. Cores from SPARK_GRAFT_CPUS
   * (default 4).
   *
@@ -47,17 +49,19 @@ object ScaleKernelTiles {
     val corpus = vecs(nCorpus, 0).select(col("vid").as("vec_id"), col("v").as("embedding"))
       .localCheckpoint(eager = true) // corpus is fixture, not measured
     val cap = graft.ann.Ann.fastPathCap(dim, tile)
+    val (gridTile, _) = graft.ann.Ann.kernelPackingCaps(dim, tile,
+      graft.ann.Ann.defaultKernelBlockRows)
 
     for (m <- Seq(1L, 2L)) {
       val nq = nQueries * m
       val q = vecs(nq, 1L << 32).select(col("vid").as("qid"), col("v").as("qv"))
-      val nTiles = (nq + cap - 1) / cap
+      val path = if (nq <= cap) "fast-path" else s"grid tiles=${(nq + gridTile - 1) / gridTile}"
       val t0 = System.nanoTime()
       val rows = graft.ann.Ann.denseKernelTopK(
         corpus, q, 5, graft.ann.Ann.Cosine, tile = tile).count()
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[kernel-tiles] nq=$nq corpus=$nCorpus dim=$dim tile=$tile cap=$cap " +
-        f"tiles=$nTiles rows=$rows: $secs%.2f s, peak heap ${peakHeapMb()} MB")
+        f"$path rows=$rows: $secs%.2f s, peak heap ${peakHeapMb()} MB")
       require(rows == nq * 5, s"expected ${nq * 5} rows, got $rows")
     }
     spark.stop()

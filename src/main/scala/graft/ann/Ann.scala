@@ -1,17 +1,13 @@
 package graft.ann
 
-import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.FrameBridge
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructField, StructType}
 import graft.functions.VectorFunctions.{md5Long, score}
 
@@ -20,13 +16,7 @@ import graft.functions.VectorFunctions.{md5Long, score}
   * Three tiers:
   * - [[bruteForceTopK]]: exact cosine top-k for a query batch — the
   *   correctness baseline. Scan-side never shuffles (queries are
-  *   broadcast); ranking shuffles only candidate rows per query. Its
-  *   fast form is the dense kernel ([[bruteForceTopKDense]]), one exact
-  *   code path: a batch runs as one-scan passes, one query tile of at
-  *   most [[fastPathMb]] broadcast per pass, each task keeping a local
-  *   top-k per query that the driver merges. A batch over that bound
-  *   runs ⌈nq / cap⌉ passes; every qid lives in one tile, so no list
-  *   merges across passes.
+  *   broadcast); ranking shuffles only candidate rows per query.
   * - [[lshTopK]]: random-hyperplane LSH signatures + multiprobe
   *   (hamming ≤ 1) candidate pruning. At scale the signature is a
   *   write-time cluster column, so candidate scans are pruned I/O.
@@ -274,6 +264,12 @@ object Ann {
       }
     }
 
+    /** The partial candidates: (qid, score, vec_id). */
+    def rows: Iterator[(Long, Double, Long)] =
+      (0 until nq).iterator.flatMap { qi =>
+        (0 until bufN(qi)).iterator.map(j => (qb.ids(qi), bufS(qi)(j), bufI(qi)(j)))
+      }
+
     /** The partial candidates packed as one [[Partial]]. */
     def partial(split: Int, lo: Int): Partial = {
       val total = bufN.sum
@@ -303,12 +299,50 @@ object Ann {
     }
   }
 
-  /** Queries per kernel tile unless the dim-aware bound ([[fastPathCap]])
-    * is smaller: 2^16 queries × 64-d doubles ≈ 34 MB per broadcast, big
-    * enough that every oracle corpus runs in one pass. Specs pass a
-    * smaller tile to force many passes.
+  /** Queries per kernel tile. The query side is collected and
+    * broadcast ONE TILE at a time, so driver and executor memory stay
+    * flat no matter how many queries the batch ships (the r12 caveat:
+    * an unbounded collect of the query side capped the kernel at
+    * driver-memory-many queries). 2^16 queries × 64-d doubles ≈ 34 MB
+    * per broadcast — comfortably under executor headroom while big
+    * enough that every oracle corpus stays on the one-collect path.
+    * Specs pass a smaller tile to force many tiles.
     */
   private[graft] val defaultKernelTile: Int = 1 << 16
+
+  /** (id, vector) rows → (ids, end-offsets, flat values): the packed
+    * shape tiles and blocks take through the shuffle. Three primitive
+    * arrays serialize/deserialize as UnsafeArrayData memcpys; the
+    * equivalent Array[(Long, Array[Double])] pays an element-wise
+    * InternalRow walk on both sides (measured as most of the blocked
+    * kernel's constant factor, r15 probe). End-offsets rather than a
+    * single dim keep ragged batches exact.
+    */
+  private def packRows(rows: Array[(Long, Array[Double])])
+      : (Array[Long], Array[Int], Array[Double]) = {
+    val n = rows.length
+    val ids = new Array[Long](n); val ends = new Array[Int](n)
+    var total = 0; var i = 0
+    while (i < n) { ids(i) = rows(i)._1; total += rows(i)._2.length; ends(i) = total; i += 1 }
+    val flat = new Array[Double](total)
+    i = 0; var off = 0
+    while (i < n) {
+      val v = rows(i)._2
+      System.arraycopy(v, 0, flat, off, v.length); off += v.length; i += 1
+    }
+    (ids, ends, flat)
+  }
+
+  /** Inverse of [[packRows]]'s vector part: one slice per vector. */
+  private def unpackVecs(ends: Array[Int], flat: Array[Double]): Array[Array[Double]] = {
+    val out = new Array[Array[Double]](ends.length)
+    var i = 0; var start = 0
+    while (i < ends.length) {
+      out(i) = java.util.Arrays.copyOfRange(flat, start, ends(i))
+      start = ends(i); i += 1
+    }
+    out
+  }
 
   /** Non-null (id, vector) rows of `df` as (_1 bigint, _2 array<float>
     * when the vectors are stored as floats, else array<double>).
@@ -319,6 +353,17 @@ object Ann {
       case _                       => col(vec).cast("array<double>")
     }
     df.filter(col(vec).isNotNull).select(col(id).cast("long").as("_1"), v.as("_2"))
+  }
+
+  /** [[vectorRows]] decoded to primitive doubles on the executors.
+    * Float vectors decode with one copy and widen in a loop — bit-equal
+    * to a Catalyst cast to array<double>, which would box every element.
+    */
+  private def asDoubles(rows: DataFrame): Dataset[(Long, Array[Double])] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    if (storesFloats(rows)) rows.as[(Long, Array[Float])].map { case (id, f) => (id, widen(f)) }
+    else rows.as[(Long, Array[Double])]
   }
 
   /** [[vectorRows]] collected to the driver, moving the stored vectors
@@ -358,67 +403,73 @@ object Ann {
   private def decode(a: ArrayData, floats: Boolean): Array[Double] =
     if (floats) widen(a.toFloatArray()) else a.toDoubleArray()
 
-  /** One partition of the query fetch: its row count, max dim and qid
-    * range, and its rows when they fit the partition's share of the
-    * budget.
+  /** (non-null query count, exact max dim) of a query frame in ONE
+    * job — what the blocked kernel's packing caps need when it is
+    * called on its own. Per-partition folds collected to the driver
+    * (an agg would add a shuffle, and under AQE a second job); a full
+    * pass rather than a head-row probe: a dim-0 first row on a batch
+    * whose later rows are wide would make a head-row probe understate
+    * the dim.
     */
-  private final case class FetchPart(n: Long, dim: Int, lo: Long, hi: Long,
+  private def probeQueries(queries: DataFrame): (Long, Int) = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val parts = queries.filter(col("qv").isNotNull).select(size(col("qv"))).as[Int]
+      .mapPartitions { it =>
+        var n = 0L; var d = 0
+        it.foreach { x => n += 1; d = math.max(d, x) }
+        Iterator.single((n, d))
+      }.collect()
+    (parts.map(_._1).sum, parts.map(_._2).maxOption.getOrElse(0))
+  }
+
+  /** One partition of the query fetch: its row count and max dim, and
+    * its rows when they fit the partition's share of the budget.
+    */
+  private final case class FetchPart(n: Long, dim: Int,
       rows: Option[Array[(Long, Array[Double])]])
 
-  /** A fetched query batch: `n` queries of at most `dim` values, all
-    * with one qid when `oneQid`, and their rows when the batch fits
-    * one pass and was read within the budget.
+  /** The query batch of [[denseKernelTopK]] as (count, max dim, rows).
+    * A frame whose optimized plan is a local relation is decoded from
+    * that relation's rows: no job. Any other frame is read in ONE job
+    * that returns each partition's count, max dim and rows, the rows
+    * only while they fit `budget / partitions` bytes of doubles and
+    * `tile` rows — so the driver never holds more than `budget` of
+    * query doubles. `rows` is None when some partition did not fit.
     */
-  private final case class Fetched(n: Long, dim: Int, oneQid: Boolean,
-      rows: Option[Array[(Long, Array[Double])]])
-
-  /** The query batch of [[denseKernelTopK]]. A frame whose optimized
-    * plan is a local relation is decoded from that relation's rows: no
-    * job. Any other frame is read in ONE job that returns each
-    * partition's count, max dim, qid range and rows, the rows only
-    * while they fit `budget / partitions` bytes of doubles and `tile`
-    * rows — so the driver never holds more than `budget` of query
-    * doubles. `rows` is None when some partition did not fit or the
-    * batch is over [[fastPathCap]].
-    */
-  private def fetchQueries(qRows: DataFrame, tile: Int, budget: Long): Fetched = {
+  private def fetchQueries(qRows: DataFrame, tile: Int, budget: Long)
+      : (Long, Int, Option[Array[(Long, Array[Double])]]) = {
     val floats = storesFloats(qRows)
-    val parts = qRows.queryExecution.optimizedPlan match {
+    qRows.queryExecution.optimizedPlan match {
       case lr: LocalRelation =>
         val rows = lr.data.iterator.map(r => (r.getLong(0), decode(r.getArray(1), floats))).toArray
-        val ids = rows.map(_._1)
-        Array(FetchPart(rows.length, rows.iterator.map(_._2.length).maxOption.getOrElse(0),
-          ids.minOption.getOrElse(Long.MaxValue), ids.maxOption.getOrElse(Long.MinValue), Some(rows)))
+        (rows.length.toLong, rows.iterator.map(_._2.length).maxOption.getOrElse(0), Some(rows))
       case _ =>
         val scan = qRows.queryExecution.toRdd
         val share = budget / math.max(1, scan.getNumPartitions)
-        scan.mapPartitions { it =>
+        val parts = scan.mapPartitions { it =>
           var n = 0L; var d = 0; var bytes = 0L
-          var lo = Long.MaxValue; var hi = Long.MinValue
           var kept = Option(Array.newBuilder[(Long, Array[Double])])
           it.foreach { r =>
-            val (id, a) = (r.getLong(0), r.getArray(1))
+            val a = r.getArray(1)
             n += 1; d = math.max(d, a.numElements())
-            lo = math.min(lo, id); hi = math.max(hi, id)
             bytes += a.numElements() * 8L
             if (bytes > share || n > tile) kept = None
-            kept.foreach(_ += ((id, decode(a, floats))))
+            kept.foreach(_ += ((r.getLong(0), decode(a, floats))))
           }
-          Iterator.single(FetchPart(n, d, lo, hi, kept.map(_.result())))
+          Iterator.single(FetchPart(n, d, kept.map(_.result())))
         }.collect()
+        val rows =
+          if (parts.forall(_.rows.isDefined)) Some(parts.flatMap(_.rows.get)) else None
+        (parts.map(_.n).sum, parts.map(_.dim).maxOption.getOrElse(0), rows)
     }
-    val n = parts.map(_.n).sum
-    val dim = parts.map(_.dim).maxOption.getOrElse(0)
-    val fits = n <= fastPathCap(dim, tile, budget) && parts.forall(_.rows.isDefined)
-    Fetched(n, dim, n > 0 && parts.map(_.lo).min == parts.map(_.hi).max,
-      if (fits) Some(parts.flatMap(_.rows.get)) else None)
   }
 
-  /** What one fast-path pass that merged on the driver ran: the
-    * physical plan of its corpus scan, its query count, its task count
-    * and the most candidates any task sent the merge for one query.
+  /** What one fast-path kernel call that merged on the driver ran: the
+    * physical plan of its corpus scan, its task count and the most
+    * candidates any task sent the merge for one query.
     */
-  private[graft] final case class KernelRun(corpusPlan: SparkPlan, queries: Int, tasks: Int,
+  private[graft] final case class KernelRun(corpusPlan: SparkPlan, tasks: Int,
       maxPerQuery: Int)
 
   private val kernelRuns =
@@ -451,40 +502,33 @@ object Ann {
     }
   }
 
-  /** Driver bytes one merged output row is charged while the passes of
-    * an over-cap batch hold their rows: four boxed fields in a generic
-    * internal row.
-    */
-  private val outRowBytes = 128L
-
   /** Exact dense top-k of every query in `queries` (qid, qv) against
     * `emb` (vec_id, embedding) under `metric`. Output: qid, vec_id,
     * score, rnk — ordered by (qid, rnk) when `ordered`.
     *
-    * The batch is fetched in at most one job ([[fetchQueries]]). A
-    * batch within the dim-aware bound ([[fastPathCap]]) is one
-    * fast-path [[pass]]: one scan job with no shuffle, merged on the
-    * driver into a local frame in (qid, rnk) order when the candidates
-    * fit `mergeBudget`, else a lazy frame whose TopK aggregate merges
-    * them by qid (on one partition when `ordered`). A batch that fits
-    * the bound but not one partition's share of `budget` is collected
+    * Query fetch, at most one job ([[fetchQueries]]): a local frame is
+    * decoded from its rows; any other is read in one job that returns
+    * per partition the count, the max dim and the rows while they fit
+    * the partition's share of `budget`. A batch over the dim-aware
+    * bound ([[fastPathCap]]) runs the 2D block-matrix kernel
+    * ([[blockedTop]]) with that (count, dim), so no probe runs; a batch
+    * that fits the bound but not one partition's share is collected
     * again in a second job.
     *
-    * A batch over the bound runs one pass per query tile against the
-    * corpus, planned once (REPOSE's local top-k + merge, one tile
-    * broadcast at a time). A tile is the qids whose seeded hash falls
-    * in one bucket, with buckets sized a few standard deviations under
-    * the cap, so equal qids share a tile and no top-k list merges
-    * across tiles. The batch is materialized once
-    * (a deterministic local frame already is), so every pass reads the
-    * same rows and none reads the query frame again; a tile still over
-    * the cap splits again under the next seed, and a tile of one
-    * repeated qid, which cannot split, runs as one pass. The driver
-    * holds at most one tile of query doubles. Passes merge on the
-    * driver while the rows they keep plus the next pass's candidates
-    * fit `mergeBudget`; past that, a pass's lazy TopK aggregate is
-    * materialized on disk before its broadcast is destroyed, so no two
-    * tiles' broadcasts are live at once.
+    * Fast path, one scan job with no shuffle: the sorted batch
+    * broadcasts once and the corpus is read through its physical plan.
+    * A corpus with fewer splits than cores is read by `cores` tasks
+    * per split, each scoring a contiguous qid shard (the batch's own
+    * size caps the shard count); otherwise each split is one task
+    * scoring every query. Each task keeps ≤k candidates per query
+    * (REPOSE's per-partition local top-k). When the splits × queries
+    * × k candidate slots (16 bytes each, plus a slot of bookkeeping
+    * per split and query) fit `mergeBudget`, they are collected and
+    * merged on the driver in (score desc, id asc) order, and the
+    * result is a local frame in (qid, rnk) order: the kernel has run
+    * when this returns. Otherwise the result is a lazy frame whose
+    * TopK aggregate merges the candidates by qid (on one partition
+    * when `ordered`).
     *
     * `excludeSelf` drops the pair qid == vec_id (the kNN-graph shape);
     * store search_batch keeps it, so a query that is a stored vector
@@ -492,8 +536,8 @@ object Ann {
     * cannot rank and are dropped on both sides.
     *
     * `held` is a corpus scan the caller has already planned (the store's
-    * prepared tenant scan); the passes then read it and `emb` is never
-    * evaluated.
+    * prepared tenant scan); the fast path then reads it instead of
+    * planning `emb`, which only the blocked path evaluates.
     */
   private[graft] def denseKernelTopK(emb: => DataFrame, queries: DataFrame, k: Int,
       metric: Metric,
@@ -505,78 +549,16 @@ object Ann {
       held: Option[Corpus] = None): DataFrame = {
     val spark = queries.sparkSession
     val qRows = vectorRows(queries, "qid", "qv")
-    val batch = fetchQueries(qRows, tile, budget)
-    val cap = fastPathCap(batch.dim, tile, budget)
-    lazy val corpus = held.getOrElse(Corpus.of(emb))
-    def run(tq: DataFrame, f: Fetched, room: Long) =
-      pass(spark, corpus, f.rows.getOrElse(collectDoubles(tq)).sortBy(_._1), k, metric,
-        excludeSelf, room)
-    if (batch.n <= cap || batch.oneQid) return run(qRows, batch, mergeBudget) match {
-      case Left(out)          => FrameBridge.local(spark, kernelSchema, out.toSeq)
-      case Right((merged, _)) => ranked(if (ordered) merged.coalesce(1) else merged, ordered)
-    }
-    // the batch is materialized once, so every pass reads the same rows
-    // and none reads the query frame again; a deterministic local frame
-    // is already rows on the driver
-    val onDriver = qRows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] &&
-      qRows.queryExecution.analyzed.deterministic
-    val src = if (onDriver) qRows else qRows.localCheckpoint(eager = true)
-    val kept = ArrayBuffer.empty[InternalRow]
-    val spilled = ArrayBuffer.empty[DataFrame]
-    // a hash tile's count is binomial: aim each tile at `fill` queries,
-    // three standard deviations under the cap, so one rarely splits again
-    val fill = math.max(1.0, math.pow(math.sqrt(cap + 2.25) - 1.5, 2))
-    def passes(part: DataFrame, n: Long, seed: Int): Unit = {
-      val nTiles = math.ceil(n / fill).toLong
-      (0L until nTiles).foreach { t =>
-        val tq = part.filter(pmod(xxhash64(col("_1"), lit(seed)), lit(nTiles)) === t)
-        val f = fetchQueries(tq, cap, budget)
-        if (f.n > cap && !f.oneQid) passes(tq, f.n, seed + 1)
-        else if (f.n > 0) run(tq, f, mergeBudget - kept.size * outRowBytes) match {
-          case Left(out) => kept ++= out
-          case Right((merged, bq)) =>
-            // on disk: past the merge bound the rows kept are large
-            spilled += ranked(merged, ordered = false)
-              .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
-            bq.destroy()
-        }
-      }
-    }
-    try passes(src, batch.n, 0)
-    finally if (!onDriver) src.queryExecution.analyzed.foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-    // each qid's rows come from one pass, in rnk order; the sort is stable
-    val local = FrameBridge.local(spark, kernelSchema, kept.sortBy(_.getLong(0)).toSeq)
-    if (spilled.isEmpty) local
-    else {
-      val all = spilled.foldLeft(local)(_ union _)
-      if (ordered) all.orderBy("qid", "rnk") else all
-    }
-  }
-
-  /** One fast-path pass for the sorted query rows `rows`: ONE scan job
-    * over `corpus` with no shuffle, the rows broadcast once. A corpus
-    * with fewer splits than cores is read by `cores` tasks per split,
-    * each scoring a contiguous qid shard (the batch's own size caps the
-    * shard count); otherwise each split is one task scoring every
-    * query. Each task keeps ≤k candidates per query (REPOSE's
-    * per-partition local top-k). When the splits × queries × k
-    * candidate slots (16 bytes each, plus a slot of bookkeeping per
-    * split and query) fit `room` bytes, they are collected and merged
-    * on the driver, and the result is Left(the output rows in (qid,
-    * rnk) order), the broadcast destroyed. Otherwise it is Right(the
-    * lazy per-qid TopK aggregate (qid, top) of the candidates, and the
-    * broadcast it reads).
-    */
-  private def pass(spark: SparkSession, corpus: Corpus, rows: Array[(Long, Array[Double])],
-      k: Int, metric: Metric, excludeSelf: Boolean, room: Long)
-      : Either[ArrayBuffer[InternalRow], (DataFrame, Broadcast[QueryBlock])] = {
+    val (nq, dim, fetched) = fetchQueries(qRows, tile, budget)
+    if (nq > fastPathCap(dim, tile, budget))
+      return ranked(blockedTop(emb, queries, k, metric, tile, excludeSelf = excludeSelf,
+        probed = Some((nq, dim))), ordered)
+    val rows = fetched.getOrElse(collectDoubles(qRows)).sortBy(_._1)
     val ids = rows.map(_._1)
+    val corpus = held.getOrElse(Corpus.of(emb))
     val scan = corpus.rows
     val splits = scan.getNumPartitions
-    if (rows.isEmpty || splits == 0) return Left(ArrayBuffer.empty)
+    if (rows.isEmpty || splits == 0) return mergedFrame(spark, ids, Array.empty, splits, k)
     val sc = spark.sparkContext
     val bq = sc.broadcast(new QueryBlock(ids, rows.map(_._2)))
     val (idAt, vecAt, floats) = (corpus.id, corpus.vec, corpus.floats)
@@ -596,16 +578,21 @@ object Ann {
         Iterator.single(st.partial(split, lo))
       }
     })
-    if (splits.toLong * rows.length * 16L * (k + 1) <= room) {
+    // 16 bytes per candidate slot (score, id) plus one slot of counts
+    // and merge indices, per (split, query)
+    if (splits.toLong * rows.length * 16L * (k + 1) <= mergeBudget) {
       val parts = tasks.collect()
       bq.destroy()
-      Option(kernelRuns.get).foreach(_ += KernelRun(corpus.plan, rows.length,
+      Option(kernelRuns.get).foreach(_ += KernelRun(corpus.plan,
         parts.length, parts.iterator.flatMap(_.counts).maxOption.getOrElse(0)))
-      Left(mergedRows(ids, parts, splits, k))
+      mergedFrame(spark, ids, parts, splits, k)
     } else {
       import spark.implicits._
-      Right((tasks.flatMap(_.rows(bq.value.ids)).toDF("qid", "score", "vec_id")
-        .groupBy("qid").agg(graft.ops.TopK.topk(k)(col("score"), col("vec_id")).as("top")), bq))
+      val merged = tasks.flatMap(_.rows(bq.value.ids)).toDF("qid", "score", "vec_id")
+        .groupBy("qid").agg(graft.ops.TopK.topk(k)(col("score"), col("vec_id")).as("top"))
+      // an ordered result merges on ONE partition, so the (qid, rnk)
+      // order is a local sort — no range-sampling job, no second shuffle
+      ranked(if (ordered) merged.coalesce(1) else merged, ordered)
     }
   }
 
@@ -625,14 +612,14 @@ object Ann {
     StructField("score", DoubleType, nullable = true),
     StructField("rnk", LongType, nullable = false)))
 
-  /** A pass's candidates merged on the driver: per qid, the k best
-    * (score desc, id asc) across the runs of every task that scored
-    * it, as output rows in (qid, rnk) order. `ids` is the sorted
-    * batch; equal qids merge into one list, as the TopK aggregate
-    * groups them.
+  /** The fast-path candidates merged on the driver: per qid, the k
+    * best (score desc, id asc) across the runs of every task that
+    * scored it, as a local frame in (qid, rnk) order. `ids` is the
+    * sorted batch; equal qids merge into one list, as the TopK
+    * aggregate groups them.
     */
-  private def mergedRows(ids: Array[Long], parts: Array[Partial], splits: Int,
-      k: Int): ArrayBuffer[InternalRow] = {
+  private def mergedFrame(spark: SparkSession, ids: Array[Long], parts: Array[Partial],
+      splits: Int, k: Int): DataFrame = {
     val nq = ids.length
     // run r = qi * splits + split: where query qi's candidates from
     // that split start, in which partial, and how many there are
@@ -647,7 +634,7 @@ object Ann {
         off += p.counts(j); j += 1
       }
     }
-    val out = ArrayBuffer.empty[InternalRow]
+    val out = new java.util.ArrayList[Row]()
     var a = 0
     while (a < nq) {
       var b = a + 1
@@ -667,22 +654,40 @@ object Ann {
           ri += 1
         }
         if (best < 0) more = false
-        else { out += InternalRow(ids(a), bi, bs, rnk); pos(best) += 1; rnk += 1 }
+        else { out.add(Row(ids(a), bi, bs, rnk)); pos(best) += 1; rnk += 1 }
       }
       a = b
     }
-    out
+    spark.createDataFrame(out, kernelSchema)
   }
 
+  /** Corpus rows per kernel block on the blocked path: one block is
+    * one side of a block×tile kernel cell, held as primitive arrays
+    * in a single task (8192 rows × 64-d doubles ≈ 4 MB).
+    */
+  private[graft] val defaultKernelBlockRows: Int = 1 << 13
+
   /** Fast-path driver-memory bound in MB (default 64): the most the
-    * dense kernel's driver holds of query doubles (one pass's tile: the
-    * fetch and its broadcast) and, separately, of partial candidates
-    * being merged plus the merged rows the passes of an over-cap batch
-    * keep. A batch fetch gives each query partition an equal share of
-    * it; a merge whose candidates exceed what is left runs as a TopK
-    * aggregate on the executors instead. The one driver-memory
-    * deployment setting: a larger bound runs an over-cap batch in
-    * fewer passes, each scanning the corpus once.
+    * dense kernel's driver holds of query doubles (the batch fetch and
+    * its broadcast) and, separately, of partial candidates being
+    * merged. A batch fetch gives each query partition an equal share
+    * of it; a merge whose candidates exceed it runs as a TopK
+    * aggregate on the executors instead. Deployment
+    * knob for the dispatch-crossover tradeoff — MEASURED r18 (the §5
+    * memory-vs-latency note): at 12k queries × 1024-d (96 MB packed,
+    * 1.5× over the default cap) against a 12k × 1024-d corpus on
+    * local[32]/8 GB driver, the blocked path runs 35.8 s vs 10.5 s
+    * for the one-broadcast fast path forced via
+    * SPARK_GRAFT_FASTPATH_MB=256 — a 3.4× penalty in the
+    * just-over-the-cap region (the 2D grid pays corpus×nTiles shuffle
+    * replication + packing serde + per-cell scheduling that the
+    * single broadcast never pays; FLOPs are identical). So: on a
+    * driver with ≥8 GB of headroom, set SPARK_GRAFT_FASTPATH_MB=256
+    * and batches up to ~32k × 1024-d stay on the fast path; the 64 MB
+    * default remains the conservative floor for small drivers, and
+    * the blocked path remains the only exact option once the batch
+    * truly cannot be broadcast (its cost scales linearly from there,
+    * ScaleRound15Ops).
     */
   private[graft] lazy val fastPathMb: Long =
     sys.env.get("SPARK_GRAFT_FASTPATH_MB") match {
@@ -696,16 +701,254 @@ object Ann {
       case None => 64L
     }
 
-  /** Queries per pass: each pass collects its tile of the batch to
-    * the driver and broadcasts it, so the bound caps driver memory (and
-    * broadcast size) at `budget` (default [[fastPathMb]]) of packed
-    * query doubles — 8192 queries at the reference's 1024-d. An
-    * explicitly smaller caller tile always wins (specs force many
-    * passes with tile=4).
+  /** Dim-aware bound on the one-broadcast fast path: the whole query
+    * batch is collected to the driver and broadcast, so the bound
+    * caps DRIVER memory (and broadcast size) at `budget` (default
+    * [[fastPathMb]]) of packed query doubles — 2× the 32 MB tile
+    * measured fastest at 1024-d (ScaleRound15Ops), 8192 queries at
+    * the reference dim. An
+    * explicitly smaller caller tile always wins (specs force
+    * multi-tile with tile=4).
     */
   private[graft] def fastPathCap(dim: Int, tile: Int, budget: Long = fastPathMb << 20): Int =
     if (dim <= 0) tile
     else math.max(1, math.min(tile.toLong, budget / (dim * 8L)).toInt)
+
+  /** Dim-aware packing bounds for the blocked kernel: one tile row
+    * materializes tile×dim doubles in a single shuffle row / task,
+    * one block row blockRows×dim. The defaults are sized for ~64-d
+    * embeddings; at 1024-d they would make half-GB rows, so cap a
+    * tile row at ~32 MB and a block row at ~16 MB regardless of what
+    * the caller (or the env default) asks for. At the reference's
+    * 1024-d this engages as (tileEff=4096, blockRowsEff=2048) —
+    * measured by ScaleRound15Ops (scan count stays ≡1, wall-clock
+    * linear in total scores; see SURVEY §6).
+    */
+  private[graft] def kernelPackingCaps(dim: Int, tile: Int,
+      blockRows: Int): (Int, Int) = {
+    val tileEff =
+      if (dim <= 0) tile
+      else math.max(1, math.min(tile, (32 << 20) / (dim * 8)))
+    val blockRowsEff =
+      if (dim <= 0) blockRows
+      else math.max(1, math.min(blockRows, (16 << 20) / (dim * 8)))
+    (tileEff, blockRowsEff)
+  }
+
+  /** [[bruteForceTopK]] through the 2D BLOCK-MATRIX kernel — exact
+    * cosine top-k whose corpus scan count is independent of the
+    * query-batch size (the huge-batch × huge-corpus path). Output and
+    * semantics identical to [[bruteForceTopK]]: same per-score
+    * rounding, same (score desc, id asc) tie-break — which is what
+    * lets the DuckDB oracle adjudicate this kernel directly
+    * (`ann_blocked_topk` forces multiple tiles AND blocks).
+    */
+  def bruteForceTopKBlocked(emb: DataFrame, queries: DataFrame, k: Int,
+      tile: Int = defaultKernelTile,
+      blockRows: Int = defaultKernelBlockRows): DataFrame =
+    ranked(blockedTop(emb, queries, k, Cosine, tile, blockRows), ordered = true)
+
+  /** 2D block-matrix dense kernel (SUMMA-style): the huge-query-batch
+    * × huge-corpus case where neither side fits one broadcast.
+    *
+    * - The CORPUS is scanned ONCE: each partition is chunked into
+    *   blocks of ≤`blockRows` rows; blocks replicate to the query
+    *   tiles through the SHUFFLE, never by re-reading the source (the
+    *   r13 tiled loop paid query_tiles × corpus scans — at 100 TB
+    *   that multiplier is the whole job).
+    * - The QUERY side never touches the driver: rows hash into
+    *   ⌈nq/tile⌉ tiles with a distributed groupByKey (the r13 loop
+    *   collected each tile to the driver, which also made the result
+    *   sensitive to a non-deterministic query input; here each qid
+    *   lands in exactly one tile by hash, deterministically).
+    * - Work spreads over a 2D grid: the cell key is (tile, slot)
+    *   where slot spreads a tile's blocks over `nSlots` reducers —
+    *   without the salt every block for a tile would land on ONE
+    *   reducer and serialize the kernel. Tiles replicate nSlots ways,
+    *   blocks nTiles ways: the classic 2D-matmul replication, volume
+    *   corpus×nTiles + queries×nSlots, moved once through the shuffle.
+    * - The kernel is a CO-PARTITIONED ZIP, not a join (r15 ask 1):
+    *   both sides hash-repartition on the cell key with the same
+    *   explicit cell count, and one function per partition
+    *   deserializes each tile replica ONCE, then STREAMS that cell's
+    *   blocks through it. The r14 joinWith formulation re-materialized
+    *   the packed tile row (32 MB at 1024-d) for EVERY joined
+    *   block×tile pair — at nTiles=1 that re-deserialization was a
+    *   measured 3.4× constant factor over the broadcast path on
+    *   identical FLOPs. A runtime alignment assert (Spark's own
+    *   Murmur3 long hash pmod nCells vs the task's partition id, both
+    *   sides) turns any future co-partitioning drift into a loud
+    *   failure instead of silently dropped candidates.
+    * - Partial-TopK on BOTH axes: each CELL emits ≤k candidates per
+    *   query — merged across all of the cell's blocks in-task, so the
+    *   final shuffle carries nSlots×k rows per query instead of the
+    *   r14 nBlocks×k; the TopK aggregate merges cells per qid. The
+    *   union of per-cell top-k always contains the global top-k and
+    *   the merge is order-invariant with the shared (score desc, id
+    *   asc) tie-break, so output is row-equal to the one-broadcast
+    *   path — spec-pinned at adversarially small tile/block sizes
+    *   (AnnSpec).
+    *
+    * This is the exact-scoring fallback; the LSH/IVF partition-pruned
+    * paths remain the first choice at corpus scale.
+    */
+  private[graft] def blockedTop(emb: DataFrame, queries: DataFrame, k: Int,
+      metric: Metric,
+      tile: Int = defaultKernelTile,
+      blockRows: Int = defaultKernelBlockRows,
+      nSlotsOverride: Option[Int] = None,
+      excludeSelf: Boolean = true,
+      probed: Option[(Long, Int)] = None): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val qDs = asDoubles(vectorRows(queries, "qid", "qv"))
+    // count (for nTiles) and exact max dim (for the packing caps):
+    // one probe job, skipped when the dispatch already ran it
+    val (nq, dim) = probed.getOrElse(probeQueries(queries))
+    val (tileEff, blockRowsEff) = kernelPackingCaps(dim, tile, blockRows)
+    val nTiles = math.max(1L, (nq + tileEff - 1) / tileEff)
+    // nSlots sets the grid's second axis — the SUMMA replication
+    // volume is corpus×nTiles + queries×nSlots, so more slots buy
+    // kernel parallelism with query-side (small side) replication.
+    // Default: one slot per core. Overridable for the nSlots
+    // sensitivity probe (ScaleRound15Ops) and for clusters where the
+    // query batch is so wide that queries×nSlots dominates (the §7
+    // p^1/2-grid note).
+    val nSlots = nSlotsOverride
+      .getOrElse(math.max(1, spark.sparkContext.defaultParallelism)).toLong
+    // EXACTLY one kernel task per block×tile cell, FORCED by an
+    // explicit-N hash repartition of both kernel inputs on the cell
+    // key. The explicit N defeats two strandings: (a) the tile table
+    // has only nTiles non-empty partitions after groupByKey (the
+    // slot fan-out is map-side, so it never re-spreads), and AQE
+    // coalesces by shuffled BYTES — a few MB of packed tiles that
+    // carry minutes of per-cell compute read as "one partition" to
+    // it (REPARTITION_BY_NUM is the one shuffle origin AQE never
+    // coalesces); (b) with nCells == #keys, RANDOM key hashing piles
+    // 2–3 cells onto one reducer while others sit empty, and the
+    // kernel's wall-clock is max-cells-per-task × per-cell time (the
+    // r16 probe measured this collision skew as the whole remaining
+    // blocked-vs-broadcast constant factor at nTiles=1 — serde and
+    // FLOPs were already at parity). So each logical cell gets a
+    // SEARCHED key that Spark's own Murmur3-pmod places in its own
+    // dedicated partition: perfect 1-cell-per-task placement through
+    // the stock Tungsten shuffle.
+    // practical ceiling 2^20 (not the 2^24 the key search could
+    // cover): the key table is 8 bytes/cell and rides a BROADCAST to
+    // every kernel task, and >1M cells means >1M tasks of a kernel
+    // whose whole point is minutes-per-cell compute — a grid that
+    // size is a mis-parameterization, not a workload (r16 ADVICE)
+    require(nTiles * nSlots <= (1L << 20),
+      s"blocked kernel grid $nTiles tiles x $nSlots slots exceeds 2^20 cells — " +
+        "pass a smaller nSlotsOverride (the SUMMA p^1/2-grid note, SURVEY §7)")
+    val nCells = (nTiles * nSlots).toInt
+    // cellKeys(c) = a long whose Murmur3(seed 42) pmod nCells == c;
+    // coupon-collector search, ~nCells·ln(nCells) cheap hashes
+    val cellKeys: Array[Long] = {
+      val out = new Array[Long](nCells)
+      val seen = new Array[Boolean](nCells)
+      var found = 0; var cand = 0L
+      val bound = math.max(1L << 20, nCells.toLong * 1000L)
+      while (found < nCells && cand < bound) {
+        val p = Math.floorMod(
+          org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(cand, 42), nCells)
+        if (!seen(p)) { seen(p) = true; out(p) = cand; found += 1 }
+        cand += 1
+      }
+      require(found == nCells,
+        s"cell-key search did not cover $nCells partitions within $bound candidates")
+      out
+    }
+    // ship the key table as a broadcast, not a closure capture: both
+    // flatMaps below reference it, and a captured Array[Long] would
+    // ride inside each serialized task binary (8 MB at the 2^20
+    // ceiling, once per task) instead of once per executor (r16
+    // ADVICE)
+    val bcCellKeys = spark.sparkContext.broadcast(cellKeys)
+    // Tiles and blocks ship through the shuffle as PACKED PRIMITIVE
+    // ARRAYS (ids, end-offsets, flat values) rather than
+    // Array[(Long, Array[Double])]: the nested-tuple encoder walks
+    // every element through an InternalRow (the r15 probe measured
+    // that serde, not the kernel, as most of the blocked path's
+    // 3.4× constant factor at nTiles=1 — a 32 MB tile replica ×
+    // nSlots is half a GB of element-wise encoding), while primitive
+    // arrays take UnsafeArrayData's fromPrimitiveArray memcpy on
+    // both serialize and deserialize.
+    // (tile, slot) -> packed query tile, replicated across the slots
+    val qTiles = qDs
+      .groupByKey { case (qid, _) =>
+        Math.floorMod(scala.util.hashing.byteswap64(qid), nTiles) }
+      .mapGroups { (t, it) =>
+        val (ids, ends, flat) = packRows(it.toArray.sortBy(_._1))
+        (t, ids, ends, flat)
+      }
+      .flatMap { case (t, ids, ends, flat) =>
+        (0L until nSlots).iterator.map(sl =>
+          (bcCellKeys.value((t * nSlots + sl).toInt), ids, ends, flat)) }
+      .repartition(nCells, col("_1"))
+    // (tile, slot) -> corpus block: ONE pass over the corpus; the
+    // slot comes from the task partition id so a partition's blocks
+    // spread deterministically without a second hash of the data
+    val blocks = asDoubles(vectorRows(emb, "vec_id", "embedding"))
+      .mapPartitions { it =>
+        val sl = org.apache.spark.TaskContext.getPartitionId().toLong % nSlots
+        it.grouped(blockRowsEff).zipWithIndex.map { case (b, i) =>
+          val (ids, ends, flat) = packRows(b.toArray)
+          ((i.toLong + sl) % nSlots, ids, ends, flat)
+        }
+      }
+      .flatMap { case (sl, ids, ends, flat) =>
+        (0L until nTiles).iterator.map(t =>
+          (bcCellKeys.value((t * nSlots + sl).toInt), ids, ends, flat)) }
+      .repartition(nCells, col("_1"))
+    // Both sides carry the SAME HashPartitioning (cell key, nCells) —
+    // partition i of qTiles and partition i of blocks hold exactly
+    // the same cell keys, so the kernel is a partition ZIP: per
+    // partition, deserialize each tile replica once into primitive
+    // arrays, then stream the blocks through it. No join, no
+    // sort-merge of 32 MB rows, no per-pair tile re-deserialization.
+    val partials = qTiles.rdd.zipPartitions(blocks.rdd) { (tileIt, blockIt) =>
+      val pid = org.apache.spark.TaskContext.getPartitionId()
+      def assertAligned(cell: Long, side: String): Unit = {
+        // Spark routes a bigint repartition column through
+        // Murmur3Hash(seed 42) pmod numPartitions; recompute it here
+        // so a co-partitioning drift (a future Spark changing the
+        // hash, an AQE rewrite of the exchange) fails loudly instead
+        // of silently dropping candidates.
+        val expect = Math.floorMod(
+          org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(cell, 42), nCells)
+        require(expect == pid,
+          s"blocked kernel $side cell $cell landed in partition $pid, " +
+            s"expected $expect of $nCells — co-partitioning broke")
+      }
+      // one kernel state per cell in this partition (≈1 by
+      // construction: nCells ≥ nTiles×nSlots hash-spread)
+      val cells = new scala.collection.mutable.LongMap[KernelState]()
+      tileIt.foreach { case (cell, qids, ends, flat) =>
+        assertAligned(cell, "tile")
+        cells.update(cell, new KernelState(
+          new QueryBlock(qids, unpackVecs(ends, flat)), k, metric, excludeSelf))
+      }
+      blockIt.foreach { case (cell, vids, ends, flat) =>
+        assertAligned(cell, "block")
+        // a cell with no tile state is an EMPTY tile bucket (blocks
+        // replicate to every tile index; a small batch can leave some
+        // hash buckets without queries) — nothing to score
+        cells.get(cell).foreach { st =>
+          var r = 0; var start = 0
+          while (r < vids.length) {
+            st.offer(vids(r), flat, start, ends(r) - start)
+            start = ends(r); r += 1
+          }
+        }
+      }
+      cells.valuesIterator.flatMap(_.rows)
+    }
+    partials
+      .toDF("qid", "score", "vec_id")
+      .groupBy("qid")
+      .agg(graft.ops.TopK.topk(k)(col("score"), col("vec_id")).as("top"))
+  }
 
   /** nPlanes deterministic random hyperplanes: (p, w: array<double>),
     * w[d] = (md5Long("pl_p_d") mod 2001 − 1000)/1000 ∈ [−1, 1].

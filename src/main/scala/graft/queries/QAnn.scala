@@ -33,17 +33,17 @@ private[graft] object QAnn {
                |  FROM sc)
                |WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin)),
 
-      // the dense kernel's over-cap passes under the DuckDB oracle:
-      // tile=17 splits the 64 queries into several hash tiles, each a
-      // one-scan pass with its own driver merge, so the oracle
-      // adjudicates the tiling itself, not just the one-pass path
-      // (AnnSpec pins row-equality separately)
+      // the 2D block-matrix kernel under the DuckDB oracle (round 14):
+      // tile=17 / blockRows=129 force MANY tiles × MANY blocks on this
+      // corpus, so the oracle adjudicates the partial-TopK-on-both-axes
+      // merge itself, not just the fast path (AnnSpec pins row-equality
+      // separately; this row makes the kernel hash-gated every round)
       "ann_blocked_topk" -> Q(
         (s, d) => {
           val emb = Tables.embeddings(s, d)
           val q = emb.filter(col("vec_id") < 64)
             .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-          Ann.denseKernelTopK(emb, q, 5, Ann.Cosine, tile = 17)
+          Ann.bruteForceTopKBlocked(emb, q, 5, tile = 17, blockRows = 129)
         },
         Some("""WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
                |           FROM embeddings WHERE vec_id < 64),

@@ -733,18 +733,18 @@ object StreamOps {
     * the online-serving face of the engine (the reference's
     * search_query endpoint, as a continuous pipeline).
     *
-    * Each micro-batch runs the dense kernel
+    * Each micro-batch routes through the dense-kernel dispatch
     * ([[graft.ann.Ann.denseKernelTopK]]): a batch that fits one query
-    * tile (≤`tile` queries, and within the driver-memory bound)
-    * broadcasts once and scans the collection once; a backfill or
-    * replay surge ABOVE that bound runs one such pass per query tile,
-    * one tile broadcast at a time, so the driver never holds more
-    * than one tile. Output is row-equal to the batch
+    * tile (≤`tile` queries) broadcasts once and scans the collection
+    * once; a batch ABOVE the tile bound goes through the 2D
+    * block-matrix kernel ([[graft.ann.Ann.blockedTop]]) so a backfill
+    * or replay surge still pays ONE collection scan instead of one
+    * per query tile. Output is row-equal to the batch
     * `Ann.bruteForceTopK` on the same (collection, batch) — same
     * 6dp rounding, same (score desc, id asc) tie-break, same
     * self-exclusion — spec-pinned at a forced multi-tile size
-    * (StreamingSpec "streaming search answers oversized micro-batches
-    * in tiled kernel passes").
+    * (StreamingSpec "streaming search routes oversized micro-batches
+    * through the blocked kernel").
     */
   def startStreamingSearch(queries: DataFrame, collection: DataFrame, k: Int,
                            tile: Int = graft.ann.Ann.defaultKernelTile)

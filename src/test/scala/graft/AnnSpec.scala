@@ -48,19 +48,25 @@ class AnnSpec extends SparkSpec with JobStats {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(a.length == b.length && a.nonEmpty)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"$x != $y") }
-    // over the cap (tile far below the query count) the batch runs as
-    // one pass per hash tile — must be row-identical too: tiling is a
-    // memory shape, not a result
+    // overflow path (tile far below the query count) now routes to the
+    // 2D block-matrix kernel — must be row-identical too: blocking is
+    // a memory/shuffle shape, not a result
     val c = Ann.denseKernelTopK(emb, q, 5, Ann.Cosine, tile = 37)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(a.length == c.length)
     a.zip(c).foreach { case (x, y) => assert(x == y, s"tiled: $x != $y") }
-    // and at an adversarially small tile: dozens of passes, hash tiles
-    // over the cap split again under the next seed
-    val d = Ann.denseKernelTopK(emb, q, 5, Ann.Cosine, tile = 19)
+    // blocked kernel pinned directly at adversarially small tile AND
+    // block sizes (many tiles × many blocks × salted slots): the
+    // partial-TopK-on-both-axes merge must still be exact
+    val d = Ann.blockedTop(emb, q, 5, Ann.Cosine,
+        tile = 19, blockRows = 23)
+      .select(col("qid"), org.apache.spark.sql.functions.posexplode(col("top")))
+      .select(col("qid"), col("col.id").as("vec_id"), col("col.score").as("score"),
+              (col("pos") + 1).cast("long").as("rnk"))
+      .orderBy("qid", "rnk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(a.length == d.length)
-    a.zip(d).foreach { case (x, y) => assert(x == y, s"tile 19: $x != $y") }
+    a.zip(d).foreach { case (x, y) => assert(x == y, s"blocked: $x != $y") }
   }
 
   /** 7-d (not a multiple of four). Around e1, raw cosines straddle the
@@ -101,14 +107,8 @@ class AnnSpec extends SparkSpec with JobStats {
       val want = tuples(Ann.bruteForceTopK(e, q, k))
       assert(want.filter(_._1 == 0L).map(_._2).take(3) == Seq(1L, 3L, 6L), want)
       assert(tuples(Ann.bruteForceTopKDense(e, q, k)) == want, s"dense k=$k")
-      // tiles 3, 4 and 19 run the over-cap passes on this 31-query
-      // batch; 37 and 41 run one pass
-      val schema = Ann.bruteForceTopK(e, q, k).schema
-      for (tile <- Seq(3, 4, 19, 37, 41)) {
-        val got = Ann.denseKernelTopK(e, q, k, Ann.Cosine, tile = tile)
-        assert(tuples(got) == want, s"tile $tile k=$k")
-        assert(got.schema == schema, s"tile $tile k=$k")
-      }
+      assert(tuples(Ann.bruteForceTopKBlocked(e, q, k, tile = 3, blockRows = 4)) == want,
+        s"blocked k=$k")
       val a = nonNull.select(col("vec_id").as("va"), col("embedding").as("ea"))
       val b = nonNull.select(col("vec_id").as("vb"), col("embedding").as("eb"))
       val w = org.apache.spark.sql.expressions.Window
@@ -205,49 +205,28 @@ class AnnSpec extends SparkSpec with JobStats {
       val skew = jobsOf(assert(tuples(
         Ann.denseKernelTopK(c, scanned, k, Ann.Cosine, budget = nq * 56)) == want))
       assert(fit == 2 && skew == 3, s"fit $fit, skewed $skew jobs")
-      // over the cap (tile 4): one-scan passes of at most 4 queries
-      // each, merged on the driver — no shuffle at all
-      var over = Seq.empty[Ann.KernelRun]
-      val st = statsOf {
-        val (got, runs) = Ann.recordingKernelRuns(
-          Ann.denseKernelTopK(c, scanned, k, Ann.Cosine, tile = 4))
-        assert(tuples(got) == want, s"over the cap k=$k")
-        over = runs
-      }
-      assert(st.shuffleWriteBytes == 0L, s"${st.shuffleWriteBytes} shuffle bytes written")
-      assert(over.size >= 2 && over.forall(_.queries <= 4), over)
-      assert(over.map(_.queries).sum == nq, over)
-      // passes past the merge bound materialize their TopK aggregate:
-      // every pass (budget 1) or all but the first few (2000 bytes)
-      for (mb <- Seq(1L, 2000L)) {
-        val (spilled, merged) = Ann.recordingKernelRuns(
-          Ann.denseKernelTopK(c, scanned, k, Ann.Cosine, tile = 4, mergeBudget = mb))
-        assert(merged.isEmpty == (mb == 1L), merged)
-        assert(tuples(spilled) == want, s"over the cap, merge budget $mb k=$k")
-        assert(spilled.schema == lazyMerge.schema)
-        val unordered = Ann.denseKernelTopK(c, scanned, k, Ann.Cosine, tile = 4,
-          mergeBudget = mb, ordered = false)
-        assert(tuples(unordered).sortBy(t => (t._1, t._4)) == want, s"unordered, $mb k=$k")
-      }
+      // over the cap (tile 4): the blocked kernel takes the fetch job's
+      // (count, dim), so the dispatch runs no more jobs than the
+      // blocked kernel with its own probe
+      val over = jobsOf(assert(tuples(
+        Ann.denseKernelTopK(c, scanned, k, Ann.Cosine, tile = 4)) == want))
+      val blocked = jobsOf(Ann.bruteForceTopKBlocked(c, scanned, k, tile = 4).collect())
+      assert(over == blocked, s"dispatched $over vs blocked $blocked jobs")
     }
   }
 
-  test("over-cap passes stay exact on a repeated qid and a non-deterministic query frame") {
+  test("over-cap kernel stays exact on a repeated qid and a non-deterministic query frame") {
     val e = boundaryCorpus
     val c = parquetCopy(e)
     val q = asQueries(c)
     for (k <- Seq(3, 5)) {
-      // qid 7 on nine rows, over the cap of 4 queries: its tile cannot
-      // split, so it runs as one pass whose merge groups the nine lists
+      // qid 7 on ten rows, over the cap of 4 queries: all ten land in
+      // one tile, whose merge groups the ten lists into one
       val repeated = q.withColumn("qid",
-        when(col("qid").between(10, 18), lit(7L)).otherwise(col("qid")))
-      val want = tuples(Ann.bruteForceTopK(e, repeated, k))
-      val (got, runs) = Ann.recordingKernelRuns(
-        Ann.denseKernelTopK(c, repeated, k, Ann.Cosine, tile = 4))
-      assert(tuples(got) == want, s"repeated qid k=$k")
-      assert(runs.exists(_.queries >= 10) && runs.size >= 2, runs)
-      // a seeded random sample is non-deterministic to the analyzer:
-      // the frame is materialized once, then tiled
+        when(col("qid").between(9, 18), lit(7L)).otherwise(col("qid")))
+      assert(tuples(Ann.denseKernelTopK(c, repeated, k, Ann.Cosine, tile = 4)) ==
+        tuples(Ann.bruteForceTopK(e, repeated, k)), s"repeated qid k=$k")
+      // a seeded random sample is non-deterministic to the analyzer
       val sampled = q.filter(rand(5) < 0.8)
       assert(!sampled.queryExecution.analyzed.deterministic)
       assert(tuples(Ann.denseKernelTopK(c, sampled, k, Ann.Cosine, tile = 4)) ==

@@ -126,7 +126,7 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("streaming search answers oversized micro-batches in tiled kernel passes") {
+  test("streaming search routes oversized micro-batches through the blocked kernel") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
@@ -136,10 +136,11 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Long]
     val queries = input.toDF().join(coll, col("value") === col("vec_id"))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    // tile=4 with an 11-query micro-batch: above the tile bound, so
-    // the foreachBatch dispatch runs one kernel pass per hash tile of
-    // at most 4 queries. Equality vs the batch bruteForceTopK pins that
-    // the tiling is invisible to the caller.
+    // tile=4 with an 11-query micro-batch: 3 tiles — above the tile
+    // bound, so the foreachBatch dispatch must take the blockedTop
+    // path (the head(tile+1) probe overflows), not the per-tile
+    // broadcast loop. Equality vs the batch bruteForceTopK pins that
+    // the serve path's kernel swap is invisible to the caller.
     val query = StreamOps.startStreamingSearch(queries, coll, 3, tile = 4) { res =>
       res.collect().foreach(r =>
         buf.add((r.getAs[Long]("qid"), r.getAs[Long]("vec_id"),
