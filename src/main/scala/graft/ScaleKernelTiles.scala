@@ -33,7 +33,7 @@ object ScaleKernelTiles {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def peakHeapMb(): Long = {
+    def liveHeapMb(): Long = {
       System.gc()
       val r = Runtime.getRuntime
       (r.totalMemory() - r.freeMemory()) >> 20
@@ -61,7 +61,7 @@ object ScaleKernelTiles {
         corpus, q, 5, graft.ann.Ann.Cosine, tile = tile).count()
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[kernel-tiles] nq=$nq corpus=$nCorpus dim=$dim tile=$tile cap=$cap " +
-        f"$path rows=$rows: $secs%.2f s, peak heap ${peakHeapMb()} MB")
+        f"$path rows=$rows: $secs%.2f s, live heap after GC ${liveHeapMb()} MB")
       require(rows == nq * 5, s"expected ${nq * 5} rows, got $rows")
     }
     spark.stop()
