@@ -6,11 +6,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Measurement hygiene (the artifact must distinguish noise from
   * regression):
-  * - each query is timed SPARK_GRAFT_BENCH_RUNS times (default 3) and
+  * - each query is timed SPARK_GRAFT_BENCH_RUNS times (default 5) and
   *   the JSON records the per-query MEDIAN plus the [min, max] spread,
   *   so load-induced drift shows up as spread, not as a phantom
   *   regression in the headline number;
   * - "total" is the sum of medians;
+  * - a query that throws measured nothing: it is named with its error
+  *   on a "failed" detail line and left out of "queries" and "total";
   * - the JSON also carries a shared-query subtotal against the newest
   *   BENCH_r*.json in the repo taken at the same `cpus` and `sf`
   *   ("baseline" block, null with the reason on a detail line when no
@@ -27,24 +29,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus.toString
     // 5-run floor by default: medians of 3 still moved with machine
     // state (r9's committed headline was 1.56× pure load noise; r12's
     // was 1.62× for the same reason — both judged clean on an idle
     // re-run). Two extra passes is cheaper than one phantom regression.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Harness.session(
+      "spark.sql.adaptive.enabled" -> "true",
       // production-recommended: coalesce small shuffle partitions to
       // the target size instead of keeping max parallelism — fewer
       // tasks per tiny stage here, same plans at scale
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
     // Every global (unpartitioned) window in the inventory is bounded
     // by construction (rank-after-limit / ≤20-row RRF lists) and
     // WindowGuardSpec pins the exact allowlist of queries that may
@@ -63,9 +59,7 @@ object Bench {
     val benchSet: Seq[String] = sys.env.get("SPARK_GRAFT_BENCH_FILTER") match {
       // local iteration: time just the named queries (comma-separated
       // name prefixes, same convention as Verify's filter arg)
-      case Some(f) =>
-        val ps = f.split(',').toSeq
-        SparkEntry.queries.keys.toSeq.filter(n => ps.exists(n.startsWith)).sorted
+      case Some(f) => Harness.named(f)
       case None =>
         if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1"))
           SparkEntry.queries.keys.toSeq.sorted
@@ -107,12 +101,6 @@ object Bench {
     def evict(keep: Set[Int]): Unit = Bench.evict(spark, keep)
     evict(Set.empty) // clear the warmup pass's per-query blocks
     val fixtureIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def time(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     // r18: record each query's wall-clock start (epoch seconds) so
     // the bimodal host's degraded-phase windows are identifiable
     // post-hoc in the committed artifacts (r17's 4 phantom 8–30×
@@ -120,16 +108,19 @@ object Bench {
     // the timestamps go to an EARLIER detail line; the final one-line
     // JSON contract is unchanged.
     val startedAt = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val results = orderedSet.map { name =>
+    val outcomes = orderedSet.map { name =>
       startedAt(name) = System.currentTimeMillis() / 1000L
       // evict after EACH timed run, not after the run set: runs 1..n-1
       // of the same query would otherwise leave their localCheckpoint
       // blocks behind and inflate runs 2..n — the within-query version
       // of the cross-query drift this evictor exists to stop
-      val ts = (1 to runs).map { _ =>
-        val t = time(name); evict(fixtureIds); t
-      }.sorted
-      name -> (ts(ts.size / 2), ts.head, ts.last)
+      name -> Harness.timeRuns(runs, evict(fixtureIds)) {
+        SparkEntry.queries(name)(spark, sfDir).count()
+      }
+    }
+    val failed = outcomes.collect { case (k, Left(e)) => k -> e }
+    val results = outcomes.collect { case (k, Right(ts)) =>
+      k -> (ts(ts.size / 2), ts.head, ts.last)
     }
     // Medians at 3 decimals: the final line must stay well under the
     // driver's tail-capture window (~2 KB) or it records parsed:null
@@ -168,8 +159,11 @@ object Bench {
       .map { case (k, t) => s""""$k":$t""" }.mkString("{", ",", "}")
     println(s"""{"detail":"timestamps","unit":"epoch_sec","started":$stamps}""")
     println(s"""{"detail":"spread","runs":$runs,"spread":$spread}""")
-    val reason = baselineReason.replace('"', '\'').replace('\\', '/')
-    println(s"""{"detail":"baseline","reason":"$reason"}""")
+    println(s"""{"detail":"baseline","reason":${Harness.quote(baselineReason)}}""")
+    if (failed.nonEmpty) {
+      val errs = failed.map { case (k, e) => Harness.quote(k) + ":" + Harness.quote(e) }
+      println(s"""{"detail":"failed","queries":${errs.mkString("{", ",", "}")}}""")
+    }
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$runs,""" +
       s""""queries":$qs,"baseline":$baseline,"sf":"$sfDir"}""")
     spark.stop()

@@ -57,11 +57,7 @@ object GenTestData {
     val out = args(0)
     val sf = if (args.length > 1) args(1).toDouble else 1.0
     val skew = if (args.length > 2) args(2).toDouble else 0.0
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     write(spark, out, sf, skew)
     spark.stop()
   }

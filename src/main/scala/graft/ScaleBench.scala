@@ -1,66 +1,108 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.score
 
-/** Vector-search scale benchmark on SYNTHETIC data (the sf test
-  * tables cap at 2000 vectors; this generates millions in-plan, no
-  * I/O, to measure the compute path that dominates at 100 TB).
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.SparkSession
+
+/** Scale harness: `runMain graft.ScaleBench <scenario> [args]` runs one
+  * named scenario on the [[Harness]] session and prints ONE JSON line,
+  * `{"scenario":<name>, …its fields}`. Positional args are the
+  * scenario's sizes; each defaults to the size its SURVEY §6 notes were
+  * measured at.
   *
-  * Usage: runMain graft.ScaleBench [nVectors] [nQueries]
-  * Prints one JSON line with single-query (TakeOrdered) and batched
-  * (TopK partial aggregate) top-10 timings.
+  * `query` times the real `SparkEntry.queries` code on one or more
+  * corpus dirs, so a scale regression in a query shows up in its
+  * number. The other scenarios call library operators on synthetic
+  * inputs larger than any sf corpus ([[ScaleScenarios]]).
   */
 object ScaleBench {
+
+  type Fields = Seq[(String, Any)]
+
+  /** A scenario's positional args. */
+  final class Args(a: Seq[String]) {
+    def str(i: Int): String = a.lift(i).getOrElse(
+      throw new IllegalArgumentException(s"missing positional arg ${i + 1}"))
+    def str(i: Int, default: String): String = a.lift(i).getOrElse(default)
+    def long(i: Int, default: Long): Long = a.lift(i).fold(default)(_.toLong)
+    def int(i: Int, default: Int): Int = a.lift(i).fold(default)(_.toInt)
+  }
+
+  final case class Scenario(usage: String, run: (SparkSession, Args) => Fields)
+
+  import ScaleScenarios._
+  val scenarios: ListMap[String, Scenario] = ListMap(
+    "query" -> Scenario("<prefix,...> [sfDir,...] [reps]", query),
+    "topk" -> Scenario("[nVectors] [nQueries]", topk),
+    "dim" -> Scenario("[nVectors64] [nQueries]", dim),
+    "dedup" -> Scenario("[nDocs]", dedup),
+    "near-dup" -> Scenario("[nDocs] [nVecs]", nearDup),
+    "prefix-filter" -> Scenario("[nDocs]", prefixFilter),
+    "joins" -> Scenario("[nRows] [nUsers]", joins),
+    "pipeline" -> Scenario("[nDocs] [nVecs]", pipeline),
+    "gramian-lsh-bootstrap" -> Scenario("[nVecs] [nDocs] [nRows]", gramianLshBootstrap),
+    "rank-scans" -> Scenario("[nUsers] [nOrders] [nDocs]", rankScans),
+    "kernel-tiles" -> Scenario("[nQueries] [nCorpus] [dim] [tile]", kernelTiles),
+    "grid-scans" -> Scenario("[nQueries] [nCorpus] [dim] [tile]", gridScans),
+    "grid-1024d" -> Scenario("[nCorpus] [dim] [nqBase] [slots,...]", grid1024d),
+    "grid-parts" -> Scenario("", gridParts))
+
   def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val nq = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (args.isEmpty || !scenarios.contains(args(0))) {
+      System.err.println("usage: graft.ScaleBench <scenario> [args]\n" +
+        scenarios.map { case (n, s) => s"  $n ${s.usage}" }.mkString("\n"))
+      sys.exit(2)
+    }
+    val spark = Harness.session()
+    try println(line(spark, args(0), args.toSeq.tail))
+    finally spark.stop()
+  }
 
-    def vecs(rows: Long) = spark.range(rows).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)),
-        d => ((pmod(xxhash64(col("id"), d), lit(2001)) - lit(1000)) / 1000.0)
-          .cast("float"))
-        .as("embedding"))
+  /** Runs `scenario` with `args` on `spark`: its JSON line. */
+  def line(spark: SparkSession, scenario: String, args: Seq[String]): String =
+    json(ListMap(("scenario" -> scenario) +: scenarios(scenario).run(spark, new Args(args)): _*))
 
-    // warmup
-    vecs(10000).agg(count(lit(1))).collect()
+  private def json(v: Any): String = v match {
+    case None => "null"
+    case Some(x) => json(x)
+    case s: String => Harness.quote(s)
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else f"$d%.3f"
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => Harness.quote(k.toString) + ":" + json(x) }.mkString("{", ",", "}")
+    case s: Seq[_] => s.map(json).mkString("[", ",", "]")
+    case x => x.toString
+  }
 
-    // materialize the corpus as parquet — the benchmark measures the
-    // REAL search path (parquet scan + cosine + top-k), which is what
-    // runs at 100 TB; generation cost is excluded
-    val dir = java.nio.file.Files.createTempDirectory("graft-scale").toString + "/emb"
-    vecs(n).write.mode("overwrite").parquet(dir)
-    val emb = spark.read.parquet(dir)
-
-    // scan-only baseline: how much of the time is parquet array
-    // materialization vs scoring
-    val ts = System.nanoTime()
-    emb.agg(sum(element_at(col("embedding"), 1))).collect()
-    val tScan = (System.nanoTime() - ts) / 1e9
-    val q1 = vecs(1).select(col("embedding").as("qv"))
-    val t0 = System.nanoTime()
-    emb.crossJoin(broadcast(q1))
-      .select(col("vec_id"), score(col("embedding"), col("qv")).as("score"))
-      .orderBy(col("score").desc, col("vec_id")).limit(10).collect()
-    val tSingle = (System.nanoTime() - t0) / 1e9
-
-    val qs = vecs(nq).select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val t1 = System.nanoTime()
-    graft.ann.Ann.bruteForceTopK(emb, qs, 10).collect()
-    val tBatch = (System.nanoTime() - t1) / 1e9
-
-    val scoresPerSec = (n * nq / tBatch / 1e6)
-    println(f"""{"metric":"scale_topk","n":$n,"n_queries":$nq,""" +
-      f""""scan_sec":$tScan%.3f,"single_sec":$tSingle%.3f,"batch_sec":$tBatch%.3f,""" +
-      f""""mscores_per_sec":$scoresPerSec%.2f}""")
-    spark.stop()
+  /** Times each query named by `prefixes` (Bench's filter) `reps`
+    * times on each comma-separated corpus dir, after one untimed run
+    * there (JIT, code generation and the dir's shared frames), evicting
+    * each run's checkpoint blocks as Bench does. Prints each query's
+    * median seconds per dir and, with two dirs, its second/first ratio:
+    * run on two GenTestData scales, the ratio is the query's doubling
+    * factor.
+    */
+  private def query(spark: SparkSession, a: Args): Fields = {
+    val names = Harness.named(a.str(0))
+    val dirs = a.str(1, "/root/testdata/sf0.1").split(',').toSeq
+    val reps = a.int(2, 3)
+    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // query by query, so that the JVM's warm-up over the session
+    // weighs on every dir of a query alike
+    val outcomes = names.map { n =>
+      n -> dirs.map { dir =>
+        def time(runs: Int) = Harness.timeRuns(runs, Bench.evict(spark, keep)) {
+          SparkEntry.queries(n)(spark, dir).count()
+        }
+        time(1).flatMap(_ => time(reps))
+      }
+    }
+    val failed = outcomes.flatMap { case (n, rs) => rs.collectFirst { case Left(e) => n -> e } }
+    val medians = outcomes.collect { case (n, rs) if rs.forall(_.isRight) =>
+      n -> rs.collect { case Right(ts) => ts(ts.size / 2) }
+    }
+    Seq("dirs" -> dirs, "reps" -> reps, "sec" -> ListMap(medians: _*)) ++
+      (if (dirs.size == 2)
+        Seq("ratio" -> ListMap(medians.map { case (n, Seq(s1, s2)) => n -> s2 / s1 }: _*))
+      else Nil) ++
+      (if (failed.nonEmpty) Seq("failed" -> ListMap(failed: _*)) else Nil)
   }
 }

@@ -687,7 +687,7 @@ object Ann {
     * default remains the conservative floor for small drivers, and
     * the blocked path remains the only exact option once the batch
     * truly cannot be broadcast (its cost scales linearly from there,
-    * ScaleRound15Ops).
+    * ScaleBench grid-1024d).
     */
   private[graft] lazy val fastPathMb: Long =
     sys.env.get("SPARK_GRAFT_FASTPATH_MB") match {
@@ -705,7 +705,7 @@ object Ann {
     * batch is collected to the driver and broadcast, so the bound
     * caps DRIVER memory (and broadcast size) at `budget` (default
     * [[fastPathMb]]) of packed query doubles — 2× the 32 MB tile
-    * measured fastest at 1024-d (ScaleRound15Ops), 8192 queries at
+    * measured fastest at 1024-d (ScaleBench grid-1024d), 8192 queries at
     * the reference dim. An
     * explicitly smaller caller tile always wins (specs force
     * multi-tile with tile=4).
@@ -721,7 +721,7 @@ object Ann {
     * tile row at ~32 MB and a block row at ~16 MB regardless of what
     * the caller (or the env default) asks for. At the reference's
     * 1024-d this engages as (tileEff=4096, blockRowsEff=2048) —
-    * measured by ScaleRound15Ops (scan count stays ≡1, wall-clock
+    * measured by ScaleBench grid-1024d (scan count stays ≡1, wall-clock
     * linear in total scores; see SURVEY §6).
     */
   private[graft] def kernelPackingCaps(dim: Int, tile: Int,
@@ -811,7 +811,7 @@ object Ann {
     // volume is corpus×nTiles + queries×nSlots, so more slots buy
     // kernel parallelism with query-side (small side) replication.
     // Default: one slot per core. Overridable for the nSlots
-    // sensitivity probe (ScaleRound15Ops) and for clusters where the
+    // sensitivity probe (ScaleBench grid-1024d) and for clusters where the
     // query batch is so wide that queries×nSlots dominates (the §7
     // p^1/2-grid note).
     val nSlots = nSlotsOverride

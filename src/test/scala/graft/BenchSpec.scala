@@ -25,6 +25,18 @@ class BenchSpec extends SparkSpec {
     assert(pick("4", "/data/sf1").isLeft)
   }
 
+  test("a query that throws is reported as failed, never timed") {
+    var after = 0
+    val failed = Harness.timeRuns(3, after += 1) {
+      SparkEntry.queries(SparkEntry.headline.head)(spark, "/nonexistent/sf").count()
+    }
+    assert(failed.isLeft && failed.left.exists(_.contains("/nonexistent/sf")))
+    assert(after == 1, "the first failing run stops the timing, after its eviction")
+    val timed = Harness.timeRuns(3, after += 1)(spark.range(10).count())
+    assert(timed.map(_.size) == Right(3) && after == 4)
+    assert(timed.exists(ts => ts == ts.sorted && ts.forall(_ >= 0)))
+  }
+
   test("the per-run evictor drops prepared tenant scans with the checkpoint blocks") {
     val pts = VectorStore.points(spark, sfDir)
     val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet

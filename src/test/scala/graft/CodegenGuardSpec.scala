@@ -1,29 +1,17 @@
 package graft
 
-/** Executes EVERY SparkEntry query with codegen fallback disabled:
-  * any expression whose generated code fails to compile (the silent
-  * interpreted-fallback failure mode the round-2 verdict caught on
-  * Md5Long60) becomes a hard test failure instead of a 2–5× runtime
-  * tax nobody notices.
+/** Executes EVERY SparkEntry query with codegen fallback disabled
+  * ([[SurfaceSweep]]): any expression whose generated code fails to
+  * compile (the silent interpreted-fallback failure mode the round-2
+  * verdict caught on Md5Long60) becomes a hard test failure instead of
+  * a 2–5× runtime tax nobody notices.
   */
 class CodegenGuardSpec extends SparkSpec {
 
   test("no query falls back to interpreted execution") {
-    val conf = spark.conf
-    val prevFM = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    val prevFB = conf.get("spark.sql.codegen.fallback", "true")
-    conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          try { fn(spark, sfDir).collect(); None }
-          catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-      }
-      assert(failures.isEmpty, failures.mkString("\n"))
-    } finally {
-      conf.set("spark.sql.codegen.factoryMode", prevFM)
-      conf.set("spark.sql.codegen.fallback", prevFB)
+    val failures = SurfaceSweep.outcomes.collect {
+      case (name, o) if o.error.isDefined => s"$name: ${o.error.get}"
     }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

@@ -81,9 +81,7 @@ class RobustnessSurfaceSpec extends SparkSpec {
     "text_llr", "text_rake", "text_selfbleu",
     "samp_poisson_bootstrap", "priv_dp_counts", "samp_strat_alloc",
     "priv_k_anonymity", "priv_l_diversity", "samp_horvitz_thompson",
-    "text_heaps_fit", "stat_chi2_indep",
-    "graph_cc_modularity", "pipe_contract_docs", "priv_t_nominal",
-    "text_hapax", "samp_chao1", "graph_jaccard_nbrs",
+    "text_heaps_fit", "stat_chi2_indep", "graph_jaccard_nbrs",
     "emb_norm_invariant",
     "mm_binary_meta", "mm_frame_sample", "mm_resize_box", "mm_audio_windows",
     "mm_patch_grid", "mm_shot_bounds",

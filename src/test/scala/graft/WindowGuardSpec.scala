@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -168,8 +167,73 @@ class WindowGuardSpec extends SparkSpec {
     // rollup (stat_fdr's bound)
     "stat_holm")
 
+  /** Partitioned windows allowed over corpus-sized input — each with
+    * the domain-growth argument.
+    */
+  private val allowedPartitioned = Set(
+    // keep-first dedup gate partitioned by md5(text): the key IS a
+    // content hash, domain = |distinct documents| — scales 1:1 with
+    // the corpus, partitions are dup-cluster-sized
+    "pipe_filter_attrition",
+    // r18: same md5(text) keep-first window (the pipe_filter_attrition
+    // shape) replaced the exact-dedup aggregate + join-back — same
+    // domain-growth argument, same dup-cluster-bounded partitions
+    "pipe_e2e_prep",
+    // OHLC bars partitioned by (event_type, 1h bucket): the bucket
+    // domain grows with the data's time span, so reducers multiply as
+    // history accumulates; per-partition size is one hour of one type
+    "ts_ohlc")
+
+  test("no partitioned window keys a bounded domain over corpus-sized input") {
+    // queries that fail to PLAN are counted separately: swallowing them
+    // as "no offender" would let the guard pass vacuously if query
+    // construction started failing broadly (e.g. missing test data)
+    val buildFailures = SurfaceSweep.outcomes.collect { case (name, o) if !o.planned => name }
+    val offenders = SurfaceSweep.outcomes.collect {
+      case (name, o) if o.hotWindows.nonEmpty => s"$name[${o.hotWindows.mkString(";")}]"
+    }
+    // a handful of queries legitimately cannot plan in this harness
+    // context (e.g. ones needing pre-materialized partitioned state);
+    // more than 5% failing to plan means the guard is blind, not busy
+    assert(buildFailures.size <= SparkEntry.queries.size / 20,
+      s"hot-partition guard could not plan ${buildFailures.size}/" +
+        s"${SparkEntry.queries.size} queries — the guard is running " +
+        s"vacuously; first failures: ${buildFailures.take(10).mkString(", ")}")
+    val unexpected = offenders.filterNot(o =>
+      allowedPartitioned(o.takeWhile(_ != '[')))
+    assert(unexpected.isEmpty,
+      s"partitioned windows whose key domain does not scale with the " +
+        s"corpus while their input does (the text_ndcg-r12 shape) — " +
+        s"rewrite on the TopK aggregate, collapse the input first, or " +
+        s"allowlist with a domain-growth argument: $unexpected")
+  }
+
+  test("only the documented bounded queries carry a global window") {
+    // a query that failed to plan has no window to report (the plan
+    // failures are counted by the hot-partition test)
+    val offenders = SurfaceSweep.outcomes.collect { case (name, o) if o.globalWindow => name }
+    val unexpected = offenders.filterNot(allowed)
+    assert(unexpected.isEmpty,
+      s"NEW global (unpartitioned) windows — bound them or extend the " +
+        s"allowlist with a boundedness argument: $unexpected")
+    val stale = allowed -- offenders.toSet
+    assert(stale.isEmpty,
+      s"allowlist entries whose plans no longer have a global window " +
+        s"(clean them up): $stale")
+  }
+}
+
+/** The plan predicates of the window guards. [[SurfaceSweep]]
+  * evaluates them on every query's plan before it executes.
+  */
+object WindowGuardSpec {
+
+  /** Every node of `p`, an adaptive plan read as its initial plan: the
+    * plan as built, before execution hides operators inside query
+    * stages.
+    */
   private def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+    case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
     case other => other +: other.children.flatMap(walk)
   }
 
@@ -205,23 +269,6 @@ class WindowGuardSpec extends SparkSpec {
   private def scalesWithData(ref: String): Boolean =
     scalingKeys.exists(k => ref.startsWith(k)) || ref.endsWith("_blk")
 
-  /** Partitioned windows allowed over corpus-sized input — each with
-    * the domain-growth argument.
-    */
-  private val allowedPartitioned = Set(
-    // keep-first dedup gate partitioned by md5(text): the key IS a
-    // content hash, domain = |distinct documents| — scales 1:1 with
-    // the corpus, partitions are dup-cluster-sized
-    "pipe_filter_attrition",
-    // r18: same md5(text) keep-first window (the pipe_filter_attrition
-    // shape) replaced the exact-dedup aggregate + join-back — same
-    // domain-growth argument, same dup-cluster-bounded partitions
-    "pipe_e2e_prep",
-    // OHLC bars partitioned by (event_type, 1h bucket): the bucket
-    // domain grows with the data's time span, so reducers multiply as
-    // history accumulates; per-partition size is one hour of one type
-    "ts_ohlc")
-
   private def isCollapse(p: SparkPlan): Boolean = {
     val n = p.getClass.getSimpleName
     n.contains("Aggregate") || n.contains("Limit") ||
@@ -235,7 +282,7 @@ class WindowGuardSpec extends SparkSpec {
     * checkpointed frame in the inventory is an aggregated rollup.
     */
   private def corpusSized(p: SparkPlan): Boolean = p match {
-    case a: AdaptiveSparkPlanExec => corpusSized(a.executedPlan)
+    case a: AdaptiveSparkPlanExec => corpusSized(a.initialPlan)
     case _ if isCollapse(p) => false
     case _ if p.getClass.getSimpleName.startsWith("Broadcast") &&
               p.getClass.getSimpleName.contains("Exchange") => false
@@ -247,8 +294,9 @@ class WindowGuardSpec extends SparkSpec {
     case other => other.children.exists(corpusSized)
   }
 
-  private def hotPartitionedWindows(df: DataFrame): Seq[String] =
-    walk(df.queryExecution.executedPlan).collect {
+  /** The partition keys of each hot-partitioned window in `plan`. */
+  def hotPartitionedWindows(plan: SparkPlan): Seq[String] =
+    walk(plan).collect {
       case w: WindowExec if w.partitionSpec.nonEmpty =>
         val refs = w.partitionSpec.flatMap(_.references.toSeq.map(_.name))
           .map(_.replaceAll("#\\d+$", ""))
@@ -256,53 +304,10 @@ class WindowGuardSpec extends SparkSpec {
         else Some(refs.distinct.mkString("|"))
     }.flatten
 
-  test("no partitioned window keys a bounded domain over corpus-sized input") {
-    // track queries that fail to PLAN separately: swallowing them as
-    // "no offender" would let the guard pass vacuously if query
-    // construction started failing broadly (e.g. missing test data)
-    val buildFailures = scala.collection.mutable.ListBuffer[String]()
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val hot =
-        try hotPartitionedWindows(SparkEntry.queries(name)(spark, sfDir))
-        catch { case scala.util.control.NonFatal(_) => buildFailures += name; Nil }
-      if (hot.nonEmpty) Some(s"$name[${hot.mkString(";")}]") else None
-    }
-    // a handful of queries legitimately cannot plan in this harness
-    // context (e.g. ones needing pre-materialized partitioned state);
-    // more than 5% failing to plan means the guard is blind, not busy
-    assert(buildFailures.size <= SparkEntry.queries.size / 20,
-      s"hot-partition guard could not plan ${buildFailures.size}/" +
-        s"${SparkEntry.queries.size} queries — the guard is running " +
-        s"vacuously; first failures: ${buildFailures.take(10).mkString(", ")}")
-    val unexpected = offenders.filterNot(o =>
-      allowedPartitioned(o.takeWhile(_ != '[')))
-    assert(unexpected.isEmpty,
-      s"partitioned windows whose key domain does not scale with the " +
-        s"corpus while their input does (the text_ndcg-r12 shape) — " +
-        s"rewrite on the TopK aggregate, collapse the input first, or " +
-        s"allowlist with a domain-growth argument: $unexpected")
-  }
-
-  private def hasGlobalWindow(df: DataFrame): Boolean =
-    walk(df.queryExecution.executedPlan).exists {
+  /** Does `plan` carry a global (unpartitioned) window? */
+  def hasGlobalWindow(plan: SparkPlan): Boolean =
+    walk(plan).exists {
       case w: WindowExec => w.partitionSpec.isEmpty
       case _ => false
     }
-
-  test("only the documented bounded queries carry a global window") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val global =
-        try hasGlobalWindow(SparkEntry.queries(name)(spark, sfDir))
-        catch { case _: Throwable => false } // non-planning failures covered elsewhere
-      if (global) Some(name) else None
-    }
-    val unexpected = offenders.filterNot(allowed)
-    assert(unexpected.isEmpty,
-      s"NEW global (unpartitioned) windows — bound them or extend the " +
-        s"allowlist with a boundedness argument: $unexpected")
-    val stale = allowed -- offenders.toSet
-    assert(stale.isEmpty,
-      s"allowlist entries whose plans no longer have a global window " +
-        s"(clean them up): $stale")
-  }
 }
