@@ -20,11 +20,12 @@ import org.apache.spark.sql.SparkSession
   *   measurement time on exactly the shared set rather than eyeballed
   *   across files.
   *
-  * One-time materializations (the user-partitioned collection, the
-  * shared dedup label table) are built by whichever run first touches
-  * them; their build cost is visible as that query's max spread while
-  * the median measures the serving path — the same split a production
-  * pipeline has between index build and index use.
+  * The cross-query state (`QDsl.fixtures`) is built before the clock
+  * starts, as a production index is, and the per-run evictor spares
+  * it. ann_nn_descent, graph_node2vec and mm_image_phash (timed with
+  * SPARK_GRAFT_BENCH_ALL=1) are driver-resident: their plans reduce to
+  * a LocalTableScan, so their times measure a local fold, and a
+  * cross-round change in them is not an engine win.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -82,25 +83,12 @@ object Bench {
       try SparkEntry.queries(name)(spark, warmDir).count()
       catch { case _: Throwable => }
     }
-    // materialize the user-partitioned collection before the clock
-    // starts — a production collection exists before it is queried;
-    // the timed vs_* queries measure partition-pruned reads, not the
-    // one-time write
-    try graft.store.VectorStore.pointsPartitioned(spark, sfDir).count()
-    catch { case _: Throwable => }
-    // same for the ANN indexes: the bucket/cell-partitioned tables are
-    // write-time state; the timed queries measure pruned probes
-    try {
-      graft.ann.AnnIndex.lshPartitioned(spark, sfDir, 6, 64).count()
-      graft.ann.AnnIndex.ivfPartitioned(spark, sfDir, 4).count()
-    } catch { case _: Throwable => }
-    // ...and the cross-query shared frames (transition cells, dedup
-    // label table) — built once per (JVM, dir), used by many queries
-    try SparkEntry.prewarmShared(spark, sfDir)
-    catch { case _: Throwable => }
-    def evict(keep: Set[Int]): Unit = Bench.evict(spark, keep)
-    evict(Set.empty) // clear the warmup pass's per-query blocks
-    val fixtureIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the timed queries measure reads of the fixtures, not their builds
+    QDsl.fixtures.foreach { f =>
+      try f(spark, sfDir).count()
+      catch { case _: Throwable => }
+    }
+    evict(spark) // clear the warmup pass's per-query blocks
     // r18: record each query's wall-clock start (epoch seconds) so
     // the bimodal host's degraded-phase windows are identifiable
     // post-hoc in the committed artifacts (r17's 4 phantom 8–30×
@@ -114,7 +102,7 @@ object Bench {
       // of the same query would otherwise leave their localCheckpoint
       // blocks behind and inflate runs 2..n — the within-query version
       // of the cross-query drift this evictor exists to stop
-      name -> Harness.timeRuns(runs, evict(fixtureIds)) {
+      name -> Harness.timeRuns(runs, evict(spark)) {
         SparkEntry.queries(name)(spark, sfDir).count()
       }
     }
@@ -173,22 +161,14 @@ object Bench {
     * query's lazy localCheckpoint blocks stay in the block manager
     * after its timing, so inventory GROWTH inflated later queries'
     * times within a bench session (cross-round drift tracked inventory
-    * size). Unpersists everything persisted except `keep` (the
-    * fixtures) and the shared frames, whose truncated lineage cannot
-    * recompute (unpersisting them would turn later queries' reads into
-    * errors, not slowdowns). The store's prepared tenant scans are
-    * dropped too, so no timed run reads a scan planned by an earlier
-    * one.
+    * size). Unpersists every persisted RDD that [[Shared]] does not
+    * hold. The store's prepared tenant scans are dropped too, so no
+    * timed run reads a scan planned by an earlier one.
     */
-  private[graft] def evict(spark: SparkSession, keep: Set[Int]): Unit = {
-    def ids(dfs: Iterable[org.apache.spark.sql.DataFrame]): Set[Int] =
-      dfs.flatMap(_.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }).toSet
-    val prot = ids(SparkEntry.sharedCellFrames) ++ ids(graft.dedup.Dedup.sharedLabelFrames)
+  private[graft] def evict(spark: SparkSession): Unit = {
+    val held = Shared.held(spark.sparkContext)
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep.contains(id) && !prot.contains(id))
-        rdd.unpersist(blocking = false)
+      if (!held(id)) rdd.unpersist(blocking = false)
     }
     graft.store.TenantScans.clear()
   }

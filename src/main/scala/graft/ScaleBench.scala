@@ -44,7 +44,7 @@ object ScaleBench {
     "kernel-tiles" -> Scenario("[nQueries] [nCorpus] [dim] [tile]", kernelTiles),
     "grid-scans" -> Scenario("[nQueries] [nCorpus] [dim] [tile]", gridScans),
     "grid-1024d" -> Scenario("[nCorpus] [dim] [nqBase] [slots,...]", grid1024d),
-    "grid-parts" -> Scenario("", gridParts))
+    "grid-parts" -> Scenario("[nQueries] [nCorpus] [dim]", gridParts))
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty || !scenarios.contains(args(0))) {
@@ -57,9 +57,12 @@ object ScaleBench {
     finally spark.stop()
   }
 
-  /** Runs `scenario` with `args` on `spark`: its JSON line. */
+  /** Runs `scenario` with `args` on `spark`: its JSON line. The
+    * scenario's staged inputs are deleted after it.
+    */
   def line(spark: SparkSession, scenario: String, args: Seq[String]): String =
-    json(ListMap(("scenario" -> scenario) +: scenarios(scenario).run(spark, new Args(args)): _*))
+    try json(ListMap(("scenario" -> scenario) +: scenarios(scenario).run(spark, new Args(args)): _*))
+    finally ScaleScenarios.dropStaged()
 
   private def json(v: Any): String = v match {
     case None => "null"
@@ -84,12 +87,11 @@ object ScaleBench {
     val names = Harness.named(a.str(0))
     val dirs = a.str(1, "/root/testdata/sf0.1").split(',').toSeq
     val reps = a.int(2, 3)
-    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // query by query, so that the JVM's warm-up over the session
     // weighs on every dir of a query alike
     val outcomes = names.map { n =>
       n -> dirs.map { dir =>
-        def time(runs: Int) = Harness.timeRuns(runs, Bench.evict(spark, keep)) {
+        def time(runs: Int) = Harness.timeRuns(runs, Bench.evict(spark)) {
           SparkEntry.queries(n)(spark, dir).count()
         }
         time(1).flatMap(_ => time(reps))

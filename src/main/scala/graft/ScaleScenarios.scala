@@ -15,14 +15,24 @@ import graft.ann.Ann
   */
 private[graft] object ScaleScenarios {
 
+  /** The parent of every dir [[staged]] writes in this JVM. */
+  private val staging = java.nio.file.Paths.get(
+    System.getProperty("java.io.tmpdir"), s"graft-stage-${ProcessHandle.current.pid}")
+
   /** `df` written to a fresh temp parquet dir and read back, so the
     * timed operator pays a real scan, not the generation.
     */
   private def staged(df: DataFrame, tag: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString + "/data"
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Files.createDirectories(staging), s"graft-$tag").toString + "/data"
     df.write.mode("overwrite").parquet(dir)
     df.sparkSession.read.parquet(dir)
   }
+
+  /** Deletes every dir [[staged]] wrote; [[ScaleBench]] runs it after
+    * each scenario.
+    */
+  def dropStaged(): Unit = org.apache.commons.io.FileUtils.deleteQuietly(staging.toFile)
 
   /** `rows` float vectors (vec_id, embedding) of `dim` hash-derived
     * coordinates in [-1, 1].
@@ -552,8 +562,9 @@ private[graft] object ScaleScenarios {
       "runs" -> (sameBatch ++ straddle ++ slots))
   }
 
-  /** The grid's constant factor at 1024-d, each piece timed alone
-    * (4096 queries, a 20000-row corpus): 16 packed 32 MB primitive rows
+  /** The grid's constant factor, each piece timed alone (by default
+    * 4096 queries against a 20000-row corpus at 1024-d): 16 packed
+    * primitive rows of nQueries × dim doubles (32 MB at the defaults)
     * and the same bytes as nested (id, vector) arrays, each built alone
     * and through a repartition shuffle (serde cost); query-side
     * generation and decode; corpus generation; and the exact cosine
@@ -561,7 +572,8 @@ private[graft] object ScaleScenarios {
     */
   def gridParts(spark: SparkSession, a: Args): Fields = {
     import spark.implicits._
-    val dim = 1024; val nq = 4096; val nRep = 16
+    val nq = a.int(0, 4096); val nCorpus = a.long(1, 20000L); val dim = a.int(2, 1024)
+    val nRep = 16
     def timed(label: String)(f: => Any) = s"${label}_sec" -> seconds(f)._2
     def packedRows(n: Int) = spark.range(n).map { i =>
       (i, new Array[Long](nq), new Array[Int](nq),
@@ -572,7 +584,7 @@ private[graft] object ScaleScenarios {
         Array.tabulate(dim)(d => ((q + d + i) % 101 - 50) / 50.0))))
     }
     val vecs = arithVecs(spark, nq, dim, 1L << 32)
-    val corpus = scannedCorpus(spark, 20000L, dim, spark.sparkContext.longAccumulator)
+    val corpus = scannedCorpus(spark, nCorpus, dim, spark.sparkContext.longAccumulator)
     val bq = spark.sparkContext.broadcast(Array.tabulate(nq)(q =>
       Array.tabulate(dim)(d => ((q * 31 + d * 17) % 101 - 50) / 50.0)))
     val fields = Seq(
@@ -598,6 +610,6 @@ private[graft] object ScaleScenarios {
         Iterator.single(acc)
       }.reduce(_ + _)))
     bq.destroy()
-    Seq("dim" -> dim, "n_queries" -> nq, "corpus" -> 20000L) ++ fields
+    Seq("dim" -> dim, "n_queries" -> nq, "corpus" -> nCorpus) ++ fields
   }
 }

@@ -24,9 +24,6 @@ object SparkEntry {
     * split; forwarded for external callers/specs. */
   val BasketCap: Int = QDsl.BasketCap
   private[graft] def lfCol(x: Column): Column = QDsl.lfCol(x)
-  private[graft] def sharedCellFrames: Iterable[DataFrame] = QDsl.sharedCellFrames
-  private[graft] def prewarmShared(s: SparkSession, d: String): Unit =
-    QDsl.prewarmShared(s, d)
 
   // one Seq per family file under graft/queries/ — the map is
   // assembled here so the driver contract (queries/oracleSql) stays

@@ -15,27 +15,17 @@ import graft.functions.VectorFunctions.score
   * its probed partitions, and at 100 TB the unprobed partitions are
   * never opened.
   *
-  * Index builds are memoized per (JVM, dir, params) the same way the
-  * user-partitioned collection is (store/VectorStore.scala): the
-  * one-time write happens on first use; every query measures the
-  * pruned read.
+  * Each index is a [[graft.Shared]] dir per (SparkContext, dir,
+  * params), as the user-partitioned collection is
+  * (store/VectorStore.scala): the one-time write happens on first use;
+  * every query measures the pruned read.
   */
 object AnnIndex {
-
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def materialize(key: String)(write: String => Unit): String =
-    built.getOrElseUpdate(key, {
-      val out = java.nio.file.Files.createTempDirectory("graft_ann_").toString
-      write(out)
-      out
-    })
 
   /** Embeddings with their LSH bucket as the partition column. */
   def lshPartitioned(s: SparkSession, dir: String,
                      nPlanes: Int, dim: Int): DataFrame = {
-    val path = materialize(s"lsh|$dir|$nPlanes|$dim") { out =>
+    val path = graft.Shared.dir(s, s"lsh|$dir|$nPlanes|$dim") { out =>
       Ann.withBucket(Tables.embeddings(s, dir), nPlanes, dim)
         .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(out)
     }
@@ -80,7 +70,7 @@ object AnnIndex {
     * nCents, the [[Ann.ivfProbe]] quantizer) as the partition column.
     */
   def ivfPartitioned(s: SparkSession, dir: String, nCents: Int): DataFrame = {
-    val path = materialize(s"ivf|$dir|$nCents") { out =>
+    val path = graft.Shared.dir(s, s"ivf|$dir|$nCents") { out =>
       val emb = Tables.embeddings(s, dir)
       val centsRow = emb.filter(col("vec_id") < nCents)
         .agg(sort_array(collect_list(

@@ -490,11 +490,6 @@ object Dedup {
       .join(prefixGrams.toDF("db", "g"), "g")
       .filter(col("da") < col("db"))
       .select("da", "db")
-    if (sys.env.contains("GRAFT_LEV_DEBUG")) {
-      val t0 = System.nanoTime()
-      println(s"[lev] c1 candidates: ${c1.count()} " +
-        f"(${(System.nanoTime() - t0) / 1e9}%.2f s)")
-    }
     // strings with fewer than q·t+1 grams: overlap bound is vacuous —
     // pair them with every doc (the class is bounded: length < q·t+q)
     val shortIds = p.filter(length(col("p")) <= q * maxDist + q - 1)
@@ -588,45 +583,11 @@ object Dedup {
       // two contractions per driver round-trip: the emptiness count is
       // the only action, and it materializes both checkpoints at once
       contract(); contract()
-      val t0 = System.nanoTime()
       done = edges.count() == 0
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $iter ${(System.nanoTime() - t0) / 1e9}%.3f s done=$done")
       iter += 1
     }
     labels.orderBy("doc_id")
   }
-
-  /** One duplicate-cluster label table per (SparkContext, cache key):
-    * built once, materialized eagerly (localCheckpoint), then shared
-    * by every operator that composes on cluster assignments —
-    * dedup_clusters reads it directly, dedup_keep_best derives the
-    * keep/drop decision from it. A real pipeline computes labels ONCE;
-    * re-running the minhash→LSH→CC pipeline per downstream consumer
-    * multiplies the dominant cost (~90% of keep-best was redundant
-    * recompute before this table existed).
-    *
-    * The signature basis is the map-side MinHash
-    * ([[minhashSignaturesMapSide]], bit-equal to the explode→groupBy
-    * form per DedupSpec), so the label build spends no shuffle on
-    * signatures — the banded-LSH candidate join is the only exchange.
-    */
-  private val labelCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), DataFrame]
-
-  /** The live shared label frames (bench evictor protection — their
-    * checkpoint blocks must never be unpersisted: truncated lineage
-    * cannot recompute).
-    */
-  def sharedLabelFrames: Iterable[DataFrame] = labelCache.values
-
-  def clusterLabelsShared(docs: DataFrame, cacheKey: String,
-                          n: Int, k: Int, rows: Int): DataFrame =
-    labelCache.getOrElseUpdate(
-      (docs.sparkSession.sparkContext, s"$cacheKey#$n#$k#$rows"),
-      connectedComponents(docs,
-        minhashLshPairs(minhashSignaturesMapSide(docs, n, k), k, rows))
-        .localCheckpoint())
 
   /** Canonical-document selection policy: within each duplicate
     * cluster keep the highest-quality member (ties → lowest doc_id).

@@ -508,7 +508,7 @@ private[graft] object QDedup {
       // built ONCE per (context, dir) — map-side minhash basis, no
       // signature shuffle — and shared with dedup_keep_best below.
       "dedup_clusters" -> Q(
-        (s, d) => Dedup.clusterLabelsShared(docsUnder(s, d, 200), d, 5, 8, 2)
+        (s, d) => clusterLabels(s, d)
           .orderBy("doc_id"),
         Some(s"""WITH RECURSIVE sig AS (
                 |${Dedup.minhashSigSql(5, 8, "doc_id < 200")}),
@@ -532,7 +532,7 @@ private[graft] object QDedup {
       // pipeline derives its keep/drop decision from one CC pass
       "dedup_keep_best" -> Q(
         (s, d) => Dedup.keepBest(
-          Dedup.clusterLabelsShared(docsUnder(s, d, 200), d, 5, 8, 2),
+          clusterLabels(s, d),
           graft.text.TextAnalytics.qualityScores(docsUnder(s, d, 200))),
         Some {
           val stopList = graft.text.TextAnalytics.Stopwords.map(w => s"'$w'").mkString(",")
@@ -578,7 +578,7 @@ private[graft] object QDedup {
       // aggregates ON TOP of the shared CC label table, so the audit
       // is ~free once dedup_clusters has run
       "dedup_cluster_sizes" -> Q(
-        (s, d) => Dedup.clusterLabelsShared(docsUnder(s, d, 200), d, 5, 8, 2)
+        (s, d) => clusterLabels(s, d)
           .groupBy("cluster").agg(count(lit(1)).as("sz"))
           .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
           .orderBy("sz"),
@@ -691,7 +691,7 @@ private[graft] object QDedup {
       // dedup_cluster_sizes is the audit that would flag it)
       "samp_cluster_split" -> Q(
         (s, d) => {
-          val labels = Dedup.clusterLabelsShared(docsUnder(s, d, 200), d, 5, 8, 2)
+          val labels = clusterLabels(s, d)
           val split = graft.ops.Sampling.hashSplit(labels, "cluster", 80, 10)
           val pairs = Dedup.minhashLshPairs(
             Dedup.minhashSignaturesMapSide(docsUnder(s, d, 200), 5, 8), 8, 2)
@@ -1104,8 +1104,7 @@ private[graft] object QDedup {
     // bounded by clusters × sources², never documents².
     "dedup_cross_source" -> Q(
       (s, d) => {
-        import graft.dedup.Dedup
-        val labels = Dedup.clusterLabelsShared(docsUnder(s, d, 200), d, 5, 8, 2)
+        val labels = clusterLabels(s, d)
         val multi = labels.groupBy("cluster").agg(count(lit(1)).as("csz"))
           .filter(col("csz") >= 2)
         val cs = labels.join(multi, "cluster")

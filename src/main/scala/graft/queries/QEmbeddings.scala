@@ -185,8 +185,9 @@ private[graft] object QEmbeddings {
         // cross product into a row_number window — the same
         // (score desc, id asc) selection AND the same rnk values
         // (kernel row-equality to the BNLJ form is spec-asserted;
-        // the generator never emits null embeddings, so the kernel's
-        // null-drop ≡ the window's nulls-last here). Labels re-attach
+        // GenTestDataSpec pins that the generator emits no null
+        // embedding, so the kernel's null-drop ≡ the window's nulls-last
+        // here). Labels re-attach
         // by broadcast onto the 1500-row edge list.
         val emb = Tables.embeddings(s, d)
         val lbl = emb.select(col("vec_id"), col("label"))

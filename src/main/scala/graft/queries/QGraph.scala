@@ -370,7 +370,7 @@ private[graft] object QGraph {
         val pairs = Dedup.minhashLshPairs(
           Dedup.minhashSignaturesMapSide(docsUnder(s, d, 200), 5, 8), 8, 2)
           .localCheckpoint(eager = false) // m + degrees
-        val labels = Dedup.clusterLabelsShared(docsUnder(s, d, 200), d, 5, 8, 2)
+        val labels = clusterLabels(s, d)
         val deg = pairs.select(col("da").as("doc_id"))
           .union(pairs.select(col("db").as("doc_id")))
           .groupBy("doc_id").agg(count(lit(1)).as("deg"))

@@ -1032,8 +1032,7 @@ private[graft] object QSampling {
     // ~free) — the headline number a dedup stage reports upward.
     "pipe_dedup_savings" -> Q(
       (s, d) => {
-        import graft.dedup.Dedup
-        val labels = Dedup.clusterLabelsShared(docsUnder(s, d, 200), d, 5, 8, 2)
+        val labels = clusterLabels(s, d)
         val toks = docsUnder(s, d, 200).select(col("doc_id"),
           size(graft.text.TextPrimitives.tokens(col("text"))).cast("long")
             .as("nt"))
@@ -1235,10 +1234,9 @@ private[graft] object QSampling {
     // map-side.
     "pipe_quality_ablation" -> Q(
       (s, d) => {
-        import graft.dedup.Dedup
         val docs = docsUnder(s, d, 200)
         val q = graft.text.TextAnalytics.qualityScores(docs)
-        val labels = Dedup.clusterLabelsShared(docs, d, 5, 8, 2)
+        val labels = clusterLabels(s, d)
         val cuts = q.agg(
           round(expr("percentile(quality, 0.3333333333333333D)"), 6).as("c1"),
           round(expr("percentile(quality, 0.6666666666666666D)"), 6).as("c2"))
@@ -1395,9 +1393,8 @@ private[graft] object QSampling {
     // shared cluster-label table; exact integer sums.
     "pipe_dedup_weights" -> Q(
       (s, d) => {
-        import graft.dedup.Dedup
         val docs = docsUnder(s, d, 200)
-        val labels = Dedup.clusterLabelsShared(docs, d, 5, 8, 2)
+        val labels = clusterLabels(s, d)
         val toks = docs.select(col("doc_id"),
           size(graft.text.TextPrimitives.tokens(col("text"))).cast("long")
             .as("nt"))

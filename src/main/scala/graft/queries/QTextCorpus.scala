@@ -652,7 +652,7 @@ private[graft] object QTextCorpus {
     "text_dedup_impact" -> Q(
       (s, d) => {
         val docs200 = docsUnder(s, d, 200)
-        val lbl = graft.dedup.Dedup.clusterLabelsShared(docs200, d, 5, 8, 2)
+        val lbl = clusterLabels(s, d)
         val t = docs200.select(col("doc_id"), col("source"),
           size(graft.text.TextPrimitives.tokens(col("text"))).cast("long")
             .as("n_tok"))

@@ -65,25 +65,21 @@ object VectorStore {
       col("embedding"))
 
   /** [[points]] served from a MATERIALIZED user-partitioned parquet
-    * collection: the derivation is written once per (JVM, dir) via
-    * [[CollectionStorage.write]] and subsequent reads are real
-    * partitioned-table scans — so every per-user vs_* operator
-    * exercises PartitionFilters in its measured plan, exactly as a
-    * production collection would. Row set is identical to [[points]]
-    * (the oracles are unchanged).
+    * collection: the derivation is written once per (SparkContext, dir)
+    * via [[CollectionStorage.write]] into a [[graft.Shared]] dir, and
+    * subsequent reads are real partitioned-table scans — so every
+    * per-user vs_* operator exercises PartitionFilters in its measured
+    * plan, exactly as a production collection would. Row set is
+    * identical to [[points]] (the oracles are unchanged).
     */
   def pointsPartitioned(s: SparkSession, dir: String): DataFrame = {
-    val path = materializedDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_coll_").toString
+    val path = graft.Shared.dir(s, s"collection|$dir") { out =>
       CollectionStorage.write(points(s, dir), out)
-      out
-    })
+    }
     CollectionStorage.load(s, path).select(
       col("user_id"), col("vector_id"), col("doc_id"),
       col("chunk_id"), col("title"), col("embedding"))
   }
-  private val materializedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Reference collection-name mapping (document_ingestor.py:55–70):
     * `user_<id>` with hyphens normalized to underscores. The engine

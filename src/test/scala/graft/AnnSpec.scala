@@ -129,7 +129,7 @@ class AnnSpec extends SparkSpec with JobStats {
 
   /** `df` written as ONE parquet file (one row group) and read back. */
   private def parquetCopy(df: DataFrame, files: Int = 1): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann").toString + "/t"
+    val dir = SparkSpec.tempDir("graft-ann").toString + "/t"
     df.repartition(files).write.parquet(dir)
     spark.read.parquet(dir)
   }
@@ -353,7 +353,7 @@ class AnnSpec extends SparkSpec with JobStats {
   }
 
   test("LSH bucket as partition column: probe scans are pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh").toString + "/idx"
+    val dir = SparkSpec.tempDir("graft-lsh").toString + "/idx"
     val sig = Ann.signatures(emb, Ann.planes(spark, 4, 64))
     emb.join(sig, "vec_id").write.partitionBy("bucket").mode("overwrite").parquet(dir)
     val idx = spark.read.parquet(dir)

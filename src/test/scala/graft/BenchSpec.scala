@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.store.{TenantScans, VectorStore}
 
 class BenchSpec extends SparkSpec {
 
   test("baseline block compares only with an artifact at the same cpus and sf") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench").toFile
+    val dir = SparkSpec.tempDir("graft-bench").toFile
     def artifact(name: String, cpus: Int, sf: Double): Unit =
       java.nio.file.Files.writeString(new java.io.File(dir, name).toPath,
         s"""{"n":1,"rc":0,"cpus":$cpus,"sf":$sf,"tail":"","parsed":null}""")
@@ -39,15 +40,22 @@ class BenchSpec extends SparkSpec {
 
   test("the per-run evictor drops prepared tenant scans with the checkpoint blocks") {
     val pts = VectorStore.points(spark, sfDir)
-    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val blocks = pts.filter(col("user_id") === 2).localCheckpoint()
-      .queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.get
+    val shared = Seq(QDsl.transitionCells(spark, sfDir), QDsl.dupEdges(spark, sfDir),
+      QDsl.clusterLabels(spark, sfDir))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def rddId(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.get
+    val before = shared.map(rows)
+    val blocks = rddId(pts.filter(col("user_id") === 2).localCheckpoint())
     VectorStore.scroll(pts, 3, 5)
     assert(TenantScans.size > 0 && spark.sparkContext.getPersistentRDDs.contains(blocks))
-    Bench.evict(spark, keep)
+    Bench.evict(spark)
     assert(TenantScans.size == 0)
     assert(!spark.sparkContext.getPersistentRDDs.contains(blocks))
+    // the shared frames' truncated lineage cannot recompute: they must
+    // survive the evictor and still read back the same rows
+    assert(shared.map(rddId).forall(spark.sparkContext.getPersistentRDDs.contains))
+    assert(shared.map(rows) == before)
   }
 }

@@ -8,7 +8,7 @@ import graft.store.DocumentStore
 class IngestSpec extends SparkSpec {
 
   private def writeFiles(prefix: String, files: (String, String)*): String = {
-    val dir = Files.createTempDirectory(prefix)
+    val dir = SparkSpec.tempDir(prefix)
     files.foreach { case (name, content) =>
       Files.write(dir.resolve(name), content.getBytes("UTF-8"))
     }
@@ -120,7 +120,7 @@ class IngestSpec extends SparkSpec {
     // imported points serve the regular op surface
     assert(graft.store.VectorStore.scroll(all, 7L, 10).count() == 2)
     // ...and persist into the canonical partitioned layout
-    val out = java.nio.file.Files.createTempDirectory("graft-qimp").toString + "/coll"
+    val out = SparkSpec.tempDir("graft-qimp").toString + "/coll"
     graft.store.CollectionStorage.write(all, out)
     assert(graft.store.CollectionStorage.listCollectionDirs(spark, out) ==
       Seq(7L, 9L))
@@ -133,7 +133,7 @@ class IngestSpec extends SparkSpec {
   test("qdrant export round-trips: write point dumps, re-import, frames equal") {
     val pts = graft.store.VectorStore.points(spark, sfDir)
       .filter(org.apache.spark.sql.functions.col("user_id") < 3)
-    val dir = Files.createTempDirectory("graft-qexp").toString
+    val dir = SparkSpec.tempDir("graft-qexp").toString
     val users = graft.sources.Export.writeQdrantPoints(pts, dir)
     assert(users == Seq("0", "1", "2"))
     assert(new java.io.File(s"$dir/user_1.jsonl").exists)

@@ -108,7 +108,7 @@ class JobCountSpec extends SparkSpec with JobStats {
   test("a repeat read on the same collection and tenant plans nothing") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-prepared").toString + "/coll"
+    val dir = SparkSpec.tempDir("graft-prepared").toString + "/coll"
     graft.store.CollectionStorage.write(pts, dir)
     val coll = graft.store.CollectionStorage.load(spark, dir)
     val q = Seq(Tuple1(localVec(42))).toDF("q")
@@ -154,7 +154,7 @@ class JobCountSpec extends SparkSpec with JobStats {
   }
 
   test("the dense kernel shuffles nothing on a corpus with at least as many splits as cores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-wide").toString + "/emb"
+    val dir = SparkSpec.tempDir("graft-wide").toString + "/emb"
     val cores = spark.sparkContext.defaultParallelism
     emb.repartition(2 * cores).write.parquet(dir)
     val wide = spark.read.parquet(dir)

@@ -8,7 +8,7 @@ package graft
 class ReadmeExampleSpec extends SparkSpec {
 
   test("README end-to-end example runs and behaves as documented") {
-    val path = java.nio.file.Files.createTempDirectory("graft-readme").toString
+    val path = SparkSpec.tempDir("graft-readme").toString
     val (hits, diversified, scrolled) = examples.ReadmeExample.run(spark, path)
 
     // search_query: top-2 cosine hits exist and are scored descending

@@ -61,7 +61,7 @@ class RelationalSpec extends SparkSpec {
     // pairs; plus 30 honest 2-item orders whose pair must survive
     val giant = for (o <- 1L to 20L; p <- 0L until 300L) yield (o, p)
     val honest = for (o <- 100L until 130L; p <- Seq(500L, 501L)) yield (o, p)
-    val dir = java.nio.file.Files.createTempDirectory("graft-basket").toString
+    val dir = SparkSpec.tempDir("graft-basket").toString
     (giant ++ honest).toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
     val rows = SparkEntry.queries("q_basket_pairs")(spark, dir).collect()

@@ -21,7 +21,7 @@ class RobustnessSurfaceSpec extends SparkSpec {
     StructField("n_chars", LongType)))
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-robust").toString
+    val dir = SparkSpec.tempDir("graft-robust").toString
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map { case (i, t) =>
         org.apache.spark.sql.Row(i, t, if (i % 2 == 0) "en" else "de", "crawl",
@@ -137,7 +137,7 @@ class RobustnessSurfaceSpec extends SparkSpec {
     StructField("label", IntegerType)))
 
   private def writeEmb(rows: Seq[(Long, Array[Float], Int)], extra: Seq[org.apache.spark.sql.Row] = Nil): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-robust-emb").toString
+    val dir = SparkSpec.tempDir("graft-robust-emb").toString
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map { case (i, v, l) =>
         org.apache.spark.sql.Row(i, v, l) } ++ extra, 2), embSchema)
@@ -194,7 +194,7 @@ class RobustnessSurfaceSpec extends SparkSpec {
     StructField("value", DoubleType), StructField("props", StringType)))
 
   private def writeEvents(rows: Seq[org.apache.spark.sql.Row]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-robust-ev").toString
+    val dir = SparkSpec.tempDir("graft-robust-ev").toString
     // ts written as plain INT64 epoch-nanos; Tables.events reads the
     // driver's TIMESTAMP(NANOS) as long too, so the loader sees the
     // same shape either way

@@ -441,21 +441,14 @@ class Round10dOpsSpec extends SparkSpec {
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-signtie").toString
+    val dir = SparkSpec.tempDir("graft-signtie").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
       .write.parquet(s"$dir/events.parquet")
-    try {
-      val r = SparkEntry.queries("stat_sign_test")(spark, dir).head
-      assert(r.getAs[Long]("n_up") == 1L, s"tie user counted: $r")
-      assert(r.getAs[Long]("n_down") == 1L, r.toString)
-      // n=2, kmin=1: p = 2·(C(2,0)+C(2,1))/4 = 1.5 clamped to 1
-      assert(r.getAs[Double]("p_exact") == 1.0, r.toString)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-        .toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    val r = SparkEntry.queries("stat_sign_test")(spark, dir).head
+    assert(r.getAs[Long]("n_up") == 1L, s"tie user counted: $r")
+    assert(r.getAs[Long]("n_down") == 1L, r.toString)
+    // n=2, kmin=1: p = 2·(C(2,0)+C(2,1))/4 = 1.5 clamped to 1
+    assert(r.getAs[Double]("p_exact") == 1.0, r.toString)
   }
 
   test("stickiness is avg-DAU over MAU and lives in (0, 1]") {

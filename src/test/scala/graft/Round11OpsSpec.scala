@@ -17,7 +17,7 @@ class Round11OpsSpec extends SparkSpec {
     // same rows, different physical layout → identical fingerprints
     val shuffled = Tables.documents(spark, sfDir)
       .orderBy(col("n_chars"), col("doc_id")).repartition(7)
-    val dir = java.nio.file.Files.createTempDirectory("graft-fp").toString
+    val dir = SparkSpec.tempDir("graft-fp").toString
     shuffled.write.parquet(s"$dir/documents.parquet")
     val again = SparkEntry.queries("pipe_dataset_hash")(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -26,7 +26,7 @@ class Round11OpsSpec extends SparkSpec {
     val mutated = Tables.documents(spark, sfDir)
       .withColumn("text", when(col("doc_id") === 1, lit("tampered"))
         .otherwise(col("text")))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-fp2").toString
+    val dir2 = SparkSpec.tempDir("graft-fp2").toString
     mutated.write.parquet(s"$dir2/documents.parquet")
     val tampered = SparkEntry.queries("pipe_dataset_hash")(spark, dir2).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -94,7 +94,7 @@ class Round11OpsSpec extends SparkSpec {
         r.mkString(","))
     }
     // a doc that repeats one sentence three times reports 2 dup units
-    val dir = java.nio.file.Files.createTempDirectory("graft-para").toString
+    val dir = SparkSpec.tempDir("graft-para").toString
     val s = spark
     import s.implicits._
     Seq((1L, "Same sentence here. Same sentence here. Same sentence here. Unique tail"))
@@ -197,7 +197,7 @@ class Round11OpsSpec extends SparkSpec {
     // planted violations are counted
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-contract").toString
+    val dir = SparkSpec.tempDir("graft-contract").toString
     Seq((1L, "ok text", "en", "srcA", 7L),
         (1L, "dup id", "en", "srcA", 6L),          // dup_ids
         (3L, null.asInstanceOf[String], "en", "srcA", 0L), // null text

@@ -39,7 +39,7 @@ class ScaleBenchSpec extends SparkSpec {
     ("grid-scans", Seq("32", "200", "8", "16"), Seq("corpus", "dim", "tile", "points")),
     ("grid-1024d", Seq("200", "16", "32", "2"),
       Seq("dim", "corpus", "tile_eff", "block_rows_eff", "cap", "runs")),
-    ("grid-parts", Nil,
+    ("grid-parts", Seq("64", "200", "16"),
       Seq("dim", "n_queries", "corpus", "packed_shuffle_sec", "nested_shuffle_sec",
         "kernel_sec")))
 

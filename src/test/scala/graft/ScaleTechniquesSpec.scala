@@ -165,7 +165,7 @@ class ScaleTechniquesSpec extends SparkSpec {
     // |A∪B| = 1500, J = 500/1500 = 1/3; k = 64 ⇒ σ(J) ≈ J/√64
     val a = (0 until 1000).map(i => s"w$i").mkString(" ")
     val b = (500 until 1500).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-kmv").toString
+    val dir = SparkSpec.tempDir("graft-kmv").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),

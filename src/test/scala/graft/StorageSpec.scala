@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.store.{CollectionStorage, DocumentStore, VectorStore}
 
 class StorageSpec extends SparkSpec {
 
   test("partitioned write + load: per-user reads are partition-pruned") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/coll"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/coll"
     val pts = VectorStore.points(spark, sfDir)
     CollectionStorage.write(pts, dir)
     val loaded = CollectionStorage.load(spark, dir)
@@ -23,7 +22,7 @@ class StorageSpec extends SparkSpec {
     // the reference's user_id is a string (document_ingestor.py:55–70,
     // uuid-style throughout dev.ipynb) — a string-keyed collection
     // must behave exactly like a long-keyed one
-    val dir = Files.createTempDirectory("graft-coll-uuid").toString + "/coll"
+    val dir = SparkSpec.tempDir("graft-coll-uuid").toString + "/coll"
     val uuids = Seq("3f1a9c2e-aaaa-4f00-9d77-000000000001",
                     "3f1a9c2e-bbbb-4f00-9d77-000000000002")
     val pts = VectorStore.points(spark, sfDir)
@@ -68,7 +67,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite touches only changed users") {
-    val dir = Files.createTempDirectory("graft-coll2").toString + "/coll"
+    val dir = SparkSpec.tempDir("graft-coll2").toString + "/coll"
     val pts = VectorStore.points(spark, sfDir)
     CollectionStorage.write(pts, dir)
     // delete doc 17 from user 1's collection, rewrite ONLY user 1
@@ -83,7 +82,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("ensureCollection: empty collection exists, lists, and loads") {
-    val dir = Files.createTempDirectory("graft-coll3").toString + "/coll"
+    val dir = SparkSpec.tempDir("graft-coll3").toString + "/coll"
     val pts = VectorStore.points(spark, sfDir).filter(col("user_id") < 2)
     CollectionStorage.write(pts, dir)
     // create an empty collection for a brand-new user
@@ -104,7 +103,7 @@ class StorageSpec extends SparkSpec {
 
   test("snapshot diff classifies added/removed/updated/unchanged points") {
     val s = spark
-    val base = java.nio.file.Files.createTempDirectory("graft-diff").toString + "/coll"
+    val base = SparkSpec.tempDir("graft-diff").toString + "/coll"
     val pts = graft.store.VectorStore.points(s, sfDir)
     graft.store.CollectionStorage.writeSnapshot(pts, base)
     // v1: drop user 3's points, retitle user 2's, keep the rest
@@ -125,7 +124,7 @@ class StorageSpec extends SparkSpec {
 
   test("snapshot versions: time travel, rollback read, retention") {
     val s = spark
-    val base = java.nio.file.Files.createTempDirectory("graft-snap").toString + "/coll"
+    val base = SparkSpec.tempDir("graft-snap").toString + "/coll"
     val pts = graft.store.VectorStore.points(s, sfDir)
     val v0 = graft.store.CollectionStorage.writeSnapshot(pts, base)
     val v1 = graft.store.CollectionStorage.writeSnapshot(

@@ -69,7 +69,7 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val base = SparkSpec.tempDir("graft-ingest").toString
     val (collPath, ckpt) = (base + "/coll", base + "/ckpt")
     val input = MemoryStream[Point]
     val query = StreamOps.startCollectionIngest(input.toDF(), collPath, ckpt)
@@ -101,7 +101,7 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-ingest-wide").toString
+    val base = SparkSpec.tempDir("graft-ingest-wide").toString
     val (collPath, ckpt) = (base + "/coll", base + "/ckpt")
     val input = MemoryStream[Point]
     val query = StreamOps.startCollectionIngest(input.toDF(), collPath, ckpt)
@@ -190,8 +190,7 @@ class StreamingSpec extends SparkSpec {
   test("append ingestion accretes small files; compaction merges them") {
     val s = spark
     import s.implicits._
-    val collPath = java.nio.file.Files
-      .createTempDirectory("graft-compact").toString + "/coll"
+    val collPath = SparkSpec.tempDir("graft-compact").toString + "/coll"
     // append-mode writes (insert-only ingestion) leave one file per
     // batch per user — the small-file problem compaction solves
     (1 to 4).foreach { i =>
@@ -429,7 +428,7 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val base = SparkSpec.tempDir("graft-restart").toString
     val (collPath, ckpt) = (base + "/coll", base + "/ckpt")
     val input = MemoryStream[Point]
     val q1 = StreamOps.startCollectionIngest(input.toDF(), collPath, ckpt)
@@ -521,7 +520,7 @@ class StreamingSpec extends SparkSpec {
       (u * 100 + i + (if (t == "click") 0L else 1000L),
        base + i * step, u, t)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-deb").toString
+    val dir = SparkSpec.tempDir("graft-deb").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -566,7 +565,7 @@ class StreamingSpec extends SparkSpec {
     val types = Seq("a", "a", "b", "c", "c", "c", "a", "b", "b", "a")
     val evRows = for (u <- 0L until 3L; i <- types.indices) yield
       (u * 100 + i, i * H + u * 1000L, u, types(i))
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2").toString
+    val dir = SparkSpec.tempDir("graft-scd2").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -616,7 +615,7 @@ class StreamingSpec extends SparkSpec {
       val spike = h == 2 && i == 11 && t == "click"
       (h * H + i * 1000L, i % 3, t, if (spike) 500.0 else 10.0 + i % 3)
     }).zipWithIndex.map { case ((ts, u, t, v), idx) => (idx.toLong, ts, u, t, v) }
-    val dir = java.nio.file.Files.createTempDirectory("graft-seas").toString
+    val dir = SparkSpec.tempDir("graft-seas").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -658,7 +657,7 @@ class StreamingSpec extends SparkSpec {
         else math.round(rng.nextDouble() * 10000) / 100.0
       (u * 100 + i, i * H + u, u, v)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ewma").toString
+    val dir = SparkSpec.tempDir("graft-ewma").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -704,7 +703,7 @@ class StreamingSpec extends SparkSpec {
       (u * 100 + i, i * H + u, u, t,
        math.round(rng.nextDouble() * 10000) / 100.0, rng.nextInt(100).toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+    val dir = SparkSpec.tempDir("graft-attr").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -810,7 +809,7 @@ class StreamingSpec extends SparkSpec {
     val evRows = for {
       (u, wks) <- activeWeeks.toSeq; wk <- wks; r <- 0 to 13
     } yield (u * 1000 + wk * 100 + r, wk * W + u * 1000L + r, u)
-    val dir = java.nio.file.Files.createTempDirectory("graft-growth").toString
+    val dir = SparkSpec.tempDir("graft-growth").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -864,7 +863,7 @@ class StreamingSpec extends SparkSpec {
       (et, cs) <- counts.toSeq; (c, d) <- cs.zipWithIndex; j <- 0 until c
     } yield (math.abs(et.hashCode).toLong * 10000 + d * 100 + j,
              d * D + j * 1000L, j.toLong, et)
-    val dir = java.nio.file.Files.createTempDirectory("graft-cusum").toString
+    val dir = SparkSpec.tempDir("graft-cusum").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -1440,7 +1439,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import StreamingSpec.{CtV1, CtV2}
     implicit val sqlCtx = s.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-plain").toString
+    val ckpt = SparkSpec.tempDir("graft-ckpt-plain").toString
     val input = MemoryStream[Long]
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val q1 = input.toDS().groupByKey(_ % 2)
@@ -1489,7 +1488,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.VersionedState
     import StreamingSpec.{CtCodecV1, CtCodecV2, CtV1, CtV2}
     implicit val sqlCtx = s.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-env").toString
+    val ckpt = SparkSpec.tempDir("graft-ckpt-env").toString
     val input = MemoryStream[Long]
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val q1 = input.toDS().groupByKey(_ % 2)

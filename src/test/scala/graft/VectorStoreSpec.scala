@@ -364,7 +364,7 @@ class VectorStoreSpec extends SparkSpec {
     // a tenant in at least as many splits as cores keeps one scan task
     // per split, each sending only its hits
     val cores = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("graft-retrieve").toString + "/c"
+    val dir = SparkSpec.tempDir("graft-retrieve").toString + "/c"
     twice.repartition(2 * cores).write.parquet(dir)
     val wideColl = spark.read.parquet(dir)
     val splits = wideColl.queryExecution.toRdd.getNumPartitions
@@ -389,7 +389,7 @@ class VectorStoreSpec extends SparkSpec {
       .select(meta :+ col("embedding"): _*).orderBy("vector_id")
 
   test("prepared reads see an upsert, a delete and a compaction of their files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fresh").toString + "/coll"
+    val dir = SparkSpec.tempDir("graft-fresh").toString + "/coll"
     CollectionStorage.write(pts, dir)
     val q = VectorStore.queryVecOf(spark, sfDir, 42)
     val ids = Seq(2L, 10L, 26L, 42L, 202L)
@@ -434,7 +434,7 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("a SQL conf switch plans the scan again; the LRU holds at most its capacity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-conf").toString + "/coll"
+    val dir = SparkSpec.tempDir("graft-conf").toString + "/coll"
     CollectionStorage.write(pts, dir)
     val c = CollectionStorage.load(spark, dir)
     val q = VectorStore.queryVecOf(spark, sfDir, 42)
